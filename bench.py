@@ -19,11 +19,9 @@ import os
 import re
 import time
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+from metadata_etl_framework_spark.session import get_spark
 
-from metadata_etl_framework_spark.session import get_spark  # noqa: E402
-
-import __spark_entry__ as entry_mod  # noqa: E402
+import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -268,10 +266,7 @@ HEADLINE = [
 # only the execution venue changes, so this is measurement, not a
 # second query set — the headline "queries" map is untouched.
 DRIVER_GATED = [
-    "glm_logit_orders",
-    "glm_cv_lineitem",
     "glm_cv_logit_orders",
-    "glm_poisson_orders",
     "glm_huber_lineitem",
     "glm_quantile_lineitem",
     "graph_pagerank_suppliers",
@@ -288,7 +283,6 @@ DRIVER_GATED = [
     "recsys_user_brand_recs",
     "recsys_topk_model",
     "recsys_als_factors",
-    "recsys_eval_coverage",
     "embed_lof_bucketed",
     "stats_gmm2_price",
     "stats_spearman_qty_price",
@@ -349,20 +343,47 @@ def _retime_trigger(first: float, base: float) -> bool:
     return ratio > 1.5 or (ratio > 1.2 and max(first, base) >= 3.0)
 
 
+def detail_target(sf: float, cpus: int, root: str = ".") -> tuple:
+    """(round, default detail path) for a run at (sf, cpus).
+
+    The newest ``BENCH_r{N}.json`` record fixes the configuration of
+    record. A run with the same (sf, cpus) is round N+1's primary run
+    and writes ``BENCH_DETAIL_r{N+1}.json``. A run with any other
+    (sf, cpus) is a secondary run of round N — it never takes the next
+    round's name — and writes ``BENCH_DETAIL_r{N}_c{cpus}.json``, with
+    an ``_sf{sf}`` infix when the scale differs too. With no record
+    the run is round 1's primary run."""
+    records = {
+        int(m.group(1)): f
+        for f in os.listdir(root)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
+    }
+    if not records:
+        return 1, "BENCH_DETAIL_r1.json"
+    n = max(records)
+    try:
+        with open(os.path.join(root, records[n])) as f:
+            rec = json.load(f)
+        rec_cfg = (rec.get("sf"), rec.get("cpus"))
+    except (OSError, ValueError):
+        rec_cfg = (None, None)
+    if rec_cfg == (sf, cpus):
+        return n + 1, f"BENCH_DETAIL_r{n + 1}.json"
+    infix = "" if rec_cfg[0] == sf else f"_sf{sf}"
+    return n, f"BENCH_DETAIL_r{n}{infix}_c{cpus}.json"
+
+
 def main() -> None:
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([\d.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
+    cpus = int(os.environ["SPARK_GRAFT_CPUS"])
+    this_round, default_detail = detail_target(sf, cpus)
     spark = get_spark(app_name="bench")
     queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
 
     # every headline key runs every round (the optimization-round
     # contract: entries may be added to "queries", never removed)
-    prior_rounds = [
-        int(re.search(r"r(\d+)", f).group(1))
-        for f in os.listdir(".")
-        if re.fullmatch(r"BENCH_r\d+\.json", f)
-    ]
-    this_round = (max(prior_rounds) + 1) if prior_rounds else 0
     run_set = list(HEADLINE)
 
     # warm the JVM + file-listing caches on a trivial plan so the first
@@ -551,7 +572,6 @@ def main() -> None:
         finally:
             os.environ.pop("SPARK_GRAFT_DRIVER_GATE", None)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     out = {
         "metric": "total_query_time",
         "value": round(sum(timings.values()), 3),
@@ -580,26 +600,10 @@ def main() -> None:
     # tail-capture window truncated the 74-query line in r10 —
     # "parsed": null), and stdout ends with a SHORT summary line so the
     # tail always contains parseable totals regardless of query count.
-    default_detail = f"BENCH_DETAIL_r{this_round}.json"
+    # A sanity run at another SF or the low-core scaling run gets a
+    # suffixed name from detail_target, so it never overwrites the
+    # round's artifact of record; a same-config re-run updates it.
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL", default_detail)
-    # r16 verdict task 2 (clobber guard): a sanity run at another SF —
-    # or the driver's low-core scaling run — must never overwrite the
-    # round's sf0.1/32-core artifact of record (it happened in r16:
-    # the committed detail file was silently replaced and the next
-    # run's baseline machinery went blind). If the default path holds
-    # a run with a different (sf, cpus), divert to a suffixed name;
-    # a same-config re-run still updates the record (latest wins).
-    if detail_path == default_detail and os.path.exists(detail_path):
-        try:
-            with open(detail_path) as f:
-                prev = json.load(f)
-            prev_cfg = (prev.get("sf"), prev.get("cpus", cpus))
-        except (OSError, ValueError):
-            prev_cfg = (None, None)
-        if prev_cfg != (sf, cpus):
-            detail_path = (
-                f"BENCH_DETAIL_r{this_round}_sf{sf}_c{cpus}.json"
-            )
     detail_ok = True
     try:
         with open(detail_path, "w") as f:

@@ -187,7 +187,6 @@ def gmm2_train(
     value_col: str,
     iterations: int = 3,
     var_floor: float = 1e-6,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Two-component 1-D Gaussian mixture by EM — the soft-clustering
     companion to :func:`kmeans_summary` and the model-based
@@ -239,17 +238,12 @@ def gmm2_train(
     if n < 2:
         base.unpersist()
         raise ValueError("gmm2_train: need >= 2 non-null rows")
-    if driver_gate_rows is None:
-        from metadata_etl_framework_spark.ops.glm import (
-            GLM_DRIVER_MAX_ROWS,
-        )
-
-        driver_gate_rows = GLM_DRIVER_MAX_ROWS
     from metadata_etl_framework_spark.ops.driver_exact import (
         driver_gates_enabled,
     )
+    from metadata_etl_framework_spark.ops.glm import GLM_DRIVER_MAX_ROWS
 
-    if driver_gates_enabled() and n <= int(driver_gate_rows):
+    if driver_gates_enabled() and n <= GLM_DRIVER_MAX_ROWS:
         # bounded driver fast path (the GLM trainer convention,
         # ops/glm.py::GLM_DRIVER_MAX_ROWS): ONE Arrow transfer of the
         # single double column, then the 2 init passes + EM rounds run

@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
+from metadata_etl_framework_spark.ops.driver_exact import (
+    driver_gates_enabled,
+)
 from metadata_etl_framework_spark.ops.text import fingerprint
 
 
@@ -494,12 +497,16 @@ def simhash(
     return hashed.select(id_col, _sig("_h").alias("simhash"))
 
 
+# Edge bound of the driver union-find fast path in connected_components
+# (memory rationale in its docstring).
+CC_DRIVER_MAX_EDGES = 500_000
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 25,
-    driver_gate_edges: int = 500_000,
 ) -> DataFrame:
     """Near-duplicate CLUSTERS from pair output: connected components by
     iterative min-label propagation — each node's label converges to the
@@ -529,24 +536,25 @@ def connected_components(
     textbook hash-min / "small-star" iteration (CC-MR, Vassilvitskii et
     al.), not a port.
 
-    Small-graph fast path: pair sets up to ``driver_gate_edges`` are
+    Small-graph fast path: pair sets up to ``CC_DRIVER_MAX_EDGES`` are
     fetched via Arrow (``toPandas`` — columnar transfer, no per-row
     Row-object overhead) and closed with driver-side union-find (path
     compression + union by min, O(E α(E))). Real driver cost is the
     pandas frame (~16 B/edge for numeric ids) plus the Python dict the
     union-find builds over touched NODES (~100 B/entry with boxed ints)
-    — the default 500k-edge gate stays well under ~100 MB of driver heap
+    — the 500k-edge gate stays well under ~100 MB of driver heap
     even for string ids. Near-dup pair lists are edge-sparse even for
     huge corpora (they're post-verification similarity hits, not raw
     candidates), so this path covers most real runs and skips the
-    multi-round shuffle loop entirely; anything over the gate takes the
-    fully-distributed iteration, same results. The gate's count() is an
+    multi-round shuffle loop entirely; anything over the gate, or any
+    run with ``SPARK_GRAFT_DRIVER_GATE=0``, takes the fully-distributed
+    iteration, same results. The gate's count() is an
     action either path needs to materialize the pair computation once.
     """
     half = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
     n_edges = half.count()
     out_type = half.schema["u"].dataType
-    if n_edges <= driver_gate_edges:
+    if driver_gates_enabled() and n_edges <= CC_DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def find(x):

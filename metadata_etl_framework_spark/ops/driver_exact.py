@@ -52,11 +52,13 @@ __all__ = [
 def driver_gates_enabled() -> bool:
     """True unless ``SPARK_GRAFT_DRIVER_GATE=0``.
 
-    The bench's gate-OFF measurement arm: with the env var set to 0,
-    every bounded driver fast path (the ``*_DRIVER_MAX_*`` twin gates)
-    is skipped and the DISTRIBUTED arms run — the plans that execute
-    at fact scale — so ``BENCH_DETAIL_r*.json``'s ``gate_off`` block
-    records their cost every round instead of the twins hiding it.
+    The one switch for every driver fast path: each bounded twin
+    runs only when this returns True AND its input fits the module
+    constant that caps it (the ``*_DRIVER_MAX_*`` bounds); no operator
+    takes a per-call gate parameter. With the env var set to 0 every
+    twin is skipped and the DISTRIBUTED arms run — the plans that
+    execute at fact scale — which is how the bench's ``gate_off``
+    block and the tests' ``gate_off`` fixture select that arm.
     Read at call time (not import time) so the bench can flip it
     between timing blocks inside one process. Results are identical
     either way — the twins are bit-exact replicas; only the execution

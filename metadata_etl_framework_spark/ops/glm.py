@@ -233,7 +233,6 @@ def logistic_train(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Train P(y=1|x) = σ(β₀ + Σ βⱼ·xⱼ) by ``iterations`` Newton/IRLS
     steps from β = 0.
@@ -285,28 +284,6 @@ def logistic_train(
     # one projection feeds every Newton pass — persist so iterations
     # read cached rows; released before every exit (incl. the raise)
     base = base.persist()
-    n_rows = base.count()
-    if n_rows == 0:
-        base.unpersist()
-        raise ValueError("logistic_train: no usable rows")
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
-    if driver_gates_enabled() and n_rows <= gate:
-        # bounded driver fast path (gate rationale at
-        # GLM_DRIVER_MAX_ROWS); bit-identical to the loop below
-        arrs = _driver_arrays(
-            base, ["_y"] + [f"_x{j}" for j in range(1, d)]
-        )
-        base.unpersist()
-        betas = _logistic_driver_betas(
-            arrs, d, int(iterations), ridge_i
-        )
-        return _glm_coef_frame(
-            df.sparkSession, feature_cols, betas, n_rows, iterations
-        )
     for _ in range(int(iterations)):
         z = F.lit(betas[0])
         for j in range(1, d):
@@ -356,44 +333,6 @@ def _glm_coef_frame(
     ).orderBy("ord").drop("ord")
 
 
-def _logistic_driver_betas(
-    arrs: dict, d: int, iterations: int, ridge_i: int
-) -> "list[float]":
-    """Driver twin of the :func:`logistic_train` Newton loop: identical
-    left-associative linear predictor, clamp, per-row term order,
-    HALF_UP pico rounding and exact integer sums
-    (ops/driver_exact.py), identical solve and 12-dp rounding."""
-    import numpy as np
-
-    from metadata_etl_framework_spark.ops.driver_exact import pico_sum
-
-    y = arrs["_y"]
-    xs = [np.ones_like(y)] + [arrs[f"_x{j}"] for j in range(1, d)]
-    # ones ARRAY, not a scalar: the distributed terms multiply a
-    # per-row F.lit(1.0), so constant-only products (e.g. the h00
-    # cell) must still sum over every row
-    betas = [0.0] * d
-    for _ in range(iterations):
-        z = betas[0]
-        for j in range(1, d):
-            z = z + betas[j] * xs[j]
-        p = _np_sigmoid(z)
-        w = p * (1.0 - p)
-        g = [float(pico_sum((y - p) * xs[j])) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(
-                    pico_sum(w * xs[j] * xs[k])
-                    + (ridge_i if j == k else 0)
-                )
-                h[j][k] = v
-                h[k][j] = v
-        delta = _solve(h, g)
-        betas = [round(betas[j] + delta[j], 12) for j in range(d)]
-    return betas
-
-
 def linear_cv(
     df: DataFrame,
     feature_cols: "list[str]",
@@ -402,7 +341,6 @@ def linear_cv(
     n_folds: int = 4,
     ridge: float = 0.0,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """K-fold cross-validated ridge/OLS — per-fold AND pooled held-out
     metrics in TWO data scans total, for all K models at once:
@@ -457,69 +395,51 @@ def linear_cv(
     ridge_i = int(
         Decimal(repr(float(ridge))).scaleb(12).to_integral_value()
     )
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
     # both passes read one persisted projection; released at exit
     base = base.persist()
     try:
-        n_rows = base.count()
-        if n_rows == 0:
+        # two-level exact sums (ops/exact_agg.py): bit-identical
+        # to the single-level DECIMAL streams, ~3× cheaper per scan
+        terms = {"_yy": F.col("_y") * F.col("_y")}
+        for j in range(d):
+            terms[f"_g{j}"] = xs[j] * F.col("_y")
+        for j in range(d):
+            for k in range(j, d):
+                terms[f"_h{j}{k}"] = xs[j] * xs[k]
+        per_fold = {
+            int(r["_fold"]): {
+                k: int(r[k]) for k in r.asDict() if k != "_fold"
+            }
+            for r in exact_pico_sums(
+                base, terms, group_cols=["_fold"], count_alias="_n"
+            ).collect()
+        }
+        if not per_fold:
             raise ValueError("linear_cv: no usable rows")
-        if driver_gates_enabled() and n_rows <= gate:
-            # bounded driver fast path (gate rationale at
-            # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
-            per_fold, met = _linear_cv_driver(
-                _driver_arrays(
-                    base,
-                    ["_fold", "_y"] + [f"_x{j}" for j in range(1, d)],
-                ),
-                d,
-                ridge_i,
+        betas_by_fold = _loo_beta_sets(per_fold, d, ridge_i)
+        # scoring pass: fold-specific betas as a CASE chain
+        pred = None
+        for f in sorted(per_fold):
+            b = betas_by_fold[f]
+            z = F.lit(b[0])
+            for j in range(1, d):
+                z = z + F.lit(b[j]) * F.col(f"_x{j}")
+            pred = (
+                F.when(F.col("_fold") == f, z)
+                if pred is None
+                else pred.when(F.col("_fold") == f, z)
             )
-        else:
-            # two-level exact sums (ops/exact_agg.py): bit-identical
-            # to the single-level DECIMAL streams, ~3× cheaper per scan
-            terms = {"_yy": F.col("_y") * F.col("_y")}
-            for j in range(d):
-                terms[f"_g{j}"] = xs[j] * F.col("_y")
-            for j in range(d):
-                for k in range(j, d):
-                    terms[f"_h{j}{k}"] = xs[j] * xs[k]
-            per_fold = {
-                int(r["_fold"]): {
-                    k: int(r[k]) for k in r.asDict() if k != "_fold"
-                }
-                for r in exact_pico_sums(
-                    base, terms, group_cols=["_fold"], count_alias="_n"
-                ).collect()
+        err = F.col("_y") - pred
+        met = {
+            int(r["_fold"]): {
+                "_sse": int(r["_sse"]), "_sae": int(r["_sae"])
             }
-            betas_by_fold = _loo_beta_sets(per_fold, d, ridge_i)
-            # scoring pass: fold-specific betas as a CASE chain
-            pred = None
-            for f in sorted(per_fold):
-                b = betas_by_fold[f]
-                z = F.lit(b[0])
-                for j in range(1, d):
-                    z = z + F.lit(b[j]) * F.col(f"_x{j}")
-                pred = (
-                    F.when(F.col("_fold") == f, z)
-                    if pred is None
-                    else pred.when(F.col("_fold") == f, z)
-                )
-            err = F.col("_y") - pred
-            met = {
-                int(r["_fold"]): {
-                    "_sse": int(r["_sse"]), "_sae": int(r["_sae"])
-                }
-                for r in exact_pico_sums(
-                    base,
-                    {"_sse": err * err, "_sae": F.abs(err)},
-                    group_cols=["_fold"],
-                ).collect()
-            }
+            for r in exact_pico_sums(
+                base,
+                {"_sse": err * err, "_sae": F.abs(err)},
+                group_cols=["_fold"],
+            ).collect()
+        }
     finally:
         base.unpersist()
     folds = sorted(per_fold)
@@ -560,9 +480,9 @@ def linear_cv(
 def _loo_beta_sets(
     per_fold: "dict[int, dict[str, int]]", d: int, ridge_i: int
 ) -> "dict[int, list[float]]":
-    """Leave-one-fold-out betas from per-fold integer sums — shared by
-    the distributed and driver :func:`linear_cv` arms (exact integer
-    subtraction, identical solve and 12-dp rounding)."""
+    """Leave-one-fold-out betas from :func:`linear_cv`'s per-fold
+    integer sums (exact integer subtraction, then the shared solve and
+    12-dp rounding)."""
     folds = sorted(per_fold)
     keys = [k for k in per_fold[folds[0]] if k != "_fold"]
     tot = {k: sum(per_fold[f][k] for f in folds) for k in keys}
@@ -586,70 +506,6 @@ def _loo_beta_sets(
     return betas_by_fold
 
 
-def _linear_cv_driver(
-    arrs: dict, d: int, ridge_i: int
-) -> "tuple[dict, dict]":
-    """Driver twin of the two :func:`linear_cv` passes: per-fold exact
-    pico sums → leave-one-fold-out betas (shared :func:`_loo_beta_sets`)
-    → per-fold held-out error sums — identical term order, pico
-    rounding, exact sums. Pure products — exact by construction.
-    Returns (per_fold, met) shaped like the collected dicts."""
-    import numpy as np
-
-    from metadata_etl_framework_spark.ops.driver_exact import (
-        exact_sum_i64,
-        round_half_up_int64,
-    )
-
-    fold = arrs["_fold"]
-    y = arrs["_y"]
-    xs = [np.ones_like(y)] + [arrs[f"_x{j}"] for j in range(1, d)]
-    # ones ARRAY, not a scalar: the distributed terms multiply a
-    # per-row F.lit(1.0), so constant-only products (e.g. the h00
-    # cell) must still sum over every row
-    present = [int(f) for f in np.unique(fold)]
-    masks = {f: fold == f for f in present}
-
-    def _grouped(term) -> "dict[int, int]":
-        term = np.asarray(term, dtype=np.float64)
-        if term.size and not np.isfinite(term).all():
-            raise ValueError(
-                "linear_cv: non-finite term (the distributed ANSI "
-                "cast would raise ArithmeticException here)"
-            )
-        pi = round_half_up_int64(term * 1e12)
-        return {f: exact_sum_i64(pi[masks[f]]) for f in present}
-
-    per_fold: "dict[int, dict[str, int]]" = {
-        f: {"_n": int(masks[f].sum())} for f in present
-    }
-    for k, t in [("_yy", y * y)] + [
-        (f"_g{j}", xs[j] * y) for j in range(d)
-    ] + [
-        (f"_h{j}{k}", xs[j] * xs[k])
-        for j in range(d)
-        for k in range(j, d)
-    ]:
-        for f, v in _grouped(t).items():
-            per_fold[f][k] = v
-    betas_by_fold = _loo_beta_sets(per_fold, d, ridge_i)
-    # held-out scoring: each row under its own fold's betas
-    pred = np.empty_like(y)
-    for f in present:
-        b = betas_by_fold[f]
-        z = b[0]
-        for j in range(1, d):
-            z = z + b[j] * xs[j]
-        m = masks[f]
-        pred[m] = np.broadcast_to(np.asarray(z), y.shape)[m]
-    err = y - pred
-    met: "dict[int, dict[str, int]]" = {f: {} for f in present}
-    for k, t in [("_sse", err * err), ("_sae", np.abs(err))]:
-        for f, v in _grouped(t).items():
-            met[f][k] = v
-    return per_fold, met
-
-
 def logistic_cv(
     df: DataFrame,
     feature_cols: "list[str]",
@@ -659,7 +515,6 @@ def logistic_cv(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """K-fold cross-validated IRLS logistic regression — all K
     held-out models advance together, ONE grouped pass per Newton
@@ -728,12 +583,7 @@ def logistic_cv(
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("logistic_cv: no usable rows")
-        gate = (
-            GLM_DRIVER_MAX_ROWS
-            if driver_gate_rows is None
-            else int(driver_gate_rows)
-        )
-        if driver_gates_enabled() and n_rows <= gate:
+        if driver_gates_enabled() and n_rows <= GLM_DRIVER_MAX_ROWS:
             # bounded driver fast path (gate rationale at
             # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
             # up to the exp/log kernels (parity-tested on the benched
@@ -986,7 +836,6 @@ def poisson_train(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Poisson regression (log link) for count targets — orders per
     customer, events per session, defects per batch: train
@@ -1044,27 +893,6 @@ def poisson_train(
         base.unpersist()
         raise ValueError("poisson_train: no usable rows")
     ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
-    if driver_gates_enabled() and n_rows <= gate:
-        # bounded driver fast path (gate rationale at
-        # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below up
-        # to the exp kernel (np.exp vs the JVM's Math.exp — both
-        # correctly-rounded to ≤1 ulp; the pico grid absorbs the
-        # residual band, parity-tested on the benched data)
-        arrs = _driver_arrays(
-            base, ["_y"] + [f"_x{j}" for j in range(1, d)]
-        )
-        base.unpersist()
-        betas = _poisson_driver_betas(
-            arrs, d, n_rows, int(iterations), ridge_i
-        )
-        return _glm_coef_frame(
-            df.sparkSession, feature_cols, betas, n_rows, iterations
-        )
     init = exact_pico_sums(
         base, {"_sy": F.col("_y")}, row_hint=n_rows
     ).collect()[0]
@@ -1105,48 +933,6 @@ def poisson_train(
     )
 
 
-def _poisson_driver_betas(
-    arrs: dict, d: int, n_rows: int, iterations: int, ridge_i: int
-) -> "list[float]":
-    """Driver twin of the :func:`poisson_train` passes — identical
-    ln(ȳ) init from the exact pico Σy, clamp, term order, pico
-    rounding, exact sums, solve and 12-dp rounding."""
-    import math
-
-    import numpy as np
-
-    from metadata_etl_framework_spark.ops.driver_exact import pico_sum
-
-    y = arrs["_y"]
-    xs = [np.ones_like(y)] + [arrs[f"_x{j}"] for j in range(1, d)]
-    # ones ARRAY, not a scalar: the distributed terms multiply a
-    # per-row F.lit(1.0), so constant-only products (e.g. the h00
-    # cell) must still sum over every row
-    sy = pico_sum(y)
-    b0 = round(math.log(float(sy) / 1e12 / n_rows), 12) if sy > 0 else 0.0
-    betas = [b0] + [0.0] * (d - 1)
-    for _ in range(iterations):
-        z = betas[0]
-        for j in range(1, d):
-            z = z + betas[j] * xs[j]
-        zc = np.minimum(z, _ZCLAMP)
-        zc = np.maximum(zc, -_ZCLAMP)
-        mu = np.exp(np.where(np.isnan(z), _ZCLAMP, zc))
-        g = [float(pico_sum((y - mu) * xs[j])) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(
-                    pico_sum(mu * xs[j] * xs[k])
-                    + (ridge_i if j == k else 0)
-                )
-                h[j][k] = v
-                h[k][j] = v
-        delta = _solve(h, g)
-        betas = [round(betas[j] + delta[j], 12) for j in range(d)]
-    return betas
-
-
 def huber_train(
     df: DataFrame,
     feature_cols: "list[str]",
@@ -1155,7 +941,6 @@ def huber_train(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Huber robust regression by IRLS — the GLM family's answer to
     contaminated labels (the reference's quality plane flags outliers;
@@ -1235,12 +1020,7 @@ def huber_train(
     if n_rows == 0:
         base.unpersist()
         raise ValueError("huber_train: no usable rows")
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
-    if driver_gates_enabled() and n_rows <= gate:
+    if driver_gates_enabled() and n_rows <= GLM_DRIVER_MAX_ROWS:
         # bounded driver fast path (gate rationale at
         # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
         arrs = _driver_arrays(
@@ -1324,7 +1104,6 @@ def quantile_train(
     ridge: float = 1e-6,
     eps: float = 1e-3,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Quantile (pinball-loss) regression by IRLS — completes the
     in-engine GLM family across the target's SHAPE: OLS/ridge fit the
@@ -1423,12 +1202,7 @@ def quantile_train(
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("quantile_train: no usable rows")
-        gate = (
-            GLM_DRIVER_MAX_ROWS
-            if driver_gate_rows is None
-            else int(driver_gate_rows)
-        )
-        if driver_gates_enabled() and n_rows <= gate:
+        if driver_gates_enabled() and n_rows <= GLM_DRIVER_MAX_ROWS:
             # bounded driver fast path (gate rationale at
             # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
             arrs = _driver_arrays(

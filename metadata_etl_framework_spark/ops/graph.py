@@ -108,7 +108,6 @@ def pagerank(
     seed_nodes: "Sequence[str] | None" = None,
     redistribute_dangling: bool = False,
     tol: float | None = None,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list.
 
@@ -191,9 +190,7 @@ def pagerank(
         return edges.sparkSession.createDataFrame(
             [], "node string, rank double"
         )
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
-    if driver_gates_enabled() and n_edges <= driver_gate_edges:
+    if driver_gates_enabled() and n_edges <= _MOVE_BCAST_MAX_NODES:
         # bounded driver fast path (the Louvain move-round
         # convention): one transfer of the filtered edge rows, then
         # the iterations — per-edge double contributions, the exact
@@ -818,7 +815,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     checkpoint_every: int = 1,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (community
     detection): every node starts labeled with its own id; each
@@ -847,11 +843,9 @@ def label_propagation(
         raise ValueError("iterations must be >= 1")
     und = _undirected(edges, src_col, dst_col).persist()
     n_und = und.count()
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
     if (
         driver_gates_enabled()
-        and 2 * n_und <= driver_gate_edges
+        and 2 * n_und <= _MOVE_BCAST_MAX_NODES
         and isinstance(edges.schema[src_col].dataType, IntegralType)
     ):
         # bounded driver fast path (the pagerank convention): pure
@@ -1096,7 +1090,6 @@ def random_walks(
     dst_col: str = "dst",
     seed: int = 1,
     max_walk_length: int = 20,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Deterministic uniform random walks over a directed edge list —
     the sampling primitive under DeepWalk/node2vec-style embeddings
@@ -1176,9 +1169,7 @@ def random_walks(
         # carries _SMALL_GRAPH_NPART partitions per arm; above it the
         # node-scale equi-join stands — the right plan at fact scale
         small = int(mins["n"]) <= _MOVE_BCAST_MAX_NODES
-        if driver_gate_edges is None:
-            driver_gate_edges = _MOVE_BCAST_MAX_NODES
-        if driver_gates_enabled() and int(mins["n"]) <= driver_gate_edges:
+        if driver_gates_enabled() and small:
             # bounded driver fast path (the Louvain move-round
             # convention): the adjacency table the broadcast arm would
             # ship to every executor is instead collected ONCE (the
@@ -1417,7 +1408,6 @@ def walk_cooccurrence(
     walks: DataFrame,
     window: int = 2,
     max_window: int = 10,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Skip-gram co-occurrence + PMI over a :func:`random_walks`
     corpus — the DeepWalk recipe's counting half: nodes appearing
@@ -1443,10 +1433,10 @@ def walk_cooccurrence(
             f"self-join fans out linearly in window"
         )
     local = getattr(walks, "_graft_local_walks", None)
-    if driver_gates_enabled() and local is not None and len(local[0]) <= (
-        _MOVE_BCAST_MAX_NODES
-        if driver_gate_rows is None
-        else driver_gate_rows
+    if (
+        driver_gates_enabled()
+        and local is not None
+        and len(local[0]) <= _MOVE_BCAST_MAX_NODES
     ):
         # the corpus came from the random_walks driver arm: consume
         # its arrays directly (identical rows) instead of collecting
@@ -1469,9 +1459,7 @@ def walk_cooccurrence(
     # is map-side + one groupBy shuffle (guide §3.1); above the gate
     # the equi-shuffle self-join stands
     n_corpus = walks.count()
-    if driver_gate_rows is None:
-        driver_gate_rows = _MOVE_BCAST_MAX_NODES
-    if driver_gates_enabled() and n_corpus <= driver_gate_rows:
+    if driver_gates_enabled() and n_corpus <= _MOVE_BCAST_MAX_NODES:
         # bounded driver fast path (the random_walks convention): the
         # corpus the broadcast arm would ship whole to every executor
         # is collected once, and the band pairing + integer counting +
@@ -1986,7 +1974,6 @@ def betweenness_sampled(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 20,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Sampled betweenness centrality — Brandes' dependency
     accumulation (Brandes 2001) restricted to a seed set of sources,
@@ -2022,11 +2009,9 @@ def betweenness_sampled(
         )
     und = _undirected(edges, src, dst).persist()
     n_und = und.count()
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
     if (
         driver_gates_enabled()
-        and 2 * n_und <= driver_gate_edges
+        and 2 * n_und <= _MOVE_BCAST_MAX_NODES
         and isinstance(edges.schema[src].dataType, IntegralType)
     ):
         # bounded driver fast path (the pagerank convention): collect
@@ -2250,6 +2235,13 @@ def link_prediction(
     # parallelism; an AQE-coalesced handful of partitions serializes
     # the 11M-row blowup, and round-robin also de-skews hub vias,
     # guide §2.5)
+    # Scale caveat: mid is edge-scale and localCheckpoint keeps its
+    # blocks on the executors that computed them, unreplicated and
+    # with the lineage cut. Losing an executor mid-query therefore
+    # FAILS the query (the blocks cannot be recomputed) instead of
+    # recomputing them. A disk-backed persist keeps the lineage and
+    # would recompute lost blocks; the checkpoint is kept because it
+    # hands the wedge expansion a short plan.
     mid = mid.repartition(
         edges.sparkSession.sparkContext.defaultParallelism
     ).localCheckpoint(eager=True)
@@ -2518,7 +2510,6 @@ def greedy_modularity_move(
     labels: "DataFrame | None" = None,
     node_col: str = "node",
     label_col: str = "community",
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Deterministic Louvain-style local-move rounds — the OPTIMIZER
     for the metric :func:`modularity` scores: each round, eligible
@@ -2587,12 +2578,9 @@ def greedy_modularity_move(
         und.unpersist()
         raise ValueError("greedy_modularity_move: no edges")
     node_type = und.schema["a"].dataType
-    if driver_gate_edges is None:
-        # defined below (module layout); resolved at call time
-        driver_gate_edges = _DRIVER_MOVE_MAX_EDGES
     if (
         driver_gates_enabled()
-        and m <= driver_gate_edges
+        and m <= _DRIVER_MOVE_MAX_EDGES
         and (
             labels is None
             or labels.schema[label_col].dataType == node_type
@@ -3038,7 +3026,6 @@ def louvain_two_level(
     rounds: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    driver_gate_edges: int = _DRIVER_MOVE_MAX_EDGES,
 ) -> DataFrame:
     """Two-level Louvain community detection — the full method's
     shape in fixed, oracle-replayable form: ``rounds`` alternating
@@ -3095,7 +3082,7 @@ def louvain_two_level(
     if m == 0:
         und.unpersist()
         raise ValueError("louvain_two_level: no edges")
-    if driver_gates_enabled() and m <= driver_gate_edges:
+    if driver_gates_enabled() and m <= _DRIVER_MOVE_MAX_EDGES:
         # bounded driver fast path (gate rationale at
         # _DRIVER_MOVE_MAX_EDGES): one collect of the canonical edge
         # list, both phases + contraction + acceptance in pure-int
@@ -3387,7 +3374,6 @@ def eigenvector_centrality(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: "str | None" = None,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Eigenvector centrality by power iteration — completes the
     centrality family (PageRank's damped/teleport variant, HITS'
@@ -3434,9 +3420,7 @@ def eigenvector_centrality(
         w.alias("_w"),
     ).persist()
     n_edges = e.count()
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
-    if driver_gates_enabled() and n_edges <= driver_gate_edges:
+    if driver_gates_enabled() and n_edges <= _MOVE_BCAST_MAX_NODES:
         # bounded driver fast path (the pagerank convention): one
         # transfer of the filtered edge rows, then the shifted power
         # iterations — decimal(28,12) contribution fixed point, the

@@ -56,14 +56,13 @@ __all__ = [
 
 _DEC = "decimal(30,10)"
 
-# Driver gates for the CF fast paths: at or under these bounds the
-# deduped interaction frame (and the pair-bounded neighbor model)
-# transfer in one Arrow collect each and the candidate generation /
-# scoring runs on exact vectorized twins — integer co-occurrence
-# counts, correctly-rounded sqrt, 6-dp rounds and exact micro-int
-# score sums, so the twins are bit-exact by construction (no
-# transcendental kernels). Above any bound the distributed chains are
-# unchanged — the right plan at catalog scale.
+# Driver gates for the item-item cosine fast path: at or under these
+# bounds the deduped interaction frame transfers in one Arrow collect
+# and candidate generation runs on an exact vectorized twin — integer
+# co-occurrence counts, correctly-rounded sqrt and 6-dp rounds, so the
+# twin is bit-exact by construction (no transcendental kernels). Above
+# any bound the distributed chain is unchanged — the right plan at
+# catalog scale.
 CF_DRIVER_MAX_ROWS = 2_000_000
 CF_DRIVER_MAX_PAIRS = 20_000_000
 CF_DRIVER_MAX_ITEMS = 4_096
@@ -360,143 +359,6 @@ def item_item_cosine(
     )
 
 
-def _recommend_driver(
-    spark,
-    seen_df,
-    sims,
-    user_col,
-    item_col,
-    user_type,
-    item_type,
-    top_n,
-    include_seen,
-):
-    """Driver twin of the :func:`recommend_items` scoring chain over
-    Arrow-transferred arrays: symmetrized neighbor expansion, EXACT
-    micro-int (decimal(20,6)) score sums per (user, candidate), the
-    same seen anti-join and (score DESC, item ASC) rank, the same
-    6-dp double readout. Integer arithmetic + exact casts only —
-    bit-exact by construction. Returns None when a precondition
-    fails (non-orderable items, null/non-finite similarities, model
-    over the gate, or an expansion blowup) — the caller falls back to
-    the distributed chain."""
-    import numpy as np
-
-    from metadata_etl_framework_spark.ops.driver_exact import (
-        cast_decimal_i64,
-        scaled_i64_to_f64,
-        spark_round_f64,
-    )
-
-    # bound the transfer BEFORE collecting: limit(cap+1) keeps the
-    # Arrow collect ≤ cap+1 rows even when the model is huge (a model
-    # built without top_k_per_item on a large catalog), so an
-    # over-the-gate model can never OOM the driver here — it returns
-    # None and the distributed chain handles it. Row order is
-    # irrelevant: the twin indexes by (item_a, item_b).
-    stbl = (
-        sims.select("item_a", "item_b", "shrunk_cosine")
-        .limit(CF_DRIVER_MAX_ROWS + 1)
-        .toArrow()
-    )
-    if stbl.num_rows > CF_DRIVER_MAX_ROWS:
-        return None
-    A = stbl.column("item_a").to_numpy(zero_copy_only=False)
-    B = stbl.column("item_b").to_numpy(zero_copy_only=False)
-    S = (
-        stbl.column("shrunk_cosine")
-        .to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-    )
-    if len(S) and not np.isfinite(S).all():
-        return None
-    ttbl = seen_df.toArrow()
-    su = ttbl.column("_u").to_numpy(zero_copy_only=False)
-    si = ttbl.column("_i").to_numpy(zero_copy_only=False)
-    items = np.unique(np.concatenate([si, A, B]))
-    if not _np_orderable(items):
-        return None
-    L = len(items)
-    ai = np.searchsorted(items, A)
-    bi = np.searchsorted(items, B)
-    sic = np.searchsorted(items, si)
-    users, ucode = np.unique(su, return_inverse=True)
-    if float(len(users)) * L >= float(1 << 62):
-        return None
-    s6, ok6 = cast_decimal_i64(S, 6)
-    if len(S) and not ok6.all():
-        return None
-    # EXACT dense formulation (this box pays ~20 ms/MB of first-touch
-    # page faults, so a row-expansion join is the wrong driver shape):
-    # score(u, j) = Σ_{i∈items(u)} sim(i, j) = (U @ S6)[u, j] with U a
-    # 0/1 incidence matrix and S6 the symmetric micro-int similarity
-    # matrix — every product and partial sum is an integer far below
-    # 2^53, so the float64 matmul is EXACT regardless of summation
-    # order. A candidate cell exists iff it had ≥1 contributing pair:
-    # cnt = U @ A01 > 0 (a zero-valued sim still contributes a row,
-    # exactly like the distributed join → sum).
-    nU = len(users)
-    if nU * L > 8_000_000:
-        return None
-    if L and (
-        len(np.unique(ai * np.int64(L) + bi)) != len(ai)
-        or (ai == bi).any()
-        # a model holding BOTH (a,b) and (b,a) passes the directed
-        # uniqueness check, but the dense assignments below OVERWRITE
-        # where the distributed symmetrize-union SUMS — require the
-        # unordered key to be unique too
-        or len(
-            np.unique(
-                np.minimum(ai, bi) * np.int64(L) + np.maximum(ai, bi)
-            )
-        )
-        != len(ai)
-    ):
-        return None  # non-canonical model; the distributed sum differs
-    U = np.zeros((nU, L))
-    U[ucode, sic] = 1.0
-    S6m = np.zeros((L, L))
-    S6m[ai, bi] = s6.astype(np.float64)
-    S6m[bi, ai] = s6.astype(np.float64)
-    A01 = np.zeros((L, L))
-    A01[ai, bi] = 1.0
-    A01[bi, ai] = 1.0
-    sc = U @ S6m
-    cnt = U @ A01
-    mask = cnt > 0
-    if not include_seen:
-        mask &= U == 0
-    ru, rj = np.nonzero(mask)
-    scores = np.rint(sc[ru, rj]).astype(np.int64)
-    # rank per user: (score DESC, item ASC); nonzero() already yields
-    # row-major (user ASC, item ASC) order — lexsort for the score
-    o2 = np.lexsort((rj, -scores, ru))
-    ru, rj, scores = ru[o2], rj[o2], scores[o2]
-    firsts = np.concatenate(([True], ru[1:] != ru[:-1]))
-    gstart = np.maximum.accumulate(
-        np.where(firsts, np.arange(len(ru)), 0)
-    )
-    rn = (np.arange(len(ru)) - gstart + 1).astype(np.int32)
-    keep = rn <= int(top_n)
-    ru, rj, scores, rn = ru[keep], rj[keep], scores[keep], rn[keep]
-
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "user": users[ru],
-            "item": items[rj],
-            "score": spark_round_f64(scaled_i64_to_f64(scores, 6), 6),
-            "rank": rn,
-        }
-    )
-    return spark.createDataFrame(
-        pdf,
-        f"user {user_type.simpleString()}, "
-        f"item {item_type.simpleString()}, score double, rank int",
-    )
-
-
 def recommend_items(
     interactions: DataFrame,
     sims: DataFrame,
@@ -538,27 +400,6 @@ def recommend_items(
     # anti-join) — persist so the interaction dedup computes once;
     # released after the eager O(users·top_n) output leaf below
     seen = seen.persist()
-    n_seen = seen.count()
-    if driver_gates_enabled() and n_seen <= CF_DRIVER_MAX_ROWS:
-        # bounded driver fast path (gate rationale at
-        # CF_DRIVER_MAX_ROWS): the model is pair-bounded and seen is
-        # under the gate, so scoring runs on the exact integer twin;
-        # any unmet precondition falls through to the distributed
-        # chain (seen stays persisted either way)
-        out = _recommend_driver(
-            interactions.sparkSession,
-            seen,
-            sims,
-            user_col,
-            item_col,
-            interactions.schema[user_col].dataType,
-            interactions.schema[item_col].dataType,
-            int(top_n),
-            bool(include_seen),
-        )
-        if out is not None:
-            seen.unpersist()
-            return out.orderBy("user", "rank")
     # the neighbor model is item-pair-bounded (tiny next to the
     # interactions); materialize it ONCE — the symmetrize union below
     # references it twice and would otherwise recompute the entire
@@ -789,7 +630,6 @@ def als_factorize(
     rating_col: str,
     rounds: int = 2,
     reg: float = 0.1,
-    driver_gate_rows: "int | None" = None,
 ) -> "tuple[DataFrame, DataFrame]":
     """ALS matrix factorization at rank 2 — implicit/explicit-feedback
     factors beyond the item-item CF above (the reference's analytics
@@ -842,15 +682,13 @@ def als_factorize(
     base = base.persist()
     n_ratings = base.count()
 
-    if driver_gate_rows is None:
-        driver_gate_rows = ALS_DRIVER_MAX_ROWS
     from pyspark.sql.types import IntegralType
 
     u_type = df.schema[user_col].dataType
     it_type = df.schema[item_col].dataType
     if (
         driver_gates_enabled()
-        and n_ratings <= driver_gate_rows
+        and n_ratings <= ALS_DRIVER_MAX_ROWS
         and isinstance(u_type, IntegralType)
         and isinstance(it_type, IntegralType)
     ):

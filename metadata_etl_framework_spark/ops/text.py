@@ -13,6 +13,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_etl_framework_spark.ops.driver_exact import (
+    driver_gates_enabled,
+)
+
 
 DEFAULT_STOPWORDS = (
     "the", "a", "an", "of", "to", "in", "and", "is", "it", "for", "on", "with",
@@ -1838,13 +1842,16 @@ def _bpe_train_local(
     return merges
 
 
+# Distinct-word bound of the driver-local bpe_train finish.
+BPE_DRIVER_MAX_WORDS = 500_000
+
+
 def bpe_train(
     df: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
     lowercase: bool = True,
     min_pair_count: int = 2,
-    driver_gate_words: int = 500_000,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus — the iterative
     tokenizer-training loop, distributed the way real BPE trainers work:
@@ -1873,11 +1880,12 @@ def bpe_train(
     sequential Spark jobs, while the word-frequency table is
     vocab-sized (millions of rows at web scale, not corpus-sized) and
     CONSTANT in row count across iterations. When it has at most
-    ``driver_gate_words`` distinct words, the table is collected once
-    and all merges run in pure Python — merge-for-merge identical
+    ``BPE_DRIVER_MAX_WORDS`` distinct words, the table is collected
+    once and all merges run in pure Python — merge-for-merge identical
     output (same weighted counts, same ordering, same greedy fuse;
-    pinned by a both-paths test). Above the gate, or with the gate
-    forced to 0, the fully distributed per-iteration loop runs.
+    pinned by a both-paths test). Above the gate, or with
+    ``SPARK_GRAFT_DRIVER_GATE=0``, the fully distributed per-iteration
+    loop runs.
 
     Property-tested against an independent pure-Python BPE reference
     (tests/test_corpus_ops.py).
@@ -1899,7 +1907,7 @@ def bpe_train(
         "merge_idx int, left string, right string, merged string, "
         "pair_count long"
     )
-    if driver_gate_words > 0 and cur.count() <= driver_gate_words:
+    if driver_gates_enabled() and cur.count() <= BPE_DRIVER_MAX_WORDS:
         rows = cur.collect()
         cur.unpersist()
         local = _bpe_train_local(

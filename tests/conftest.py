@@ -21,6 +21,19 @@ def sf_dir() -> str:
     return SF_SMOKE
 
 
+@pytest.fixture()
+def gate_off(monkeypatch):
+    """Run the test with every driver twin off (the distributed arms),
+    via the one switch ``SPARK_GRAFT_DRIVER_GATE``."""
+    from metadata_etl_framework_spark.ops.driver_exact import (
+        driver_gates_enabled,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    assert not driver_gates_enabled()
+    yield
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

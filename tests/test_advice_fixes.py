@@ -407,7 +407,7 @@ def test_psi_vs_baseline_empty_reference_raises_value_error(spark, tmp_path):
         psi_vs_baseline(cur, "x", path)
 
 
-def test_connected_components_distributed_on_minhash_pairs(spark):
+def test_connected_components_distributed_on_minhash_pairs(spark, gate_off):
     """Round-7 regression: the distributed hash-min path crashed with
     Spark's UnionBase.rewriteConstraints "key not found: node#N" when
     the pair frame came from minhash_near_duplicates (join-derived
@@ -428,7 +428,7 @@ def test_connected_components_distributed_on_minhash_pairs(spark):
         exact_max_rows=0, exact_max_fanout=0,
     ).persist()
     assert pairs.count() == 5  # one (100k+1, 100k+2)-style pair per 100
-    out = dedup_ops.connected_components(pairs, driver_gate_edges=0)
+    out = dedup_ops.connected_components(pairs)
     rows = out.collect()
     assert len(rows) == 10
     assert sum(1 for r in rows if r.is_canonical) == 5

@@ -234,7 +234,7 @@ def test_detect_dbscan_native_flags_noise_and_votes(spark):
     assert [r["id"] for r in voted] == [20]
 
 
-def test_gmm2_driver_gate_parity(spark):
+def test_gmm2_driver_gate_parity(spark, monkeypatch):
     """The bounded driver fast path (one Arrow collect + vectorized
     EM) must reproduce the distributed passes bit-for-bit — same
     fixture, gate on vs forced off, exact frame equality (exercises
@@ -248,8 +248,7 @@ def test_gmm2_driver_gate_parity(spark):
         for i in range(900)
     ]
     df = spark.createDataFrame(rows, "x double")
-    on = gmm2_train(df, "x", iterations=3, driver_gate_rows=None)
-    off = gmm2_train(df, "x", iterations=3, driver_gate_rows=0)
-    pd.testing.assert_frame_equal(
-        on.toPandas(), off.toPandas(), check_exact=True
-    )
+    on = gmm2_train(df, "x", iterations=3).toPandas()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    off = gmm2_train(df, "x", iterations=3).toPandas()
+    pd.testing.assert_frame_equal(on, off, check_exact=True)

@@ -931,7 +931,7 @@ def test_ab_test_proportions_closed_form(spark):
         )
 
 
-def test_bpe_train_gate_paths_identical(spark):
+def test_bpe_train_gate_paths_identical(spark, monkeypatch):
     """Round-7: the driver-local finish gate must yield merge-for-merge
     the same output as the fully distributed loop (gate forced to 0),
     including the early stop and tie-breaks."""
@@ -950,21 +950,15 @@ def test_bpe_train_gate_paths_identical(spark):
         tuple(r)
         for r in bpe_train(docs, n_merges=8).orderBy("merge_idx").collect()
     ]
-    dist = [
-        tuple(r)
-        for r in bpe_train(docs, n_merges=8, driver_gate_words=0)
-        .orderBy("merge_idx")
-        .collect()
-    ]
-    assert local == dist and len(local) == 8
     # early stop agrees too (huge min_pair_count -> 0 merges both paths)
     assert bpe_train(docs, n_merges=3, min_pair_count=10**6).count() == 0
-    assert (
-        bpe_train(
-            docs, n_merges=3, min_pair_count=10**6, driver_gate_words=0
-        ).count()
-        == 0
-    )
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    dist = [
+        tuple(r)
+        for r in bpe_train(docs, n_merges=8).orderBy("merge_idx").collect()
+    ]
+    assert local == dist and len(local) == 8
+    assert bpe_train(docs, n_merges=3, min_pair_count=10**6).count() == 0
 
 
 @pytest.mark.nightly

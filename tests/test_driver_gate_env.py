@@ -1,9 +1,9 @@
-"""Round-17 measurement-contract tests.
+"""Driver-gate contract tests.
 
-1. The ``SPARK_GRAFT_DRIVER_GATE=0`` env override (the bench's
-   gate-OFF arm) must force the DISTRIBUTED arm of every twin-gated
-   operator and produce bit-identical results — the twins are exact
-   replicas, so toggling the venue may never change a value.
+1. ``SPARK_GRAFT_DRIVER_GATE`` is the one switch for every driver
+   twin: with it at 0 each env-gated operator must run its
+   DISTRIBUTED arm and produce bit-identical results — the twins are
+   exact replicas, so toggling the venue may never change a value.
 2. ``round_half_up_int64``'s vectorized tie-band branch is fuzzed
    against the exact scalar Decimal path (the regression test the
    r16 ADVICE found missing).
@@ -12,30 +12,54 @@
    n·|x|max², and the old linear cap approved driver passes that then
    crashed in ``cast_decimal_i64`` where the distributed DECIMAL(28,10)
    pass would have succeeded).
-4. ``_recommend_driver`` falls back to the distributed chain for a
-   model holding BOTH (a,b) and (b,a) rows (ADVICE: dense assignment
-   overwrites where the distributed symmetrize-union sums).
+4. ``recommend_items`` SUMS both rows of a model holding (a,b) and
+   (b,a) — the symmetrize-union semantics.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
+from metadata_etl_framework_spark.functions.aggregations import (
+    robust_moments,
+)
+from metadata_etl_framework_spark.ops.clustering import gmm2_train
+from metadata_etl_framework_spark.ops.dedup import connected_components
 from metadata_etl_framework_spark.ops.driver_exact import (
     _round0_exact,
     driver_gates_enabled,
     round_half_up_int64,
 )
-from metadata_etl_framework_spark.ops.retention import _cox_np_safe
-
-
-@pytest.fixture()
-def gate_off(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
-    assert not driver_gates_enabled()
-    yield
+from metadata_etl_framework_spark.ops.glm import (
+    huber_train,
+    logistic_cv,
+    quantile_train,
+)
+from metadata_etl_framework_spark.ops.graph import (
+    betweenness_sampled,
+    eigenvector_centrality,
+    greedy_modularity_move,
+    label_propagation,
+    louvain_two_level,
+    pagerank,
+    pmi_embeddings,
+    random_walks,
+    walk_cooccurrence,
+)
+from metadata_etl_framework_spark.ops.recsys import (
+    als_factorize,
+    item_item_cosine,
+    recommend_items,
+)
+from metadata_etl_framework_spark.ops.retention import (
+    _cox_np_safe,
+    cox_ph,
+    cox_ph_multi,
+)
+from metadata_etl_framework_spark.ops.similarity import lof_scores_bucketed
+from metadata_etl_framework_spark.ops.stats import spearman_corr
+from metadata_etl_framework_spark.ops.text import bpe_train
 
 
 def test_env_default_is_on(monkeypatch):
@@ -90,54 +114,144 @@ def test_cox_np_safe_squared_magnitude_bound():
     assert _cox_np_safe(1_000_000, 1.0, 0.0)
 
 
-def _toy_edges(spark):
+def _edges(spark):
     ring = [(i, (i + 1) % 24) for i in range(24)] + [
         (i, (i + 7) % 24) for i in range(0, 24, 3)
     ]
     return spark.createDataFrame(ring, "src long, dst long")
 
 
-def test_gate_env_forces_distributed_identical(spark, gate_off):
-    """pagerank + robust_moments + logistic_train with the env gate
-    OFF must match the twin (gate ON) bit-for-bit."""
-    import os
-
-    from metadata_etl_framework_spark.functions.aggregations import (
-        robust_moments,
-    )
-    from metadata_etl_framework_spark.ops.glm import logistic_train
-    from metadata_etl_framework_spark.ops.graph import pagerank
-
-    edges = _toy_edges(spark)
+def _numeric(spark):
     rows = [
-        (float(i % 7) / 3.0, float((i * 5) % 11), 1.0 * (i % 2))
+        (
+            i,
+            float(i % 7) / 3.0,
+            float((i * 5) % 11),
+            1.0 * (i % 2),
+            1 + (i * 7) % 60,
+            1 if (i * 13) % 5 > 1 else 0,
+            "A" if i % 3 == 0 else "B",
+        )
         for i in range(400)
     ]
-    df = spark.createDataFrame(rows, "x1 double, x2 double, y double")
-
-    def run_all():
-        pr = pagerank(edges, iterations=3).orderBy("node").collect()
-        rm = robust_moments(df, "x1", trim=0.1).collect()
-        lg = logistic_train(df, ["x1", "x2"], "y", iterations=2).collect()
-        return pr, rm, lg
-
-    off = run_all()
-    os.environ["SPARK_GRAFT_DRIVER_GATE"] = "1"
-    try:
-        on = run_all()
-    finally:
-        os.environ["SPARK_GRAFT_DRIVER_GATE"] = "0"
-    assert off == on
+    return spark.createDataFrame(
+        rows,
+        "rid long, x1 double, x2 double, y double, t long, e int, "
+        "g string",
+    )
 
 
-def test_recommend_driver_rejects_bidirectional_model(spark):
-    """A sims model carrying BOTH (a,b) and (b,a) must score through
-    the distributed chain (which SUMS both rows), and the driver arm
-    must agree — i.e. the gate-on and gate-off results match."""
-    import os
+def _walks(spark):
+    return random_walks(_edges(spark), walk_length=4, seed=3)
 
-    from metadata_etl_framework_spark.ops.recsys import recommend_items
 
+def _cooc(spark):
+    return walk_cooccurrence(_walks(spark), window=2)
+
+
+def _interactions(spark):
+    return spark.createDataFrame(
+        [(i % 37, f"it{(i * 7) % 11}") for i in range(500)],
+        "u long, i string",
+    )
+
+
+def _als(spark):
+    ratings = spark.createDataFrame(
+        [(i % 25, (i * 3) % 20, float(i % 9) - 2.5) for i in range(300)],
+        "u int, i int, r double",
+    )
+    uf, itf = als_factorize(ratings, "u", "i", "r", rounds=2, reg=0.1)
+    return uf.union(itf)
+
+
+def _lof(spark):
+    rows = [
+        (i, [float((i * 7 + j * 13) % 19) / 19.0 - 0.5 for j in range(4)])
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return lof_scores_bucketed(df, k=4, n_planes=4)
+
+
+def _bpe(spark):
+    docs = spark.createDataFrame(
+        [(0, "low lower lowest low"), (1, "new newer newest low new")],
+        "doc_id long, text string",
+    )
+    return bpe_train(docs, n_merges=5)
+
+
+# Every operator that reads driver_gates_enabled(), each on a fixture
+# small enough to sit under its twin's cap.
+GATED = {
+    "huber_train": lambda s: huber_train(
+        _numeric(s), ["x1", "x2"], "t", iterations=2
+    ),
+    "quantile_train": lambda s: quantile_train(
+        _numeric(s), ["x1"], "x2", iterations=2
+    ),
+    "logistic_cv": lambda s: logistic_cv(
+        _numeric(s), ["x1", "x2"], "y", "rid", n_folds=3, iterations=2
+    ),
+    "gmm2_train": lambda s: gmm2_train(_numeric(s), "x2", iterations=2),
+    "spearman_corr": lambda s: spearman_corr(_numeric(s), "x1", "x2"),
+    "robust_moments": lambda s: robust_moments(_numeric(s), "x2"),
+    "cox_ph": lambda s: cox_ph(_numeric(s), "t", "e", "x1", iterations=2),
+    "cox_ph_multi": lambda s: cox_ph_multi(
+        _numeric(s), "t", "e", ["x1", "x2"], iterations=2, strata_col="g"
+    ),
+    "lof_scores_bucketed": _lof,
+    "item_item_cosine": lambda s: item_item_cosine(
+        _interactions(s), "u", "i", min_cooc=2, shrinkage=5.0,
+        top_k_per_item=3,
+    ),
+    "als_factorize": _als,
+    "pagerank": lambda s: pagerank(_edges(s), iterations=3),
+    "label_propagation": lambda s: label_propagation(
+        _edges(s), iterations=3
+    ),
+    "random_walks": _walks,
+    "walk_cooccurrence": _cooc,
+    "pmi_embeddings": lambda s: pmi_embeddings(_cooc(s), rounds=2),
+    "betweenness_sampled": lambda s: betweenness_sampled(
+        _edges(s), [0, 5], max_hops=4
+    ),
+    "greedy_modularity_move": lambda s: greedy_modularity_move(
+        _edges(s), rounds=2
+    ),
+    "louvain_two_level": lambda s: louvain_two_level(_edges(s), rounds=2),
+    "eigenvector_centrality": lambda s: eigenvector_centrality(
+        _edges(s), iterations=3
+    ),
+    "connected_components": lambda s: connected_components(
+        _edges(s), src="src", dst="dst"
+    ),
+    "bpe_train": _bpe,
+}
+
+
+@pytest.mark.parametrize("op", sorted(GATED))
+def test_gate_env_forces_distributed_identical(spark, monkeypatch, op):
+    """The operator's output with the env gate OFF (distributed arm)
+    must match the twin's (gate ON) bit-for-bit: rows compare by
+    ``repr``, so every float digit and every NULL must agree."""
+
+    def rows():
+        return sorted(repr(tuple(r)) for r in GATED[op](spark).collect())
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "1")
+    on = rows()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    assert rows() == on
+    assert on
+
+
+def test_recommend_items_sums_bidirectional_model(spark):
+    """A sims model carrying BOTH (a,b) and (b,a) scores each
+    candidate with the SUM of both rows, exactly as the symmetrized
+    union of the model joins it."""
+    # seen: u1 {10}, u2 {20}, u3 {10, 20}, u4 {10}
     inter = spark.createDataFrame(
         [(u, i) for u in range(1, 5) for i in (10, 20) if (u + i) % 3],
         "user long, item long",
@@ -146,12 +260,17 @@ def test_recommend_driver_rejects_bidirectional_model(spark):
         [(10, 20, 0.25), (20, 10, 0.5), (10, 30, 0.125)],
         "item_a long, item_b long, shrunk_cosine double",
     )
-    on = recommend_items(inter, sims, "user", "item", top_n=3).collect()
-    os.environ["SPARK_GRAFT_DRIVER_GATE"] = "0"
-    try:
-        off = recommend_items(
+    got = [
+        tuple(r)
+        for r in recommend_items(
             inter, sims, "user", "item", top_n=3
         ).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_DRIVER_GATE", None)
-    assert on == off
+    ]
+    assert got == [
+        (1, 20, 0.75, 1),
+        (1, 30, 0.125, 2),
+        (2, 10, 0.75, 1),
+        (3, 30, 0.125, 1),
+        (4, 20, 0.75, 1),
+        (4, 30, 0.125, 2),
+    ]

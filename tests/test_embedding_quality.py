@@ -227,7 +227,7 @@ def test_auc_delong_degenerate_classes(spark):
     assert empty["n_neg"] == 0 and empty["auc"] is None
 
 
-def test_lof_bucketed_driver_gate_parity(spark):
+def test_lof_bucketed_driver_gate_parity(spark, monkeypatch):
     """The Arrow-collect driver twin of the bucketed-LOF chain must
     reproduce the distributed chain bit-for-bit — same fixture, gate
     on vs forced off, exact frame equality (exercises buckets,
@@ -235,7 +235,6 @@ def test_lof_bucketed_driver_gate_parity(spark):
     buckets)."""
     import pandas as pd
 
-    import metadata_etl_framework_spark.ops.similarity as sim
     from metadata_etl_framework_spark.ops.similarity import (
         lof_scores_bucketed,
     )
@@ -252,12 +251,7 @@ def test_lof_bucketed_driver_gate_parity(spark):
         for i in range(120)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    saved = sim.LOF_DRIVER_MAX_ROWS
-    try:
-        sim.LOF_DRIVER_MAX_ROWS = 2_000_000
-        on = lof_scores_bucketed(df, k=4, n_planes=4).toPandas()
-        sim.LOF_DRIVER_MAX_ROWS = 0
-        off = lof_scores_bucketed(df, k=4, n_planes=4).toPandas()
-    finally:
-        sim.LOF_DRIVER_MAX_ROWS = saved
+    on = lof_scores_bucketed(df, k=4, n_planes=4).toPandas()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    off = lof_scores_bucketed(df, k=4, n_planes=4).toPandas()
     pd.testing.assert_frame_equal(on, off, check_exact=True)

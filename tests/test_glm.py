@@ -519,26 +519,17 @@ def test_quantile_gates(spark):
         quantile_train(df.where(F.col("x") > 5), ["x"], "y")
 
 
-def _frames_equal_exact(a, b):
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(
-        a.toPandas(), b.toPandas(), check_exact=True
-    )
-
-
-def test_driver_gate_parity_all_trainers(spark):
+def test_driver_gate_parity_all_trainers(spark, monkeypatch):
     """The bounded driver fast path (n_rows <= GLM_DRIVER_MAX_ROWS,
     one Arrow collect + vectorized IRLS) must reproduce the
     distributed passes BIT-FOR-BIT — same fixture, gate on vs forced
-    off, exact frame equality. Exercises the exp/log kernels
-    (logistic/poisson/CV scoring) and the weighted trainers."""
+    off, exact frame equality. Exercises the exp/log kernels (CV
+    scoring) and the weighted trainers."""
+    import pandas as pd
+
     from metadata_etl_framework_spark.ops.glm import (
         huber_train,
-        linear_cv,
         logistic_cv,
-        logistic_train,
-        poisson_train,
         quantile_train,
     )
 
@@ -549,35 +540,26 @@ def test_driver_gate_parity_all_trainers(spark):
             float((i * 7) % 23) / 11.0,
             1.0 if (i * 13) % 17 > 8 else 0.0,
             float((i * 3) % 29) / 7.0 + (6.0 if i % 31 == 0 else 0.0),
-            float(i % 11),
         )
         for i in range(700)
     ]
     df = spark.createDataFrame(
-        rows, "rid long, x1 double, x2 double, yb double, yc double, yk double"
+        rows, "rid long, x1 double, x2 double, yb double, yc double"
     )
     cases = [
-        lambda g: logistic_train(
-            df, ["x1", "x2"], "yb", iterations=3, driver_gate_rows=g
+        lambda: huber_train(
+            df, ["x1", "x2"], "yc", delta=1.0, iterations=2
         ),
-        lambda g: poisson_train(
-            df, ["x1", "x2"], "yk", iterations=3, driver_gate_rows=g
+        lambda: quantile_train(
+            df, ["x1"], "yc", taus=(0.25, 0.5, 0.9), iterations=2
         ),
-        lambda g: huber_train(
-            df, ["x1", "x2"], "yc", delta=1.0, iterations=2,
-            driver_gate_rows=g,
-        ),
-        lambda g: quantile_train(
-            df, ["x1"], "yc", taus=(0.25, 0.5, 0.9), iterations=2,
-            driver_gate_rows=g,
-        ),
-        lambda g: linear_cv(
-            df, ["x1", "x2"], "yc", "rid", n_folds=4, driver_gate_rows=g
-        ),
-        lambda g: logistic_cv(
-            df, ["x1", "x2"], "yb", "rid", n_folds=4, iterations=3,
-            driver_gate_rows=g,
+        lambda: logistic_cv(
+            df, ["x1", "x2"], "yb", "rid", n_folds=4, iterations=3
         ),
     ]
-    for make in cases:
-        _frames_equal_exact(make(None), make(0))
+    on = [make().toPandas() for make in cases]
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    for make, want in zip(cases, on):
+        pd.testing.assert_frame_equal(
+            make().toPandas(), want, check_exact=True
+        )

@@ -248,14 +248,17 @@ import pytest as _pytest
 
 
 @_pytest.mark.parametrize("gate", [2_000_000, 0])
-def test_connected_components_chain_star_and_convergence(spark, gate):
+def test_connected_components_chain_star_and_convergence(
+    spark, monkeypatch, gate
+):
     """Transitive chains collapse to one cluster (A~B, B~C, C~D with no
     direct A~D pair), stars keep their hub's min id, and disjoint
     components stay separate — identical through BOTH the driver
     union-find fast path (gate above edge count) and the distributed
-    hash-min loop (gate=0)."""
+    hash-min loop (gate=0, i.e. SPARK_GRAFT_DRIVER_GATE=0)."""
     from metadata_etl_framework_spark.ops.dedup import connected_components
 
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "1" if gate else "0")
     pairs = spark.createDataFrame(
         [(4, 3), (3, 2), (2, 1),        # reversed chain → min id 1 wins
          (10, 11),                      # isolated pair
@@ -263,8 +266,7 @@ def test_connected_components_chain_star_and_convergence(spark, gate):
         "id_a long, id_b long",
     )
     got = {(r.node, r.cluster_id, r.is_canonical)
-           for r in connected_components(
-               pairs, driver_gate_edges=gate).collect()}
+           for r in connected_components(pairs).collect()}
     assert got == {
         (1, 1, True), (2, 1, False), (3, 1, False), (4, 1, False),
         (10, 10, True), (11, 10, False),
@@ -273,32 +275,35 @@ def test_connected_components_chain_star_and_convergence(spark, gate):
 
 
 @_pytest.mark.parametrize("gate", [2_000_000, 0])
-def test_connected_components_long_chain_needs_iterations(spark, gate):
+def test_connected_components_long_chain_needs_iterations(
+    spark, monkeypatch, gate
+):
     """A 12-node path exercises multiple propagation rounds (hash-min
     moves labels one hop per round along a path)."""
     from metadata_etl_framework_spark.ops.dedup import connected_components
 
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "1" if gate else "0")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 111)], "id_a long, id_b long"
     )
-    out = connected_components(pairs, driver_gate_edges=gate).collect()
+    out = connected_components(pairs).collect()
     assert {r.cluster_id for r in out} == {100}
     assert sum(r.is_canonical for r in out) == 1
 
 
 @_pytest.mark.parametrize("gate", [2_000_000, 0])
-def test_connected_components_string_ids(spark, gate):
+def test_connected_components_string_ids(spark, monkeypatch, gate):
     """String document ids work on both paths (the distributed loop must
     not attempt the numeric sum-convergence shortcut on strings)."""
     from metadata_etl_framework_spark.ops.dedup import connected_components
 
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "1" if gate else "0")
     pairs = spark.createDataFrame(
         [("docC", "docB"), ("docB", "docA"), ("docX", "docY")],
         "id_a string, id_b string",
     )
     got = {(r.node, r.cluster_id, r.is_canonical)
-           for r in connected_components(
-               pairs, driver_gate_edges=gate).collect()}
+           for r in connected_components(pairs).collect()}
     assert got == {
         ("docA", "docA", True), ("docB", "docA", False),
         ("docC", "docA", False),
@@ -1136,7 +1141,7 @@ def test_walk_cooccurrence_window_gate(spark):
         walk_cooccurrence(walks, window=0)
 
 
-def test_walk_pmi_als_driver_arms_match_distributed(spark):
+def test_walk_pmi_als_driver_arms_match_distributed(spark, monkeypatch):
     """The r16 gated driver fast paths (random_walks adjacency sim,
     walk_cooccurrence band counting, als_factorize half-rounds, and the
     in-process array handoffs between them) must return BIT-IDENTICAL
@@ -1162,18 +1167,21 @@ def test_walk_pmi_als_driver_arms_match_distributed(spark):
     def rows_of(d):
         return sorted(map(tuple, d.collect()))
 
+    def gate(v):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", v)
+
     w_drv = random_walks(df, walk_length=5, seed=3)
-    w_dst = random_walks(df, walk_length=5, seed=3, driver_gate_edges=0)
-    assert rows_of(w_drv) == rows_of(w_dst)
-
     c_drv = walk_cooccurrence(w_drv, window=2)  # array handoff path
-    c_col = walk_cooccurrence(w_dst, window=2)  # collect path
-    c_dst = walk_cooccurrence(w_dst, window=2, driver_gate_rows=0)
-    assert rows_of(c_drv) == rows_of(c_dst) == rows_of(c_col)
-
     e_drv = pmi_embeddings(c_drv, rounds=2, reg=0.1)  # handoff ALS
-    e_dst = pmi_embeddings(c_dst, rounds=2, reg=0.1)  # gated collect ALS
-    assert rows_of(e_drv) == rows_of(e_dst)
+    gate("0")
+    w_dst = random_walks(df, walk_length=5, seed=3)
+    c_dst = walk_cooccurrence(w_dst, window=2)
+    gate("1")
+    c_col = walk_cooccurrence(w_dst, window=2)  # collect path
+    e_col = pmi_embeddings(c_dst, rounds=2, reg=0.1)  # gated collect ALS
+    assert rows_of(w_drv) == rows_of(w_dst)
+    assert rows_of(c_drv) == rows_of(c_dst) == rows_of(c_col)
+    assert rows_of(e_drv) == rows_of(e_col)
 
     # duplicate-step general corpus through both cooc arms
     wdup = spark.createDataFrame(
@@ -1181,10 +1189,6 @@ def test_walk_pmi_als_driver_arms_match_distributed(spark):
          (2, 0, 9), (2, 2, 9), (2, 2, 8), (2, 3, 1)],
         "start long, step int, node long",
     )
-    assert rows_of(walk_cooccurrence(wdup, window=2)) == rows_of(
-        walk_cooccurrence(wdup, window=2, driver_gate_rows=0)
-    )
-
     # ALS arms on a ratings table with negative ratings + int keys
     rows = [
         (random.randrange(25), random.randrange(20),
@@ -1192,17 +1196,21 @@ def test_walk_pmi_als_driver_arms_match_distributed(spark):
         for _ in range(300)
     ]
     rdf = spark.createDataFrame(rows, "u int, i int, r double")
-    for gate in (None, 0):
-        uf, itf = als_factorize(
-            rdf, "u", "i", "r", rounds=2, reg=0.1, driver_gate_rows=gate
+
+    def dup_and_als():
+        uf, itf = als_factorize(rdf, "u", "i", "r", rounds=2, reg=0.1)
+        return (
+            rows_of(walk_cooccurrence(wdup, window=2)),
+            rows_of(uf),
+            rows_of(itf),
         )
-        if gate is None:
-            a = (rows_of(uf), rows_of(itf))
-        else:
-            assert (rows_of(uf), rows_of(itf)) == a
+
+    on = dup_and_als()
+    gate("0")
+    assert dup_and_als() == on
 
 
-def test_pagerank_driver_arm_matches_distributed(spark):
+def test_pagerank_driver_arm_matches_distributed(spark, monkeypatch):
     """The r16 gated pagerank driver fast path must return
     BIT-IDENTICAL rows to the distributed loop across every variant:
     weighted, dangling-redistributing, personalized, tol-converging,
@@ -1233,26 +1241,27 @@ def test_pagerank_driver_arm_matches_distributed(spark):
              checkpoint_every=1, redistribute_dangling=True,
              seed_nodes=["n1", "n5"], tol=1e-4),
     ]
-    for kw in cases:
-        assert rows_of(pagerank(df, **kw)) == rows_of(
-            pagerank(df, driver_gate_edges=0, **kw)
-        )
     rows2 = [
         (random.randrange(30), random.randrange(40),
          random.choice([None, 1, 3]))
         for _ in range(250)
     ]
     df2 = spark.createDataFrame(rows2, "src long, dst long, n int")
-    assert rows_of(
-        pagerank(df2, iterations=3, weight_col="n",
-                 redistribute_dangling=True)
-    ) == rows_of(
-        pagerank(df2, iterations=3, weight_col="n",
-                 redistribute_dangling=True, driver_gate_edges=0)
-    )
+
+    def run_all():
+        return [rows_of(pagerank(df, **kw)) for kw in cases] + [
+            rows_of(
+                pagerank(df2, iterations=3, weight_col="n",
+                         redistribute_dangling=True)
+            )
+        ]
+
+    on = run_all()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    assert run_all() == on
 
 
-def test_betweenness_eigenvector_labelprop_driver_arms(spark):
+def test_betweenness_eigenvector_labelprop_driver_arms(spark, monkeypatch):
     """r16 gated driver fast paths for betweenness_sampled,
     eigenvector_centrality and label_propagation must return
     BIT-IDENTICAL rows to the distributed arms, including absent
@@ -1275,29 +1284,21 @@ def test_betweenness_eigenvector_labelprop_driver_arms(spark):
         for _ in range(300)
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    assert rows_of(
-        betweenness_sampled(df, [0, 5, 11, 999], max_hops=12)
-    ) == rows_of(
-        betweenness_sampled(
-            df, [0, 5, 11, 999], max_hops=12, driver_gate_edges=0
-        )
-    )
-    for its in (1, 4):
-        assert rows_of(
-            label_propagation(df, iterations=its)
-        ) == rows_of(
-            label_propagation(df, iterations=its, driver_gate_edges=0)
-        )
     wrows = [
         (f"n{random.randrange(40)}", f"n{random.randrange(50)}",
          random.randrange(1, 7))
         for _ in range(300)
     ]
     edf = spark.createDataFrame(wrows, "src string, dst string, n long")
-    assert rows_of(
-        eigenvector_centrality(edf, iterations=3, weight_col="n")
-    ) == rows_of(
-        eigenvector_centrality(
-            edf, iterations=3, weight_col="n", driver_gate_edges=0
-        )
-    )
+
+    def run_all():
+        return [
+            rows_of(betweenness_sampled(df, [0, 5, 11, 999], max_hops=12)),
+            rows_of(label_propagation(df, iterations=1)),
+            rows_of(label_propagation(df, iterations=4)),
+            rows_of(eigenvector_centrality(edf, iterations=3, weight_col="n")),
+        ]
+
+    on = run_all()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    assert run_all() == on

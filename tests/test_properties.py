@@ -137,9 +137,11 @@ def test_connected_components_paths_agree(edges):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {(r.node, r.cluster_id, r.is_canonical)
             for r in connected_components(pairs).collect()}
-    dist = {(r.node, r.cluster_id, r.is_canonical)
-            for r in connected_components(
-                pairs, driver_gate_edges=0).collect()}
+    # hypothesis rejects function-scoped fixtures, so no monkeypatch
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+        dist = {(r.node, r.cluster_id, r.is_canonical)
+                for r in connected_components(pairs).collect()}
     assert fast == dist
 
     # reference closure: BFS over the undirected graph

@@ -275,11 +275,11 @@ def test_recsys_eval_coverage_hand_math(spark):
     assert r3["n_unscored"] == 1 and r3["novelty_bits"] is None
 
 
-def test_cf_driver_gate_parity(spark):
-    """The Arrow-collect driver twins of item_item_cosine (binary
-    mode, incl. the top-k prune) and recommend_items must reproduce
-    the distributed chains bit-for-bit — same fixture, gate on vs
-    forced off, exact frame equality."""
+def test_cf_driver_gate_parity(spark, monkeypatch):
+    """The Arrow-collect driver twin of item_item_cosine (binary
+    mode, incl. the top-k prune) must reproduce the distributed chain
+    bit-for-bit — same fixture, gate on vs forced off, exact frame
+    equality."""
     import pandas as pd
 
     import metadata_etl_framework_spark.ops.recsys as rx
@@ -297,20 +297,10 @@ def test_cf_driver_gate_parity(spark):
         topk = rx.item_item_cosine(
             df, "u", "it", min_cooc=2, shrinkage=5.0, top_k_per_item=3
         )
-        recs = rx.recommend_items(df, sims, "u", "it", top_n=3)
-        return (
-            sims.toPandas(),
-            topk.toPandas(),
-            recs.toPandas(),
-        )
+        return sims.toPandas(), topk.toPandas()
 
-    saved = rx.CF_DRIVER_MAX_ROWS
-    try:
-        rx.CF_DRIVER_MAX_ROWS = 2_000_000
-        on = _run()
-        rx.CF_DRIVER_MAX_ROWS = 0
-        off = _run()
-    finally:
-        rx.CF_DRIVER_MAX_ROWS = saved
+    on = _run()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    off = _run()
     for a, b in zip(on, off):
         pd.testing.assert_frame_equal(a, b, check_exact=True)

@@ -1042,14 +1042,13 @@ def test_holt_winters_gates(spark):
                               train_window=24, holdout=24)
 
 
-def test_spearman_robust_driver_gate_parity(spark):
+def test_spearman_robust_driver_gate_parity(spark, monkeypatch):
     """The Arrow-collect driver twins of spearman_corr and
     robust_moments must reproduce the distributed prefix-scan chains
     bit-for-bit — same fixture (heavy ties + an outlier), gate on vs
     forced off, exact frame equality."""
     import pandas as pd
 
-    import metadata_etl_framework_spark.ops.glm as glm
     from metadata_etl_framework_spark.functions.aggregations import (
         robust_moments,
     )
@@ -1063,19 +1062,14 @@ def test_spearman_robust_driver_gate_parity(spark):
         for i in range(400)
     ]
     df = spark.createDataFrame(rows, "a double, b double")
-    saved = glm.GLM_DRIVER_MAX_ROWS
-    try:
-        glm.GLM_DRIVER_MAX_ROWS = 2_000_000
-        on = (
+    def _run():
+        return (
             spearman_corr(df, "a", "b").toPandas(),
             robust_moments(df, "b", trim=0.1).toPandas(),
         )
-        glm.GLM_DRIVER_MAX_ROWS = 0
-        off = (
-            spearman_corr(df, "a", "b").toPandas(),
-            robust_moments(df, "b", trim=0.1).toPandas(),
-        )
-    finally:
-        glm.GLM_DRIVER_MAX_ROWS = saved
+
+    on = _run()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    off = _run()
     for a, b in zip(on, off):
         pd.testing.assert_frame_equal(a, b, check_exact=True)

@@ -238,7 +238,7 @@ def test_emd_6m_self_zero(spark, big):
     assert row.emd == 0.0 and row.n_ref == row.n_cur > 5_000_000
 
 
-def test_bpe_train_sf01_documents(spark):
+def test_bpe_train_sf01_documents(spark, gate_off):
     """BPE training over the full sf0.1 documents corpus (50k docs):
     the word-table collapse keeps per-merge work tiny regardless of
     corpus size; five merges must come back deterministic and ordered
@@ -247,14 +247,10 @@ def test_bpe_train_sf01_documents(spark):
     from metadata_etl_framework_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
-    # gate forced to 0: this stress pin exists to exercise the fully
+    # gate off: this stress pin exists to exercise the fully
     # DISTRIBUTED per-iteration loop (the driver-local path would
     # otherwise absorb a vocab this small)
-    merges = (
-        bpe_train(docs, n_merges=5, driver_gate_words=0)
-        .orderBy("merge_idx")
-        .collect()
-    )
+    merges = bpe_train(docs, n_merges=5).orderBy("merge_idx").collect()
     assert len(merges) == 5
     counts = [r.pair_count for r in merges]
     assert all(c >= 2 for c in counts)
@@ -282,7 +278,7 @@ def test_ks_binned_vs_exact_6m(spark, big):
     assert binned.err_bound < 0.05
 
 
-def test_dedup_chain_10m_end_to_end(spark):
+def test_dedup_chain_10m_end_to_end(spark, gate_off):
     """Round-7 verdict item 6: the flagship dedup chain at 100x shape —
     bloom_incremental_dedup -> minhash_near_dups -> connected_components
     -> leakage_safe_split over a 10M-doc synthetic corpus with every
@@ -336,7 +332,7 @@ def test_dedup_chain_10m_end_to_end(spark):
     assert_scale_safe(pairs)
     assert pairs.count() == 10_000  # one leader pair per 1000 docs
 
-    clusters = connected_components(pairs, driver_gate_edges=0).persist()
+    clusters = connected_components(pairs).persist()
     assert clusters.count() == 20_000
     assert clusters.filter("is_canonical").count() == 10_000
 

@@ -2481,7 +2481,7 @@ def test_louvain_two_level_acceptance_both_directions(spark):
     assert abs(q_of(tri, louvain_two_level(tri, rounds=4)) - 0.357142) < 1e-6
 
 
-def test_move_rounds_driver_arm_matches_distributed(spark):
+def test_move_rounds_driver_arm_matches_distributed(spark, monkeypatch):
     """The gated driver fast path (r16: _move_rounds_py /
     _louvain_driver_py under _DRIVER_MOVE_MAX_EDGES) must return
     BIT-IDENTICAL labels to the distributed rounds — same scores,
@@ -2513,25 +2513,25 @@ def test_move_rounds_driver_arm_matches_distributed(spark):
     def rows_of(df):
         return sorted(map(tuple, df.collect()))
 
-    for g in (ring, tri):
-        assert rows_of(louvain_two_level(g, rounds=4)) == rows_of(
-            louvain_two_level(g, rounds=4, driver_gate_edges=0)
-        )
-        assert rows_of(greedy_modularity_move(g, rounds=4)) == rows_of(
-            greedy_modularity_move(g, rounds=4, driver_gate_edges=0)
-        )
     start = ring.select(F.col("src").alias("node")).union(
         ring.select(F.col("dst"))
     ).distinct().select(
         "node", (F.col("node") % 3).alias("community")
     )
-    assert rows_of(
-        greedy_modularity_move(ring, rounds=3, labels=start)
-    ) == rows_of(
-        greedy_modularity_move(
-            ring, rounds=3, labels=start, driver_gate_edges=0
+
+    def run_all():
+        out = []
+        for g in (ring, tri):
+            out.append(rows_of(louvain_two_level(g, rounds=4)))
+            out.append(rows_of(greedy_modularity_move(g, rounds=4)))
+        out.append(
+            rows_of(greedy_modularity_move(ring, rounds=3, labels=start))
         )
-    )
+        return out
+
+    on = run_all()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    assert run_all() == on
 
 
 def test_exact_pico_sums_row_hint_single_level_parity(spark):
@@ -2834,14 +2834,13 @@ def test_embedding_mmd_rff_properties(spark):
     assert nul["mmd2"] is None and nul["n_cur"] == 0
 
 
-def test_cox_driver_pass_gate_parity(spark):
+def test_cox_driver_pass_gate_parity(spark, monkeypatch):
     """The Arrow-collect driver pass (_cox_pass_np) must reproduce
     the distributed grouped-aggregation + window pass bit-for-bit —
     same fixture, gate on vs forced off, exact frame equality, for
     the single-covariate, multi-covariate and stratified forms."""
     import pandas as pd
 
-    import metadata_etl_framework_spark.ops.glm as glm
     from metadata_etl_framework_spark.ops.retention import (
         cox_ph,
         cox_ph_multi,
@@ -2867,13 +2866,9 @@ def test_cox_driver_pass_gate_parity(spark):
             df, "t", "e", ["x1", "x2"], iterations=3, strata_col="g"
         ),
     ]
-    saved = glm.GLM_DRIVER_MAX_ROWS
-    try:
-        for make in cases:
-            glm.GLM_DRIVER_MAX_ROWS = 2_000_000
-            on = make().toPandas()
-            glm.GLM_DRIVER_MAX_ROWS = 0
-            off = make().toPandas()
-            pd.testing.assert_frame_equal(on, off, check_exact=True)
-    finally:
-        glm.GLM_DRIVER_MAX_ROWS = saved
+    on = [make().toPandas() for make in cases]
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
+    for make, want in zip(cases, on):
+        pd.testing.assert_frame_equal(
+            make().toPandas(), want, check_exact=True
+        )
