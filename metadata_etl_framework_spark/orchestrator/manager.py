@@ -6,9 +6,15 @@ validate → run record → extract → transform → load → DQ validate → S
 finalize, with retry and failure handling.
 
 Spark-first difference (SURVEY §3.1): extraction and transformation
-build ONE lazy DataFrame DAG; the only actions happen at load (write)
-and DQ (aggregate). Per-step row accounting uses observe() metrics so
-it costs nothing extra at the terminal action (SURVEY §7.3).
+build ONE lazy DataFrame DAG, and the load's write is the only action
+that computes it. The pipeline's DQ rules ride that write as one
+``observe()`` (SURVEY §7.3): validation reads the rule counts, and
+LOAD_LOG its ``rows_written``, from the write job instead of recomputing
+the DAG. Only the dataset rules that need a pass of their own
+(duplicates, distinct counts, referential integrity, distribution
+samples) launch further jobs. TRANSFORM_LOG records per-step timings;
+its ``rows_out`` stays NULL, because per-step counts would need an
+``observe()`` per step.
 """
 
 from __future__ import annotations
@@ -17,14 +23,22 @@ import logging
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from metadata_etl_framework_spark.catalog.store import ConfigLoader, MetadataStore
 from metadata_etl_framework_spark.monitoring.alerts import AlertManager
 from metadata_etl_framework_spark.monitoring.audit import AuditLogger
 from metadata_etl_framework_spark.monitoring.sla import SLAMonitor
 from metadata_etl_framework_spark.operators import TransformEngine
-from metadata_etl_framework_spark.quality.rules import evaluate_rules, quality_score
+from metadata_etl_framework_spark.quality.rules import (
+    evaluate_rules,
+    quality_score,
+    rule_aggregates,
+)
+from metadata_etl_framework_spark.sources.file_connector import (
+    FileConnector,
+    _infer_format,
+)
 from metadata_etl_framework_spark.sources.registry import create_connector
 from metadata_etl_framework_spark.utils.error_recovery import (
     classify_error,
@@ -50,6 +64,24 @@ def _substitute_params(obj, params: "dict[str, object]"):
     if isinstance(obj, list):
         return [_substitute_params(v, params) for v in obj]
     return obj
+
+
+def _target_format(tc: dict) -> "str | None":
+    return tc["target_type"] if tc["target_type"] != "file" else None
+
+
+def _observing_target(targets: "list[dict]") -> "dict | None":
+    """The first target whose write is sure to run the result's query:
+    an ``ignore``-mode write skips it when the target exists (its
+    observation would read 0 rows), and the excel sink collects to the
+    driver instead of writing from the plan."""
+    for tc in targets:
+        if str(tc.get("load_type", "overwrite")).lower() == "ignore":
+            continue
+        if _infer_format(tc["parameters"]["path"], _target_format(tc)) == "excel":
+            continue
+        return tc
+    return None
 
 
 class OrchestratorManager:
@@ -100,8 +132,8 @@ class OrchestratorManager:
         try:
             sources = self._retry(lambda: self._extract(run_id, config))
             result = self._retry(lambda: self._transform(run_id, config, sources))
-            self._retry(lambda: self._load(run_id, config, result))
-            dq_report = self._validate_dq(run_id, config, result)
+            dq_metrics = self._retry(lambda: self._load(run_id, config, result))
+            dq_report = self._validate_dq(config, result, dq_metrics)
             run = self._finalize(run_id, "SUCCESS")
             sla_results = self.sla.record_run(
                 run_id, pipeline_id, config.get("slas", []),
@@ -148,14 +180,14 @@ class OrchestratorManager:
         """
         done: set[str] = set()
         if resume:
-            for r in self.store.query("SELECT * FROM PIPELINE_RUNS"):
-                if (
-                    r.get("status") == "SUCCESS"
-                    and str(r.get("triggered_by", "")).startswith(
-                        f"backfill:{pipeline_id}:"
-                    )
-                ):
-                    done.add(str(r["triggered_by"]))
+            done = {
+                r["triggered_by"]
+                for r in self.store.query(
+                    "SELECT triggered_by FROM PIPELINE_RUNS "
+                    "WHERE status = 'SUCCESS' AND triggered_by LIKE ?",
+                    (f"backfill:{pipeline_id}:%",),
+                )
+            }
         succeeded, skipped, failed, runs = 0, 0, [], []
         for pv in partition_values:
             marker = f"backfill:{pipeline_id}:{pv}"
@@ -241,29 +273,47 @@ class OrchestratorManager:
                 )
         return result
 
-    def _load(self, run_id: int, config: dict, result: DataFrame) -> None:
-        from metadata_etl_framework_spark.sources.file_connector import FileConnector
-
+    def _load(
+        self, run_id: int, config: dict, result: DataFrame
+    ) -> "dict[str, Any] | None":
+        """Write ``result`` to every target. The pipeline's DQ aggregates
+        ride the write of the first target that runs its query as one
+        ``observe()``; returns their values, or None when no write
+        carried them. Called once per retry attempt, so every attempt
+        builds a fresh (single-use) Observation."""
+        rules = config.get("dq_rules", [])
+        carrier = _observing_target(config["targets"]) if rules else None
+        metrics = None
         for tc in config["targets"]:
             t0 = time.monotonic()
             params = dict(tc["parameters"])
             path = params.pop("path")
+            out, observation = result, None
+            if tc is carrier:
+                # observe is the last node before the write, so the
+                # metrics are collected in the write's result stage
+                observation = Observation()
+                out = result.observe(
+                    observation, *rule_aggregates(rules, result.columns)
+                )
             FileConnector(self.spark).write(
-                result,
+                out,
                 path,
-                fmt=tc["target_type"] if tc["target_type"] != "file" else None,
+                fmt=_target_format(tc),
                 mode=tc.get("load_type", "overwrite"),
                 **params,
             )
-            # rows_written would cost an extra job (re-read + count); the
-            # TRANSFORM_LOG observe() metrics already carry rows_out
+            rows_written = None
+            if observation is not None:
+                metrics = observation.get
+                rows_written = metrics["_total"]
             self.store.insert(
                 "LOAD_LOG",
                 {
                     "run_id": run_id,
                     "target_name": tc["target_name"],
                     "status": "OK",
-                    "rows_written": None,
+                    "rows_written": rows_written,
                     "duration_sec": time.monotonic() - t0,
                 },
             )
@@ -284,12 +334,15 @@ class OrchestratorManager:
                     tc["target_name"],
                     exc_info=True,
                 )
+        return metrics
 
-    def _validate_dq(self, run_id: int, config: dict, result: DataFrame) -> dict:
+    def _validate_dq(
+        self, config: dict, result: DataFrame, metrics: "dict[str, Any] | None"
+    ) -> dict:
         rules = config.get("dq_rules", [])
         if not rules:
             return {"score": None, "row_count": None, "results": []}
-        results = evaluate_rules(result, rules)
+        results = evaluate_rules(result, rules, metrics=metrics)
         score = quality_score(results)
         row_count = results[0].total_rows if results else None
         return {

@@ -6,8 +6,13 @@ src/quality/dq_engine.py:70-140. Each reference check ran its own full
 pass over a materialized frame; here every rule compiles to a *failure
 mask* Column and ALL masks for a dataset are evaluated in ONE aggregation
 pass (SURVEY §2.10 design note) — at 100 TB that is the difference
-between 1 scan and N scans. Failure samples come from one additional
-filtered, limited scan per rule only when requested.
+between 1 scan and N scans. :func:`rule_aggregates` builds that pass's
+aggregate list once: standalone, :func:`evaluate_rules` runs it as one
+``df.agg``; in a pipeline run the orchestrator attaches the same list to
+the load's write as one ``DataFrame.observe``, so validation reads its
+counts from the write job and launches none of its own. Failure samples
+come from one additional filtered, limited scan per rule only when
+requested.
 
 Rule dict shape (metadata-plane compatible):
     {"name": ..., "type": <rule type>, "column": ..., ...params}
@@ -16,9 +21,11 @@ Supported types: not_null, value_range, regex_pattern, allowed_values,
 date_format, email_format, phone_format, cross_field, sum_equals,
 date_sequence, calculated_field, freshness, future_dates, data_type,
 required_fields, expression (raw SQL boolean — failure when NOT satisfied).
-Dataset-level types handled by evaluate_rules separately:
-primary_key_unique, duplicate_rows, unique_count, referential_integrity,
-completeness_score, correlation, statistical_distribution.
+Dataset-level types: completeness_score and correlation are answered by
+the shared aggregation pass too; primary_key_unique, duplicate_rows,
+unique_count (a DISTINCT aggregate, which ``observe`` rejects),
+referential_integrity and statistical_distribution each run one pass of
+their own and take the row total from the shared one.
 """
 
 from __future__ import annotations
@@ -131,55 +138,93 @@ _DATASET_TYPES = {
 }
 
 
+def rule_aggregates(
+    rules: Sequence[dict[str, Any]], columns: Sequence[str]
+) -> list[Column]:
+    """The one aggregation pass behind :func:`evaluate_rules`.
+
+    ``_total`` (the row count), then per rule ``i``: a row rule's failure
+    count ``_r{i}``, a completeness_score rule's null count per column
+    ``_r{i}_{k}`` (``columns`` are the frame's, used when the rule names
+    none), a correlation rule's ``corr`` as ``_r{i}``. Every entry is a
+    plain aggregate, so the list runs as ``df.agg`` or rides a write as
+    ``df.observe``; the other dataset rules get nothing here.
+    """
+    aggs = [F.count(F.lit(1)).alias("_total")]
+    for i, rule in enumerate(rules):
+        rtype = rule["type"]
+        if rtype not in _DATASET_TYPES:
+            aggs.append(F.sum(compile_rule(rule).cast("long")).alias(f"_r{i}"))
+        elif rtype == "completeness_score":
+            aggs += [
+                F.sum(F.col(c).isNull().cast("long")).alias(f"_r{i}_{k}")
+                for k, c in enumerate(rule.get("columns") or columns)
+            ]
+        elif rtype == "correlation":
+            aggs.append(F.corr(rule["column1"], rule["column2"]).alias(f"_r{i}"))
+    return aggs
+
+
 def evaluate_rules(
     df: DataFrame,
     rules: Sequence[dict[str, Any]],
     refs: dict[str, DataFrame] | None = None,
     sample_failures: int = 0,
     threshold_pct: float = 100.0,
+    metrics: dict[str, Any] | None = None,
 ) -> list[RuleResult]:
-    """Evaluate all rules in one aggregation pass (+1 scan per dataset rule).
+    """Evaluate all rules: row rules first, then dataset rules.
+
+    Every row rule, completeness_score and correlation is answered by the
+    one aggregation pass of :func:`rule_aggregates`; ``metrics`` is that
+    pass's result when the caller already has it (the orchestrator
+    observes it on the load's write), else it runs here as one ``df.agg``.
+    primary_key_unique, duplicate_rows, unique_count,
+    referential_integrity and statistical_distribution add one pass each.
 
     ``threshold_pct`` (per-rule override key ``threshold``) is the minimum
     pass percentage (reference semantics: rules pass if pass% ≥ threshold).
     """
-    row_rules = [r for r in rules if r["type"] not in _DATASET_TYPES]
-    ds_rules = [r for r in rules if r["type"] in _DATASET_TYPES]
-
-    masks = [(r, compile_rule(r)) for r in row_rules]
-    aggs = [F.count(F.lit(1)).alias("_total")] + [
-        F.sum(mask.cast("long")).alias(f"_fail_{i}") for i, (_, mask) in enumerate(masks)
-    ]
+    if not rules:
+        return []
+    if metrics is None:
+        metrics = df.agg(*rule_aggregates(rules, df.columns)).collect()[0].asDict()
+    total = metrics["_total"]
     results: list[RuleResult] = []
-    if masks:
-        row = df.agg(*aggs).collect()[0]
-        total = row["_total"]
-        for i, (rule, mask) in enumerate(masks):
-            failed = int(row[f"_fail_{i}"] or 0)
-            score = 100.0 * (total - failed) / total if total else 100.0
-            samples = None
-            if sample_failures and failed:
-                samples = [
-                    r.asDict() for r in df.filter(mask).limit(sample_failures).collect()
-                ]
-            results.append(
-                RuleResult(
-                    rule_name=rule.get("name", rule["type"]),
-                    rule_type=rule["type"],
-                    total_rows=total,
-                    failed_rows=failed,
-                    passed=score >= float(rule.get("threshold", threshold_pct)),
-                    score=score,
-                    samples=samples,
-                )
+    for i, rule in enumerate(rules):
+        if rule["type"] in _DATASET_TYPES:
+            continue
+        failed = int(metrics[f"_r{i}"] or 0)
+        score = 100.0 * (total - failed) / total if total else 100.0
+        samples = None
+        if sample_failures and failed:
+            samples = [
+                r.asDict()
+                for r in df.filter(compile_rule(rule)).limit(sample_failures).collect()
+            ]
+        results.append(
+            RuleResult(
+                rule_name=rule.get("name", rule["type"]),
+                rule_type=rule["type"],
+                total_rows=total,
+                failed_rows=failed,
+                passed=score >= float(rule.get("threshold", threshold_pct)),
+                score=score,
+                samples=samples,
             )
-    for rule in ds_rules:
-        results.append(_evaluate_dataset_rule(df, rule, refs or {}))
+        )
+    for i, rule in enumerate(rules):
+        if rule["type"] in _DATASET_TYPES:
+            results.append(_evaluate_dataset_rule(df, rule, i, metrics, refs or {}))
     return results
 
 
 def _evaluate_dataset_rule(
-    df: DataFrame, rule: dict[str, Any], refs: dict[str, DataFrame]
+    df: DataFrame,
+    rule: dict[str, Any],
+    i: int,
+    metrics: dict[str, Any],
+    refs: dict[str, DataFrame],
 ) -> RuleResult:
     from metadata_etl_framework_spark.functions import (
         duplicate_rows as dup_rows_fn,
@@ -188,7 +233,7 @@ def _evaluate_dataset_rule(
 
     rtype = rule["type"]
     name = rule.get("name", rtype)
-    total = df.count()
+    total = metrics["_total"]
     if rtype in ("primary_key_unique", "duplicate_rows"):
         keys = rule.get("columns") or [rule["column"]]
         failed = dup_rows_fn(df, keys).count()
@@ -203,15 +248,10 @@ def _evaluate_dataset_rule(
             df, ref, rule["column"], rule["ref_column"]
         ).count()
     elif rtype == "completeness_score":
-        cols = rule.get("columns") or df.columns
-        row = df.agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in cols],
-        ).collect()[0]
-        n = row["_n"]
-        null_cells = sum(int(row[c] or 0) for c in cols)
-        score = 100.0 * (1 - null_cells / (n * len(cols))) if n else 100.0
-        return RuleResult(name, rtype, n, null_cells,
+        n_cols = len(rule.get("columns") or df.columns)
+        null_cells = sum(int(metrics[f"_r{i}_{k}"] or 0) for k in range(n_cols))
+        score = 100.0 * (1 - null_cells / (total * n_cols)) if total else 100.0
+        return RuleResult(name, rtype, total, null_cells,
                           score >= float(rule.get("threshold", 100.0)), score)
     elif rtype == "statistical_distribution":
         # Shapiro-Wilk normality test on a bounded driver-side sample
@@ -248,7 +288,7 @@ def _evaluate_dataset_rule(
         failed = 0 if ok else total // 2
         return RuleResult(name, rtype, total, failed, ok, 100.0 if ok else 50.0)
     elif rtype == "correlation":
-        corr = df.agg(F.corr(rule["column1"], rule["column2"])).collect()[0][0] or 0.0
+        corr = metrics[f"_r{i}"] or 0.0
         ok = abs(corr) >= float(rule.get("min_abs_corr", 0.0))
         return RuleResult(name, rtype, total, 0, ok, abs(corr) * 100.0)
     else:  # pragma: no cover

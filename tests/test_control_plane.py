@@ -863,6 +863,42 @@ def test_backfill_params_resume_and_failure(spark, store, tmp_path):
     assert spark.read.parquet(f"{out}/day=2024-01-03").count() == 3
 
 
+def test_backfill_resume_skips_only_this_pipelines_successes(spark, store, tmp_path):
+    """Resume skips the partition that already has a SUCCESS run under
+    this pipeline's marker, and still runs the rest: a FAILED run of the
+    same marker and a SUCCESS run of another pipeline do not count."""
+    base = str(tmp_path / "in")
+    for day in ("d1", "d2", "d3"):
+        spark.createDataFrame(
+            [(day, i) for i in range(3)], "day string, id int"
+        ).write.parquet(f"{base}/{day}")
+    out = str(tmp_path / "out")
+    pid = store.register_pipeline("resume_daily")
+    store.register_source(pid, "src", "parquet", {"path": f"{base}/{{partition}}"})
+    store.register_transformation(
+        pid, steps=[{"type": "filter", "config": {"condition": "id >= 0"}}],
+        primary_source="src",
+    )
+    store.register_target(pid, "out", "parquet", {"path": f"{out}/{{partition}}"})
+    other = store.register_pipeline("other")
+    for owner, status, day in ((pid, "FAILED", "d2"), (other, "SUCCESS", "d3")):
+        store.insert("PIPELINE_RUNS", {"pipeline_id": owner, "status": status,
+                                       "triggered_by": f"backfill:{owner}:{day}"})
+
+    mgr = OrchestratorManager(spark, store, max_attempts=1)
+    assert mgr.backfill(pid, ["d1"])["succeeded"] == 1
+    res = mgr.backfill(pid, ["d1", "d2", "d3"])
+    assert res["skipped"] == 1 and res["succeeded"] == 2 and res["failed"] == []
+    ran = store.query(
+        "SELECT triggered_by FROM PIPELINE_RUNS WHERE trigger_type = 'backfill' "
+        "ORDER BY run_id"
+    )
+    assert [r["triggered_by"] for r in ran] == [
+        f"backfill:{pid}:d1", f"backfill:{pid}:d2", f"backfill:{pid}:d3"
+    ]
+    assert spark.read.parquet(f"{out}/d3").count() == 3
+
+
 def test_rest_backfill_route(spark, store, tmp_path):
     """Round-8: POST /pipelines/<id>/backfill drives the parameterized
     backfill through the REST surface."""
