@@ -1916,41 +1916,26 @@ def robust_moments(
         F.col(value_col).cast("double").alias("_x")
     )
     from metadata_etl_framework_spark.ops.driver_exact import (
-        driver_gates_enabled,
+        column_np,
+        driver_table,
     )
     from metadata_etl_framework_spark.ops.glm import (
         GLM_DRIVER_MAX_ROWS,
     )
 
-    if driver_gates_enabled():
-        # bounded driver fast path (the GLM trainer convention): ONE
-        # Arrow transfer of the single double column; the per-value
-        # counts, dual prefix scans, clamp-overlap trimmed sums and
-        # the MAD second scan run as exact integer/6-dp arithmetic —
-        # np.unique groups and orders the 6-dp values exactly like
-        # the distributed groupBy + value-ordered scan, so the twin
-        # is bit-exact by construction (order-free: the twin groups
-        # by value, so limit's row order is irrelevant). Non-finite
-        # values or out-of-bound micro-int magnitudes fall through to
-        # the unchanged distributed chain. The gate probe IS the
-        # transfer: limit(cap+1) collects at most cap+1 rows, so no
-        # separate full-count job is paid — above the gate the limit
-        # scan short-circuits and the distributed chain runs with
-        # zero extra passes.
+    # exact: np.unique groups and orders the 6-dp values like the
+    # distributed groupBy + value-ordered scan (order-free, so the
+    # limit probe may transfer); non-finite values or out-of-bound
+    # micro-int magnitudes fall back to the distributed chain
+    tbl = driver_table(base, GLM_DRIVER_MAX_ROWS)
+    if tbl is not None and tbl.num_rows > 0:
         import numpy as np
 
-        tbl = base.limit(GLM_DRIVER_MAX_ROWS + 1).toArrow()
-        if 0 < tbl.num_rows <= GLM_DRIVER_MAX_ROWS:
-            xs = (
-                tbl.column("_x")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
-            out = _robust_moments_driver(
-                df.sparkSession, xs, float(trim)
-            )
-            if out is not None:
-                return out
+        out = _robust_moments_driver(
+            df.sparkSession, column_np(tbl, "_x", np.float64), float(trim)
+        )
+        if out is not None:
+            return out
 
     v6 = F.round(F.col(value_col).cast("double"), 6)
     counts = (

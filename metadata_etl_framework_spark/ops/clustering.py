@@ -239,25 +239,17 @@ def gmm2_train(
         base.unpersist()
         raise ValueError("gmm2_train: need >= 2 non-null rows")
     from metadata_etl_framework_spark.ops.driver_exact import (
-        driver_gates_enabled,
+        column_np,
+        driver_table,
     )
     from metadata_etl_framework_spark.ops.glm import GLM_DRIVER_MAX_ROWS
 
-    if driver_gates_enabled() and n <= GLM_DRIVER_MAX_ROWS:
-        # bounded driver fast path (the GLM trainer convention,
-        # ops/glm.py::GLM_DRIVER_MAX_ROWS): ONE Arrow transfer of the
-        # single double column, then the 2 init passes + EM rounds run
-        # vectorized on the exact pico-int twins — versus one full
-        # aggregation job per pass at the benched scale. Above the
-        # gate the distributed passes below are unchanged.
+    tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n)
+    if tbl is not None:
+        # the 2 init passes + EM rounds on the exact pico-int twins
         import numpy as np
 
-        xs = (
-            base.toArrow()
-            .column("_x")
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64)
-        )
+        xs = column_np(tbl, "_x", np.float64)
         base.unpersist()
         return _gmm2_frame(
             df.sparkSession,

@@ -21,9 +21,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
-from metadata_etl_framework_spark.ops.driver_exact import (
-    driver_gates_enabled,
-)
+from metadata_etl_framework_spark.ops.driver_exact import driver_table
 from metadata_etl_framework_spark.ops.text import fingerprint
 
 
@@ -536,17 +534,17 @@ def connected_components(
     textbook hash-min / "small-star" iteration (CC-MR, Vassilvitskii et
     al.), not a port.
 
-    Small-graph fast path: pair sets up to ``CC_DRIVER_MAX_EDGES`` are
-    fetched via Arrow (``toPandas`` — columnar transfer, no per-row
-    Row-object overhead) and closed with driver-side union-find (path
-    compression + union by min, O(E α(E))). Real driver cost is the
-    pandas frame (~16 B/edge for numeric ids) plus the Python dict the
-    union-find builds over touched NODES (~100 B/entry with boxed ints)
-    — the 500k-edge gate stays well under ~100 MB of driver heap
-    even for string ids. Near-dup pair lists are edge-sparse even for
-    huge corpora (they're post-verification similarity hits, not raw
-    candidates), so this path covers most real runs and skips the
-    multi-round shuffle loop entirely; anything over the gate, or any
+    Small-graph fast path: pair sets up to ``CC_DRIVER_MAX_EDGES`` cross
+    the ``driver_table`` seam as one Arrow table and are closed with
+    driver-side union-find (path compression + union by min,
+    O(E α(E))). Real driver cost is the Arrow table (~16 B/edge for
+    numeric ids) plus the Python dict the union-find builds over
+    touched NODES (~100 B/entry with boxed ints) — the 500k-edge gate
+    stays well under ~100 MB of driver heap even for string ids.
+    Near-dup pair lists are edge-sparse even for huge corpora (they're
+    post-verification similarity hits, not raw candidates), so this
+    path covers most real runs and skips the multi-round shuffle loop
+    entirely; anything over the gate, or any
     run with ``SPARK_GRAFT_DRIVER_GATE=0``, takes the fully-distributed
     iteration, same results. The gate's count() is an
     action either path needs to materialize the pair computation once.
@@ -554,7 +552,8 @@ def connected_components(
     half = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
     n_edges = half.count()
     out_type = half.schema["u"].dataType
-    if driver_gates_enabled() and n_edges <= CC_DRIVER_MAX_EDGES:
+    tbl = driver_table(half, CC_DRIVER_MAX_EDGES, size=n_edges)
+    if tbl is not None:
         parent: dict = {}
 
         def find(x):
@@ -566,8 +565,9 @@ def connected_components(
             return r
 
         nodes = set()
-        pdf = half.toPandas()  # Arrow columnar fetch, no Row-object blowup
-        for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+        for u, v in zip(
+            tbl.column("u").to_pylist(), tbl.column("v").to_pylist()
+        ):
             nodes.add(u)
             nodes.add(v)
             ru, rv = find(u), find(v)

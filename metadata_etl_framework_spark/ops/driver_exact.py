@@ -1,11 +1,17 @@
-"""Exact driver-side replicas of the engine's pinned numeric kernels.
+"""The one seam into a driver twin, plus exact driver-side replicas of
+the engine's pinned numeric kernels.
 
-The gated driver fast paths (the ``connected_components`` union-find /
-Louvain move-round convention: a bounded collect under a measured gate,
-the fully-distributed arm unchanged above it) must return results
-BIT-IDENTICAL to the distributed plans they replace. The distributed
-plans pin three numeric behaviors that a naive NumPy port would get
-wrong; this module centralizes their exact driver-side equivalents:
+Every driver twin (a bounded NumPy/Python replica of a distributed
+operator, run on the driver when its input is small) enters through
+:func:`driver_table`: it reads the gate, checks the input against the
+twin's cap, and hands the input over as ONE Arrow table — or returns
+None, and the caller runs its distributed arm. No operator reads the
+gate or transfers a twin's input any other way.
+
+The twins must return results BIT-IDENTICAL to the distributed plans
+they replace. The distributed plans pin three numeric behaviors that a
+naive NumPy port would get wrong; this module centralizes their exact
+driver-side equivalents:
 
 1. ``spark_round`` — Spark's ``F.round(double, s)``: HALF_UP applied to
    the SHORTEST decimal representation of the double
@@ -25,9 +31,9 @@ wrong; this module centralizes their exact driver-side equivalents:
    ``x < 2^31`` so ``x · 2654435761 < 2^62.4``, and the second multiply
    takes a ``< 2^32`` operand to ``< 2^58.2``.
 
-Everything here is plain NumPy + ``decimal`` — no Spark imports — so
-the ops modules can unit-test the kernels against their distributed
-twins directly.
+Everything here is plain NumPy + ``decimal`` — no Spark imports (the
+seam only calls methods of the frame it is given) — so the ops modules
+can unit-test the kernels against their distributed twins directly.
 """
 
 from __future__ import annotations
@@ -39,6 +45,8 @@ import numpy as np
 
 __all__ = [
     "driver_gates_enabled",
+    "driver_table",
+    "column_np",
     "spark_round",
     "spark_round_f64",
     "round_half_up_int64",
@@ -52,18 +60,51 @@ __all__ = [
 def driver_gates_enabled() -> bool:
     """True unless ``SPARK_GRAFT_DRIVER_GATE=0``.
 
-    The one switch for every driver fast path: each bounded twin
-    runs only when this returns True AND its input fits the module
-    constant that caps it (the ``*_DRIVER_MAX_*`` bounds); no operator
-    takes a per-call gate parameter. With the env var set to 0 every
-    twin is skipped and the DISTRIBUTED arms run — the plans that
-    execute at fact scale — which is how the bench's ``gate_off``
-    block and the tests' ``gate_off`` fixture select that arm.
-    Read at call time (not import time) so the bench can flip it
-    between timing blocks inside one process. Results are identical
-    either way — the twins are bit-exact replicas; only the execution
-    venue changes."""
+    The one switch for every driver twin, read by :func:`driver_table`
+    — the only way into a twin (the two in-process array hand-offs
+    between graph twins also read it). With the env var set to 0
+    every twin is skipped and the DISTRIBUTED arms run — the plans
+    that execute at fact scale — which is how the bench's ``gate_off``
+    block and the tests' ``gate_off`` fixture select that arm. Read at
+    call time (not import time) so the bench can flip it between
+    timing blocks inside one process. Results are identical either
+    way — the twins are bit-exact replicas; only the execution venue
+    changes."""
     return os.environ.get("SPARK_GRAFT_DRIVER_GATE", "1") != "0"
+
+
+def driver_table(df, cap: int, size=None):
+    """The input of a driver twin as ONE Arrow table, or None when the
+    twin must not run: the gate is off, or the input is larger than
+    ``cap`` (the twin's ``*_DRIVER_MAX_*`` constant). On None the
+    caller runs its distributed arm.
+
+    ``size`` is the caller's measure of the input, compared with
+    ``cap`` before any transfer:
+
+    - an int the call site already computed (a count its distributed
+      arm needs anyway), so the probe costs no job;
+    - a zero-argument callable, evaluated only when the gate is on,
+      so a count that only feeds the gate costs no job with it off;
+    - None: the probe IS the transfer — ``limit(cap + 1)`` collects at
+      most cap + 1 rows, and more than ``cap`` means None. Only twins
+      that do not depend on row order may use this form."""
+    if not driver_gates_enabled():
+        return None
+    if size is None:
+        tbl = df.limit(cap + 1).toArrow()
+        return tbl if tbl.num_rows <= cap else None
+    if callable(size):
+        size = size()
+    return df.toArrow() if size <= cap else None
+
+
+def column_np(tbl, name: str, dtype=None) -> "np.ndarray":
+    """Column ``name`` of an Arrow table as one NumPy array (numeric
+    nulls arrive as NaN); with ``dtype``, a writable copy of that
+    type."""
+    arr = tbl.column(name).to_numpy(zero_copy_only=False)
+    return arr if dtype is None else arr.astype(dtype)
 
 
 _M31 = 2147483648  # 2^31

@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
-    driver_gates_enabled,
+    column_np,
+    driver_table,
 )
 from metadata_etl_framework_spark.ops.exact_agg import exact_pico_sums
 
@@ -88,30 +89,17 @@ def _solve(h: "list[list[float]]", g: "list[float]") -> "list[float]":
 
 
 # --------------------------------------------------------------------------
-# Driver fast path (the ALS / graph move-round convention): at or under
-# GLM_DRIVER_MAX_ROWS usable rows, the (_y, _x…) projection transfers in
-# ONE bounded Arrow collect (d ≤ max_features+1 double columns) and every
-# IRLS/EM/scoring pass runs vectorized on the driver in milliseconds —
-# versus one full aggregation job per pass at the benched scale (each
-# pass was 0.8–2 s of scan + exact-agg + job scheduling at sf0.1 on
-# local[32]). The numeric kernels are the exact driver twins of the
+# Driver twin cap: at or under GLM_DRIVER_MAX_ROWS usable rows the
+# projected (_y, _x…) frame — every cast/filter/hash already applied in
+# Spark — crosses the driver_table seam once, and every IRLS/EM/scoring
+# pass runs vectorized on the driver in milliseconds, versus one full
+# aggregation job per pass at the benched scale (0.8–2 s each at sf0.1
+# on local[32]). The numeric kernels are the exact driver twins of the
 # pico-int pipeline (ops/driver_exact.py: HALF_UP-on-shortest-decimal
-# rounding, exact big-int sums), so the arms reproduce the distributed
-# loops bit-for-bit and are parity-tested against them with the gate
-# toggled (tests/test_glm.py). Above the gate the distributed passes are
-# unchanged — the right plan at fact scale, where a collect would be the
-# bug, not the optimization.
+# rounding, exact big-int sums), so the arms agree bit-for-bit with the
+# gate toggled (tests/test_glm.py). Above the cap the distributed passes
+# run — the right plan at fact scale.
 GLM_DRIVER_MAX_ROWS = 2_000_000
-
-
-def _driver_arrays(base: DataFrame, cols: "list[str]") -> dict:
-    """One bounded Arrow transfer of the projected trainer frame —
-    every cast/filter/hash already happened in Spark, so the arrays
-    hold exactly the doubles the distributed passes would see."""
-    tbl = base.toArrow()
-    return {
-        c: tbl.column(c).to_numpy(zero_copy_only=False) for c in cols
-    }
 
 
 def _np_sigmoid(z):
@@ -583,20 +571,12 @@ def logistic_cv(
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("logistic_cv: no usable rows")
-        if driver_gates_enabled() and n_rows <= GLM_DRIVER_MAX_ROWS:
-            # bounded driver fast path (gate rationale at
-            # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
-            # up to the exp/log kernels (parity-tested on the benched
-            # data with the gate toggled)
+        tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_rows)
+        if tbl is not None:
+            # bit-identical to the passes below up to the exp/log
+            # kernels (parity-tested with the gate toggled)
             met = _logistic_cv_driver(
-                _driver_arrays(
-                    base,
-                    ["_fold", "_y"] + [f"_x{j}" for j in range(1, d)],
-                ),
-                d,
-                folds,
-                int(iterations),
-                ridge_i,
+                tbl, d, folds, int(iterations), ridge_i
             )
             return _logistic_cv_frame(df.sparkSession, met)
         for _ in range(int(iterations)):
@@ -727,7 +707,7 @@ def _logistic_cv_frame(spark, met: "dict[int, dict[str, int]]") -> DataFrame:
 
 
 def _logistic_cv_driver(
-    arrs: dict,
+    tbl,
     d: int,
     folds: "list[int]",
     iterations: int,
@@ -748,9 +728,11 @@ def _logistic_cv_driver(
         round_half_up_int64,
     )
 
-    fold = arrs["_fold"]
-    y = arrs["_y"]
-    xs = [np.ones_like(y)] + [arrs[f"_x{j}"] for j in range(1, d)]
+    fold = column_np(tbl, "_fold")
+    y = column_np(tbl, "_y")
+    xs = [np.ones_like(y)] + [
+        column_np(tbl, f"_x{j}") for j in range(1, d)
+    ]
     # ones ARRAY, not a scalar: the distributed terms multiply a
     # per-row F.lit(1.0), so constant-only products must still sum
     # over every row
@@ -1020,15 +1002,11 @@ def huber_train(
     if n_rows == 0:
         base.unpersist()
         raise ValueError("huber_train: no usable rows")
-    if driver_gates_enabled() and n_rows <= GLM_DRIVER_MAX_ROWS:
-        # bounded driver fast path (gate rationale at
-        # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
-        arrs = _driver_arrays(
-            base, ["_y"] + [f"_x{j}" for j in range(1, d)]
-        )
+    tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_rows)
+    if tbl is not None:
         base.unpersist()
         betas = _huber_driver_betas(
-            arrs, d, float(delta), int(iterations), ridge_i
+            tbl, d, float(delta), int(iterations), ridge_i
         )
         return _glm_coef_frame(
             df.sparkSession, feature_cols, betas, n_rows, iterations
@@ -1053,7 +1031,7 @@ def huber_train(
 
 
 def _huber_driver_betas(
-    arrs: dict, d: int, dl: float, iterations: int, ridge_i: int
+    tbl, d: int, dl: float, iterations: int, ridge_i: int
 ) -> "list[float]":
     """Driver twin of the :func:`huber_train` passes — identical
     weight rule (1 inside δ, δ/|r| outside, lazy-branch NaN flow),
@@ -1063,8 +1041,10 @@ def _huber_driver_betas(
 
     from metadata_etl_framework_spark.ops.driver_exact import pico_sum
 
-    y = arrs["_y"]
-    xs = [np.ones_like(y)] + [arrs[f"_x{j}"] for j in range(1, d)]
+    y = column_np(tbl, "_y")
+    xs = [np.ones_like(y)] + [
+        column_np(tbl, f"_x{j}") for j in range(1, d)
+    ]
     # ones ARRAY, not a scalar: the distributed terms multiply a
     # per-row F.lit(1.0), so constant-only products (e.g. the h00
     # cell) must still sum over every row
@@ -1202,14 +1182,10 @@ def quantile_train(
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("quantile_train: no usable rows")
-        if driver_gates_enabled() and n_rows <= GLM_DRIVER_MAX_ROWS:
-            # bounded driver fast path (gate rationale at
-            # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
-            arrs = _driver_arrays(
-                base, ["_y"] + [f"_x{j}" for j in range(1, d)]
-            )
+        tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_rows)
+        if tbl is not None:
             betas = _quantile_driver_betas(
-                arrs, d, ts, int(iterations), ridge_i, float(eps)
+                tbl, d, ts, int(iterations), ridge_i, float(eps)
             )
         else:
             betas = _quantile_dist_betas(
@@ -1286,7 +1262,7 @@ def _quantile_dist_betas(
 
 
 def _quantile_driver_betas(
-    arrs: dict, d: int, ts, iterations: int, ridge_i: int, eps: float
+    tbl, d: int, ts, iterations: int, ridge_i: int, eps: float
 ) -> dict:
     """Driver twin of the :func:`quantile_train` passes — identical
     per-row term order (weight-first products, left-associative
@@ -1298,8 +1274,10 @@ def _quantile_driver_betas(
 
     from metadata_etl_framework_spark.ops.driver_exact import pico_sum
 
-    y = arrs["_y"]
-    xs = [np.ones_like(y)] + [arrs[f"_x{j}"] for j in range(1, d)]
+    y = column_np(tbl, "_y")
+    xs = [np.ones_like(y)] + [
+        column_np(tbl, f"_x{j}") for j in range(1, d)
+    ]
     # ones ARRAY, not a scalar: the distributed terms multiply a
     # per-row F.lit(1.0), so constant-only products (e.g. the h00
     # cell) must still sum over every row

@@ -27,9 +27,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from metadata_etl_framework_spark.ops.driver_exact import (
+    column_np,
     driver_gates_enabled,
+    driver_table,
 )
-from metadata_etl_framework_spark.ops.materialize import BCAST_MAX_ROWS
+from metadata_etl_framework_spark.ops.materialize import (
+    BCAST_MAX_ROWS,
+    checkpoint_leaf,
+)
 
 __all__ = [
     "pagerank",
@@ -49,53 +54,6 @@ __all__ = [
     "louvain_two_level",
     "eigenvector_centrality",
 ]
-
-# Iteration count at/above which per-round materialization switches from
-# persist()+count() to eager localCheckpoint(). persist caches DATA but
-# the logical plan still chains every prior round, so analysis/compile
-# cost grows superlinearly with iterations (a 10-iteration dangling-arm
-# pagerank plan unrolled to ~1055 exchanges); localCheckpoint truncates
-# lineage outright, keeping the plan O(1) per round — the k_core
-# discipline. Round 14 (r13 verdict task 1): truncation is now
-# UNCONDITIONAL. The old >=6 gate let short benched unrolls keep plain
-# persist, and any loop whose round references the previous frame >=2×
-# (eigenvector's contribution join + identity-add, label propagation's
-# neighbor join over the self-referencing adjacency) doubles its plan
-# per round — the 3-iteration benched eigenvector arm analyzed to 4,793
-# exchanges. The hybrid (persist+count through the SQL path so AQE still
-# plans the segment, THEN checkpoint the cached blocks) measured FASTER
-# than persist-only on the dangling A/B (3.69 s vs 6.8 s at sf0.1), so
-# there is no remaining reason to gate it on loop length.
-_TRUNCATE_MIN_ITERS = 1
-
-
-def _materialize_iter(df: DataFrame, truncate: bool) -> DataFrame:
-    """Materialize one iteration frame under the loop discipline above:
-    ``truncate=True`` → eager ``localCheckpoint`` (lineage cut, frame
-    persisted by the checkpoint itself; superseded frames are released
-    by the ContextCleaner as references drop); ``truncate=False`` →
-    ``persist``+``count`` (caller unpersists the predecessor).
-
-    Round-13 measurement note: truncation executes through ``.rdd``,
-    which compiles the segment WITHOUT AQE (no runtime SMJ→BHJ
-    conversion, no partition coalescing) — a bare localCheckpoint on
-    the full benched dangling query measured 7.5 s vs 4.6 s for the
-    persist path at sf0.1 (an earlier A/B that pre-persisted the edge
-    frame hid this). The truncate arm therefore runs the segment
-    through the SQL path FIRST (persist + count, AQE on), then
-    checkpoints — the checkpoint scan reads the cached blocks, so the
-    non-AQE penalty applies only to a cache read, and the returned
-    frame's plan is still a leaf."""
-    if truncate:
-        cached = df.persist()
-        cached.count()
-        out = cached.localCheckpoint()
-        cached.unpersist()
-        return out
-    df = df.persist()
-    df.count()
-    return df
-
 
 def pagerank(
     edges: DataFrame,
@@ -190,23 +148,14 @@ def pagerank(
         return edges.sparkSession.createDataFrame(
             [], "node string, rank double"
         )
-    if driver_gates_enabled() and n_edges <= _MOVE_BCAST_MAX_NODES:
-        # bounded driver fast path (the Louvain move-round
-        # convention): one transfer of the filtered edge rows, then
-        # the iterations — per-edge double contributions, the exact
-        # fixed-point casts and order-free decimal sums, the dangling
-        # mass, personalization, and the tol probe — run vectorized on
-        # the driver, bit-identical to the distributed loop by
-        # construction (driver_exact kernels replicate every pinned
-        # cast/round). The distributed loop below is unchanged above
-        # the gate — the right plan at fact scale.
-        try:
-            pdf = e0.toPandas()
-        finally:
-            e0.unpersist()
+    tbl = driver_table(e0, _MOVE_BCAST_MAX_NODES, size=n_edges)
+    if tbl is not None:
+        # bit-identical: the driver_exact kernels replicate every
+        # pinned cast/round of the loop below
+        e0.unpersist()
         return _pagerank_driver_py(
             edges.sparkSession,
-            pdf,
+            tbl,
             edges.schema[src_col].dataType,
             iterations=int(iterations),
             damping=float(damping),
@@ -322,7 +271,6 @@ def pagerank(
     if redistribute_dangling:
         ck_tol = min(checkpoint_every, 3)
         checkpoint_every = 1
-    truncate = iterations >= _TRUNCATE_MIN_ITERS
     # node-count broadcast gate for the per-iteration joins (guide
     # §3.1, the label-propagation/eigenvector convention): the rank
     # iterate is O(nodes) — broadcasting it as the build side of the
@@ -384,7 +332,7 @@ def pagerank(
                 ).alias("rank"),
             )
         if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_rank = _materialize_iter(_shrink(new_rank, small), truncate)
+            new_rank, _ = checkpoint_leaf(_shrink(new_rank, small))
             converged = False
             at_tol = (i + 1) % ck_tol == 0 or i == iterations - 1
             if tol is not None and i < iterations - 1 and at_tol:
@@ -425,9 +373,28 @@ def pagerank(
     return rank.select("node", F.round("rank", 6).alias("rank"))
 
 
+def _factorize_nodes(tbl):
+    """Codes of the ``_src`` then ``_dst`` column values of an Arrow
+    edge table (one array, length 2·rows) and the distinct node values
+    in order of first appearance — Arrow's dictionary encoding, with
+    no Python object per edge."""
+    import pyarrow as pa
+
+    src = tbl.column("_src")
+    enc = (
+        pa.chunked_array(src.chunks + tbl.column("_dst").chunks, src.type)
+        .combine_chunks()
+        .dictionary_encode()
+    )
+    return (
+        enc.indices.to_numpy(zero_copy_only=False),
+        enc.dictionary.to_numpy(zero_copy_only=False),
+    )
+
+
 def _pagerank_driver_py(
     spark,
-    pdf,
+    tbl,
     node_type,
     iterations: int,
     damping: float,
@@ -436,10 +403,10 @@ def _pagerank_driver_py(
     redistribute_dangling: bool,
     tol,
 ) -> DataFrame:
-    """Driver-side replica of the :func:`pagerank` loop over collected
-    ``(_src, _dst, _w)`` edge rows (pandas frame; None weights arrive
-    as NaN and null-flow out of the sums exactly like Spark's
-    null-skipping aggregates). Every pinned numeric behavior is
+    """Driver-side replica of the :func:`pagerank` loop over the
+    ``(_src, _dst, _w)`` edge table (Arrow; None weights arrive as NaN
+    and null-flow out of the sums exactly like Spark's null-skipping
+    aggregates). Every pinned numeric behavior is
     replicated through the driver_exact kernels: the decimal(30,10)
     out-weight cast + exact sum + double cast, the decimal(28,12)
     per-edge contribution fixed point, the decimal(38,12) dangling
@@ -455,15 +422,12 @@ def _pagerank_driver_py(
         spark_round_f64,
     )
 
-    allv = pd.concat(
-        [pdf["_src"], pdf["_dst"]], ignore_index=True
-    )
-    codes, uniques = pd.factorize(allv)
-    m = len(pdf)
+    codes, uniques = _factorize_nodes(tbl)
+    m = tbl.num_rows
     scode = codes[:m]
     dcode = codes[m:]
     n = len(uniques)
-    wv = pdf["_w"].to_numpy(dtype=np.float64)
+    wv = column_np(tbl, "_w", np.float64)
 
     def _exact_sum(code, vals, scale, size):
         """Order-free decimal sum of vals cast to decimal(·, scale),
@@ -764,24 +728,21 @@ def neighborhood_jaccard(
 
 
 def _label_prop_driver_py(
-    spark, edge_rows: "list", iterations: int, node_type
+    spark, tbl, iterations: int, node_type
 ) -> DataFrame:
     """Driver-side replica of :func:`label_propagation` over the
-    collected canonical undirected edge list: synchronous rounds of
-    the most-frequent-neighbor/min-tie update in pure integer NumPy —
-    bit-identical to the distributed rounds by construction (the op
-    has no floating point). Output (node, label), node type
+    canonical undirected ``(a, b)`` edge table (Arrow): synchronous
+    rounds of the most-frequent-neighbor/min-tie update in pure integer
+    NumPy — bit-identical to the distributed rounds by construction
+    (the op has no floating point). Output (node, label), node type
     preserved."""
     import numpy as np
     import pandas as pd
 
-    if edge_rows:
-        a = np.array([r[0] for r in edge_rows], dtype=np.int64)
-        b = np.array([r[1] for r in edge_rows], dtype=np.int64)
-        srcs = np.concatenate([a, b])
-        dsts = np.concatenate([b, a])
-    else:
-        srcs = dsts = np.empty(0, dtype=np.int64)
+    a = column_np(tbl, "a", np.int64)
+    b = column_np(tbl, "b", np.int64)
+    srcs = np.concatenate([a, b])
+    dsts = np.concatenate([b, a])
     uniq, inv = np.unique(
         np.concatenate([srcs, dsts]), return_inverse=True
     )
@@ -843,22 +804,19 @@ def label_propagation(
         raise ValueError("iterations must be >= 1")
     und = _undirected(edges, src_col, dst_col).persist()
     n_und = und.count()
-    if (
-        driver_gates_enabled()
-        and 2 * n_und <= _MOVE_BCAST_MAX_NODES
-        and isinstance(edges.schema[src_col].dataType, IntegralType)
-    ):
-        # bounded driver fast path (the pagerank convention): pure
-        # integer counting + the same most-frequent/min-tie argmin on
-        # a collected canonical edge list — bit-identical by
-        # construction (no floating point anywhere in this op).
-        # Distributed arm unchanged above the gate or for
-        # non-integral node ids.
-        rows = [(r[0], r[1]) for r in und.collect()]
+    # exact: pure integer counting + the same most-frequent/min-tie
+    # argmin (no floating point anywhere in this op); non-integral node
+    # ids stay distributed
+    tbl = (
+        driver_table(und, _MOVE_BCAST_MAX_NODES, size=2 * n_und)
+        if isinstance(edges.schema[src_col].dataType, IntegralType)
+        else None
+    )
+    if tbl is not None:
         und.unpersist()
         return _label_prop_driver_py(
             edges.sparkSession,
-            rows,
+            tbl,
             int(iterations),
             edges.schema[src_col].dataType,
         )
@@ -874,7 +832,6 @@ def label_propagation(
     # node-count broadcast gate (the _greedy_move_rounds convention)
     small = labels.count() <= _MOVE_BCAST_MAX_NODES
     bc = F.broadcast if small else (lambda d: d)
-    truncate = iterations >= _TRUNCATE_MIN_ITERS
     for it in range(1, iterations + 1):
         counts = (
             adj.join(
@@ -899,9 +856,7 @@ def label_propagation(
             .select(F.col("v").alias("node"), F.col("m.nl").alias("label"))
         )
         if it % checkpoint_every == 0 or it == iterations:
-            new_labels = _materialize_iter(
-                _shrink(new_labels, small), truncate
-            )
+            new_labels, _ = checkpoint_leaf(_shrink(new_labels, small))
             labels.unpersist()
         labels = new_labels
     adj.unpersist()
@@ -1041,11 +996,11 @@ def closeness_sampled(
                 .join(visited, ["s", "node"], "left_anti")
                 .withColumn("dist", F.lit(hop).cast("int"))
             )
-            nxt = _materialize_iter(_shrink(nxt, small), truncate=True)
-            if nxt.limit(1).count() == 0:
+            nxt, n_nxt = checkpoint_leaf(_shrink(nxt, small))
+            if n_nxt == 0:
                 break
-            visited = _materialize_iter(
-                _shrink(visited.unionByName(nxt), small), truncate=True
+            visited, _ = checkpoint_leaf(
+                _shrink(visited.unionByName(nxt), small)
             )
             frontier = nxt
         inv = F.when(
@@ -1169,23 +1124,14 @@ def random_walks(
         # carries _SMALL_GRAPH_NPART partitions per arm; above it the
         # node-scale equi-join stands — the right plan at fact scale
         small = int(mins["n"]) <= _MOVE_BCAST_MAX_NODES
-        if driver_gates_enabled() and small:
-            # bounded driver fast path (the Louvain move-round
-            # convention): the adjacency table the broadcast arm would
-            # ship to every executor is instead collected ONCE (the
-            # same O(distinct-edges) bytes the broadcast pays), and
-            # the walk simulation — pure integer hash/modulo
-            # arithmetic per step — runs vectorized on the driver,
-            # bit-identical to the step joins by construction (same
-            # hash ladder, same sorted-neighbor indexing, same
-            # stop-on-dangling rule). The distributed step joins
-            # spent their time scheduling one join job per step over
-            # an O(nodes) frontier; above the gate they are unchanged
-            # — the right plan at fact scale.
-            rows = sorted(nbrs.collect(), key=lambda r: r[0])
+        # the twin takes the same adjacency bytes the broadcast arm
+        # ships; exact (same hash ladder, sorted-neighbor indexing and
+        # stop-on-dangling rule as the step joins)
+        tbl = driver_table(nbrs, _MOVE_BCAST_MAX_NODES, size=int(mins["n"]))
+        if tbl is not None:
             return _walks_driver_py(
                 edges.sparkSession,
-                rows,
+                tbl,
                 walk_length=int(walk_length),
                 seed=int(seed),
             )
@@ -1244,10 +1190,10 @@ def random_walks(
 
 
 def _walks_driver_py(
-    spark, nbr_rows: "list", walk_length: int, seed: int
+    spark, tbl, walk_length: int, seed: int
 ) -> DataFrame:
     """Driver-side replica of the :func:`random_walks` step joins over
-    a collected ``(_s, sorted-neighbor-array, _deg)`` adjacency list:
+    the ``(_s, sorted-neighbor-array, _deg)`` adjacency table (Arrow):
     per step, the SAME portable hash of (cur, start, step, seed)
     indexes the SAME sorted neighbor array; a walk whose current node
     has no out-edges stops (no row at that step). Pure int64 NumPy —
@@ -1258,16 +1204,17 @@ def _walks_driver_py(
 
     from .driver_exact import hash32_i64
 
-    node_ids = np.array([r[0] for r in nbr_rows], dtype=np.int64)
-    degs = np.array([r[2] for r in nbr_rows], dtype=np.int64)
-    offs = np.zeros(len(nbr_rows) + 1, dtype=np.int64)
+    tbl = tbl.sort_by("_s")
+    node_ids = column_np(tbl, "_s", np.int64)
+    degs = column_np(tbl, "_deg", np.int64)
+    offs = np.zeros(len(node_ids) + 1, dtype=np.int64)
     np.cumsum(degs, out=offs[1:])
     flat = (
-        np.concatenate(
-            [np.asarray(r[1], dtype=np.int64) for r in nbr_rows]
-        )
-        if nbr_rows
-        else np.empty(0, dtype=np.int64)
+        tbl.column("_nb")
+        .combine_chunks()
+        .flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int64)
     )
     s_act = node_ids.copy()
     c_act = node_ids.copy()
@@ -1315,32 +1262,23 @@ def _walks_driver_py(
 
 
 def _cooc_driver_py(
-    spark, walk_rows: "list | tuple", window: int
+    spark, walk_rows: tuple, window: int
 ) -> DataFrame:
     """Driver-side replica of :func:`walk_cooccurrence` over a
-    collected (start, step, node) corpus: the same band self-join
+    (start, step, node) corpus: the same band self-join
     semantics (same walk key, 1 ≤ Δstep ≤ window, differing nodes),
     canonical (least, greatest) counts, slot totals, and the identical
     double-op-order PMI — each value rounded with the engine's exact
     HALF_UP-on-shortest-decimal rule (driver_exact.spark_round).
-    ``walk_rows`` is either a collected row list or the (start, step,
-    node) array triple handed through from the random_walks driver arm
+    ``walk_rows`` is the (start, step, node) array triple, from the
+    corpus table or handed through from the random_walks driver arm
     (same rows either way). Output sorted (pmi desc, node_a, node_b),
     schema (node_a long, node_b long, n_cooc long, pmi double)."""
     import numpy as np
 
     from .driver_exact import spark_round_f64
 
-    if isinstance(walk_rows, tuple):
-        w, st, nd = (
-            np.asarray(walk_rows[0], dtype=np.int64),
-            np.asarray(walk_rows[1], dtype=np.int64),
-            np.asarray(walk_rows[2], dtype=np.int64),
-        )
-    else:
-        w = np.array([r[0] for r in walk_rows], dtype=np.int64)
-        st = np.array([r[1] for r in walk_rows], dtype=np.int64)
-        nd = np.array([r[2] for r in walk_rows], dtype=np.int64)
+    w, st, nd = (np.asarray(a, dtype=np.int64) for a in walk_rows)
     order = np.lexsort((st, w))
     w, st, nd = w[order], st[order], nd[order]
     pa, pb = [], []
@@ -1459,17 +1397,17 @@ def walk_cooccurrence(
     # is map-side + one groupBy shuffle (guide §3.1); above the gate
     # the equi-shuffle self-join stands
     n_corpus = walks.count()
-    if driver_gates_enabled() and n_corpus <= _MOVE_BCAST_MAX_NODES:
-        # bounded driver fast path (the random_walks convention): the
-        # corpus the broadcast arm would ship whole to every executor
-        # is collected once, and the band pairing + integer counting +
-        # closed-form PMI run vectorized on the driver — bit-identical
-        # to the self-join by construction (same band predicate,
-        # canonical counts, double op order, exact HALF_UP rounding).
-        # Above the gate the equi-shuffle self-join is unchanged.
+    tbl = driver_table(
+        walks.select("start", "step", "node"),
+        _MOVE_BCAST_MAX_NODES,
+        size=n_corpus,
+    )
+    if tbl is not None:
+        # exact: same band predicate, canonical counts, double op
+        # order and HALF_UP rounding as the self-join
         return _cooc_driver_py(
             walks.sparkSession,
-            walks.select("start", "step", "node").collect(),
+            tuple(column_np(tbl, c) for c in ("start", "step", "node")),
             int(window),
         )
     corpus_small = n_corpus <= _MOVE_BCAST_MAX_NODES
@@ -1715,8 +1653,7 @@ def hits(
             .unionByName(e.select(F.col("_v").alias("node")))
             .distinct()
         )
-        nodes = _materialize_iter(nodes, truncate=True)
-        n = nodes.count()
+        nodes, n = checkpoint_leaf(nodes)
         if n == 0:
             return edges.sparkSession.createDataFrame(
                 [], "node long, hub double, authority double"
@@ -1756,7 +1693,7 @@ def hits(
                 .otherwise(F.lit(0.0))
                 .alias("a"),
             )
-            auth = _materialize_iter(_shrink(auth, small), truncate=True)
+            auth, _ = checkpoint_leaf(_shrink(auth, small))
             contrib_h = (
                 e.join(
                     auth.select(F.col("node").alias("_v"), "a"), "_v"
@@ -1784,7 +1721,7 @@ def hits(
                 .otherwise(F.lit(0.0))
                 .alias("h"),
             )
-            hub = _materialize_iter(_shrink(hub, small), truncate=True)
+            hub, _ = checkpoint_leaf(_shrink(hub, small))
             if tol is not None and it < int(iterations) - 1:
                 deltas = []
                 for cur, prev, col in (
@@ -1828,11 +1765,11 @@ def hits(
 
 
 def _betweenness_driver_py(
-    spark, edge_rows: "list", seeds: "list[int]", max_hops: int
+    spark, tbl, seeds: "list[int]", max_hops: int
 ) -> DataFrame:
     """Driver-side replica of :func:`betweenness_sampled` over the
-    collected canonical undirected edge list: the computation keys
-    every forward/backward step on the seed, so it decomposes exactly
+    canonical undirected ``(a, b)`` edge table (Arrow): the computation
+    keys every forward/backward step on the seed, so it decomposes exactly
     per seed — multi-source σ BFS (exact integer path counts), then
     per-level Brandes accumulation with the engine's pinned numerics
     (term = (σv/σw)·(1+δw) in IEEE order, 10-dp HALF_UP round, exact
@@ -1848,13 +1785,10 @@ def _betweenness_driver_py(
         spark_round_f64,
     )
 
-    if edge_rows:
-        a = np.array([r[0] for r in edge_rows], dtype=np.int64)
-        b = np.array([r[1] for r in edge_rows], dtype=np.int64)
-        srcs = np.concatenate([a, b])
-        dsts = np.concatenate([b, a])
-    else:
-        srcs = dsts = np.empty(0, dtype=np.int64)
+    a = column_np(tbl, "a", np.int64)
+    b = column_np(tbl, "b", np.int64)
+    srcs = np.concatenate([a, b])
+    dsts = np.concatenate([b, a])
     uniq, inv = np.unique(np.concatenate([srcs, dsts]),
                           return_inverse=True)
     n = len(uniq)
@@ -2009,21 +1943,17 @@ def betweenness_sampled(
         )
     und = _undirected(edges, src, dst).persist()
     n_und = und.count()
-    if (
-        driver_gates_enabled()
-        and 2 * n_und <= _MOVE_BCAST_MAX_NODES
-        and isinstance(edges.schema[src].dataType, IntegralType)
-    ):
-        # bounded driver fast path (the pagerank convention): collect
-        # the canonical undirected edge list once and run the σ BFS +
-        # per-level Brandes accumulation on the driver — bit-identical
-        # (see _betweenness_driver_py). The distributed multi-source
-        # machinery below is unchanged above the gate (or for
-        # non-integer node ids, which the long-typed seed frame pins).
-        rows = [(r[0], r[1]) for r in und.collect()]
+    # bit-identical (see _betweenness_driver_py); non-integer node ids
+    # stay distributed, which the long-typed seed frame pins
+    tbl = (
+        driver_table(und, _MOVE_BCAST_MAX_NODES, size=2 * n_und)
+        if isinstance(edges.schema[src].dataType, IntegralType)
+        else None
+    )
+    if tbl is not None:
         und.unpersist()
         return _betweenness_driver_py(
-            edges.sparkSession, rows, seeds, int(max_hops)
+            edges.sparkSession, tbl, seeds, int(max_hops)
         )
     adj = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -2061,11 +1991,11 @@ def betweenness_sampled(
                 .withColumn("dist", F.lit(hop).cast("int"))
                 .select("s", "node", "dist", "sigma")
             )
-            nxt = _materialize_iter(_shrink(nxt, small), truncate=True)
-            if nxt.limit(1).count() == 0:
+            nxt, n_nxt = checkpoint_leaf(_shrink(nxt, small))
+            if n_nxt == 0:
                 break
-            visited = _materialize_iter(
-                _shrink(visited.unionByName(nxt), small), truncate=True
+            visited, _ = checkpoint_leaf(
+                _shrink(visited.unionByName(nxt), small)
             )
             frontier = nxt
         h_max = visited.agg(F.max("dist")).collect()[0][0] or 0
@@ -2122,7 +2052,7 @@ def betweenness_sampled(
                     ),
                 )
             )
-            cur = _materialize_iter(_shrink(nxt_cur, small), truncate=True)
+            cur, _ = checkpoint_leaf(_shrink(nxt_cur, small))
             deps.append(
                 cur.where(
                     (F.col("node") != F.col("s"))
@@ -2560,7 +2490,7 @@ def greedy_modularity_move(
     community-degree aggregate joined back, one groupBy(v) argmin —
     row-scale equi-shuffles only; m enters once as a driver literal
     from a 1-row count. Label frames follow the
-    :func:`_materialize_iter` truncation discipline.
+    ``checkpoint_leaf`` truncation discipline.
 
     ``labels``: optional starting assignment (node, community);
     default = singleton communities (each node its own id).
@@ -2578,23 +2508,20 @@ def greedy_modularity_move(
         und.unpersist()
         raise ValueError("greedy_modularity_move: no edges")
     node_type = und.schema["a"].dataType
-    if (
-        driver_gates_enabled()
-        and m <= _DRIVER_MOVE_MAX_EDGES
-        and (
-            labels is None
-            or labels.schema[label_col].dataType == node_type
-        )
-    ):
-        # bounded driver fast path (gate rationale at
-        # _DRIVER_MOVE_MAX_EDGES): collect the canonical edge list and
-        # run the move rounds in pure-int Python — bit-identical to
-        # _greedy_move_rounds by construction. Distributed arm
-        # unchanged above the gate (or when a supplied label frame
-        # carries a different column type than the nodes, where the
-        # distributed coalesce would widen the output type).
+    # a supplied label frame whose column type differs from the nodes
+    # stays distributed: the distributed coalesce would widen the
+    # output type
+    tbl = (
+        driver_table(und, _DRIVER_MOVE_MAX_EDGES, size=m)
+        if labels is None
+        or labels.schema[label_col].dataType == node_type
+        else None
+    )
+    if tbl is not None:
         spark = edges.sparkSession
-        edge_list = [(r[0], r[1]) for r in und.collect()]
+        edge_list = zip(
+            tbl.column("a").to_pylist(), tbl.column("b").to_pylist()
+        )
         und.unpersist()
         adj_d: dict = {}
         deg_d: dict = {}
@@ -2607,10 +2534,12 @@ def greedy_modularity_move(
             lab0 = {v: v for v in deg_d}
         else:
             seen: dict = {}
-            for r in (
-                labels.select(node_col, label_col).distinct().collect()
+            lt = labels.select(node_col, label_col).distinct().toArrow()
+            for v, c in zip(
+                lt.column(node_col).to_pylist(),
+                lt.column(label_col).to_pylist(),
             ):
-                seen.setdefault(r[0], set()).add(r[1])
+                seen.setdefault(v, set()).add(c)
             dup = sum(1 for cs in seen.values() if len(cs) > 1)
             if dup:
                 raise ValueError(
@@ -2631,10 +2560,7 @@ def greedy_modularity_move(
         .withColumn("_w", F.lit(1).cast("long"))
         .persist()
     )
-    deg = _materialize_iter(
-        adj.groupBy("v").agg(F.sum("_w").alias("_d")),
-        truncate=True,
-    )
+    deg, _ = checkpoint_leaf(adj.groupBy("v").agg(F.sum("_w").alias("_d")))
     und.unpersist()
     if labels is None:
         # projection of the checkpointed deg leaf — already
@@ -2679,7 +2605,7 @@ def greedy_modularity_move(
                 ),
             )
         )
-        lab = _materialize_iter(lab, truncate=True)
+        lab, _ = checkpoint_leaf(lab)
     lab = _greedy_move_rounds(adj, deg, m, lab, rounds)
     adj.unpersist()
     deg.unpersist()
@@ -2718,10 +2644,10 @@ def _shrink(df: DataFrame, small: bool) -> DataFrame:
     return df.coalesce(_SMALL_GRAPH_NPART) if small else df
 
 
-# Edge gate for the DRIVER-side move-round fast path (the
-# connected_components union-find convention, ops/dedup.py): a canonical
-# undirected edge list at or under this many rows transfers via Arrow in
-# one bounded toPandas (~16 B/edge numeric) and the alternating-direction
+# Edge cap of the DRIVER-side move-round twin (the connected_components
+# union-find convention, ops/dedup.py): a canonical undirected edge list
+# at or under this many rows crosses the driver_table seam as one Arrow
+# table (~16 B/edge numeric) and the alternating-direction
 # argmax loop — pure integer arithmetic, bit-identical to the
 # distributed rounds by construction — runs in milliseconds per round on
 # the driver, skipping ~6 scheduled jobs per round (measured at sf0.1 /
@@ -2933,7 +2859,7 @@ def _greedy_move_rounds(
         )
         prev = lab
         # fused materialize: the move-count aggregate scans every
-        # partition, populating the persist (the job _materialize_iter
+        # partition, populating the persist (the job checkpoint_leaf
         # would otherwise spend on count()), then the checkpoint reads
         # the cached blocks — 2 jobs per round, not 3
         cached = _shrink(new_lab, small).persist()
@@ -3082,16 +3008,15 @@ def louvain_two_level(
     if m == 0:
         und.unpersist()
         raise ValueError("louvain_two_level: no edges")
-    if driver_gates_enabled() and m <= _DRIVER_MOVE_MAX_EDGES:
-        # bounded driver fast path (gate rationale at
-        # _DRIVER_MOVE_MAX_EDGES): one collect of the canonical edge
-        # list, both phases + contraction + acceptance in pure-int
-        # Python — bit-identical to the distributed rounds below by
-        # construction (same scores, tie-breaks, direction rule,
-        # quiet-round exit). Distributed arm unchanged above the gate.
+    tbl = driver_table(und, _DRIVER_MOVE_MAX_EDGES, size=m)
+    if tbl is not None:
+        # exact: same scores, tie-breaks, direction rule and
+        # quiet-round exit as the distributed rounds below
         spark = edges.sparkSession
         node_type = und.schema["a"].dataType
-        edge_list = [(r[0], r[1]) for r in und.collect()]
+        edge_list = list(
+            zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist())
+        )
         und.unpersist()
         lab = _louvain_driver_py(edge_list, m, rounds)
         return _labels_frame_py(spark, lab, node_type)
@@ -3107,9 +3032,8 @@ def louvain_two_level(
         )
         .persist()
     )
-    deg = _materialize_iter(
-        _shrink(adj.groupBy("v").agg(F.sum("_w").alias("_d")), small),
-        truncate=True,
+    deg, _ = checkpoint_leaf(
+        _shrink(adj.groupBy("v").agg(F.sum("_w").alias("_d")), small)
     )
     # the singleton start labels are a projection of the checkpointed
     # deg leaf — already materialized, no extra checkpoint needed
@@ -3187,7 +3111,7 @@ def louvain_two_level(
     # from phase 1 (one count job saved; e2 materializes its persist
     # on first use by the contraction aggregates below)
     # strength = inter weight + 2 × self-loop weight (Newman)
-    deg2 = _materialize_iter(
+    deg2, _ = checkpoint_leaf(
         _shrink(
             adj2.select("v", "_w")
             .unionByName(
@@ -3199,8 +3123,7 @@ def louvain_two_level(
             .groupBy("v")
             .agg(F.sum("_w").alias("_d")),
             small,
-        ),
-        truncate=True,
+        )
     )
     lab2 = _greedy_move_rounds(
         adj2,
@@ -3211,7 +3134,7 @@ def louvain_two_level(
         ),
         rounds,
     )
-    two_lvl = _materialize_iter(
+    two_lvl, _ = checkpoint_leaf(
         _shrink(
             l1.join(
                 bc(
@@ -3223,8 +3146,7 @@ def louvain_two_level(
                 "community",
             ).select("node", F.col("_super").alias("community")),
             small,
-        ),
-        truncate=True,
+        )
     )
 
     # acceptance test (docstring): exact integer Q·4m² per partition.
@@ -3291,10 +3213,10 @@ def louvain_two_level(
 
 
 def _eigenvector_driver_py(
-    spark, pdf, node_type, iterations: int
+    spark, tbl, node_type, iterations: int
 ) -> DataFrame:
-    """Driver-side replica of :func:`eigenvector_centrality` over
-    collected ``(_src, _dst, _w)`` edge rows (None weights arrive as
+    """Driver-side replica of :func:`eigenvector_centrality` over the
+    ``(_src, _dst, _w)`` edge table (Arrow; None weights arrive as
     NaN and null-flow out of the sums like Spark's null-skipping
     aggregates): per iteration, the per-edge ``w·x`` doubles take the
     exact decimal(28,12) fixed point and order-free integer sum, the
@@ -3314,12 +3236,11 @@ def _eigenvector_driver_py(
         spark_round_f64,
     )
 
-    allv = pd.concat([pdf["_src"], pdf["_dst"]], ignore_index=True)
-    codes, uniques = pd.factorize(allv)
-    m = len(pdf)
+    codes, uniques = _factorize_nodes(tbl)
+    m = tbl.num_rows
     scode, dcode = codes[:m], codes[m:]
     n = len(uniques)
-    wv = pdf["_w"].to_numpy(dtype=np.float64)
+    wv = column_np(tbl, "_w", np.float64)
     x = np.ones(n, dtype=np.float64)
     for _ in range(int(iterations)):
         t = wv * x[scode]
@@ -3420,21 +3341,14 @@ def eigenvector_centrality(
         w.alias("_w"),
     ).persist()
     n_edges = e.count()
-    if driver_gates_enabled() and n_edges <= _MOVE_BCAST_MAX_NODES:
-        # bounded driver fast path (the pagerank convention): one
-        # transfer of the filtered edge rows, then the shifted power
-        # iterations — decimal(28,12) contribution fixed point, the
-        # identity add, the exact pico squared-norm and the 12-dp
-        # driver sqrt divisor — run vectorized on the driver through
-        # the driver_exact kernels, bit-identical to the loop below.
-        # Distributed arm unchanged above the gate.
-        try:
-            pdf = e.toPandas()
-        finally:
-            e.unpersist()
+    tbl = driver_table(e, _MOVE_BCAST_MAX_NODES, size=n_edges)
+    if tbl is not None:
+        # bit-identical: the driver_exact kernels replicate every
+        # pinned cast/round of the loop below
+        e.unpersist()
         return _eigenvector_driver_py(
             edges.sparkSession,
-            pdf,
+            tbl,
             edges.schema[src_col].dataType,
             int(iterations),
         )
@@ -3453,10 +3367,8 @@ def eigenvector_centrality(
     # references the score frame twice: contribution join + identity
     # add) — truncate lineage at every materialization; the benched
     # 3-iteration arm analyzed to 4,793 exchanges under plain persist
-    truncate = int(iterations) >= _TRUNCATE_MIN_ITERS
-    x = _materialize_iter(
-        _shrink(nodes.select("node", F.lit(1.0).alias("x")), small),
-        truncate,
+    x, _ = checkpoint_leaf(
+        _shrink(nodes.select("node", F.lit(1.0).alias("x")), small)
     )
     prev_y = None
     try:
@@ -3472,7 +3384,7 @@ def eigenvector_centrality(
                     ).cast("double").alias("y")
                 )
             )
-            y = _materialize_iter(
+            y, _ = checkpoint_leaf(
                 _shrink(
                     x.join(bc(contrib), "node", "left").select(
                         "node",
@@ -3482,8 +3394,7 @@ def eigenvector_centrality(
                         ).alias("y"),
                     ),
                     small,
-                ),
-                truncate,
+                )
             )
             s = y.agg(
                 F.sum(

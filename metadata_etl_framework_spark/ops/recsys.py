@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
-    driver_gates_enabled,
+    column_np,
+    driver_table,
 )
 from metadata_etl_framework_spark.ops.materialize import BCAST_MAX_ROWS
 
@@ -56,9 +57,9 @@ __all__ = [
 
 _DEC = "decimal(30,10)"
 
-# Driver gates for the item-item cosine fast path: at or under these
-# bounds the deduped interaction frame transfers in one Arrow collect
-# and candidate generation runs on an exact vectorized twin — integer
+# Driver twin caps for item-item cosine: at or under these bounds the
+# deduped interaction frame crosses the driver_table seam once and
+# candidate generation runs on an exact vectorized twin — integer
 # co-occurrence counts, correctly-rounded sqrt and 6-dp rounds, so the
 # twin is bit-exact by construction (no transcendental kernels). Above
 # any bound the distributed chain is unchanged — the right plan at
@@ -250,47 +251,45 @@ def item_item_cosine(
     # recompute it replaces is three full scan+shuffle passes.
     # Released after the eager O(pairs) output leaf below.
     inter = inter.persist()
-    if (
-        rating_col is None
-        and max_user_items is None
-        and driver_gates_enabled()
-    ):
-        # bounded driver fast path (gate rationale at
-        # CF_DRIVER_MAX_ROWS); oversized catalogs, pair blowups or
-        # non-orderable key values fall through to the distributed
-        # chain below
-        n_inter = inter.count()
-        if n_inter <= CF_DRIVER_MAX_ROWS:
-            import numpy as np
+    # oversized catalogs, pair blowups or non-orderable key values fall
+    # back to the distributed chain below
+    tbl = (
+        driver_table(
+            inter.select("_u", "_i"), CF_DRIVER_MAX_ROWS, size=inter.count
+        )
+        if rating_col is None and max_user_items is None
+        else None
+    )
+    if tbl is not None:
+        import numpy as np
 
-            tbl = inter.select("_u", "_i").toArrow()
-            u_np = tbl.column("_u").to_numpy(zero_copy_only=False)
-            i_np = tbl.column("_i").to_numpy(zero_copy_only=False)
-            items, icode = np.unique(i_np, return_inverse=True)
-            L = len(items)
-            if L and _np_orderable(items):
-                _, ucode = np.unique(u_np, return_inverse=True)
-                ks = np.bincount(ucode).astype(np.float64)
-                if (
-                    L <= CF_DRIVER_MAX_ITEMS
-                    and float(np.sum(ks * ks)) <= CF_DRIVER_MAX_PAIRS
-                ):
-                    stats = _item_cosine_driver(
-                        df.sparkSession,
-                        ucode.astype(np.int64),
-                        icode.astype(np.int64),
-                        items,
-                        df.schema[item_col].dataType,
-                        int(min_cooc),
-                        float(shrinkage),
-                        top_k_per_item,
-                    )
-                    inter.unpersist()
-                    return stats.orderBy(
-                        F.desc("shrunk_cosine"),
-                        F.asc("item_a"),
-                        F.asc("item_b"),
-                    )
+        u_np = column_np(tbl, "_u")
+        i_np = column_np(tbl, "_i")
+        items, icode = np.unique(i_np, return_inverse=True)
+        L = len(items)
+        if L and _np_orderable(items):
+            _, ucode = np.unique(u_np, return_inverse=True)
+            ks = np.bincount(ucode).astype(np.float64)
+            if (
+                L <= CF_DRIVER_MAX_ITEMS
+                and float(np.sum(ks * ks)) <= CF_DRIVER_MAX_PAIRS
+            ):
+                stats = _item_cosine_driver(
+                    df.sparkSession,
+                    ucode.astype(np.int64),
+                    icode.astype(np.int64),
+                    items,
+                    df.schema[item_col].dataType,
+                    int(min_cooc),
+                    float(shrinkage),
+                    top_k_per_item,
+                )
+                inter.unpersist()
+                return stats.orderBy(
+                    F.desc("shrunk_cosine"),
+                    F.asc("item_a"),
+                    F.asc("item_b"),
+                )
     norms = inter.groupBy("_i").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(F.col("_r") * F.col("_r")).alias("_sq"),
@@ -420,8 +419,8 @@ def recommend_items(
     # a cheap scan of the checkpointed blocks, and 2×|pairs| is the
     # exact symmetrized row count the executors would have to hold.
     # Above the gate, pin the SORT-MERGE form explicitly: the
-    # checkpointed leaf carries real size statistics (checkpoint_hybrid
-    # materializes through the cache), and a planner estimate must not
+    # checkpointed leaf carries real size statistics (the eager
+    # checkpoint above materializes it), and a planner estimate must not
     # be allowed to override the caller's measured ceiling with an
     # auto-broadcast — the whole point of the gate is that broadcast
     # size is governed by the count, not an estimate.
@@ -610,11 +609,10 @@ def _als_driver_core(
     return uu, pf1, pf2, itu, qf1, qf2
 
 
-# Driver gate for the ALS fast path: a ratings table at or under this
-# many rows transfers in one bounded Arrow collect (three numeric
-# columns — ≤ ~48 MB at the gate, columnar batches rather than pickled
-# Rows) and the four half-rounds run vectorized on the driver in well
-# under a second, versus ~5-7 s of broadcast-build + shuffle jobs for
+# Driver twin cap for ALS: a ratings table at or under this many rows
+# crosses the driver_table seam once (three numeric columns — ≤ ~48 MB
+# at the cap) and the four half-rounds run vectorized on the driver in
+# well under a second, versus ~5-7 s of broadcast-build + shuffle jobs for
 # the distributed halves at the benched scale. Same 2M-row measured
 # gate as the GLM trainers (GLM_DRIVER_MAX_ROWS) and BCAST_MAX_ROWS —
 # the transfer is O(ratings) of three numerics, the same byte budget
@@ -656,7 +654,7 @@ def als_factorize(
     cut is ONE eager localCheckpoint over the tagged union of the two
     final factor frames — an interleaved min-of-3 A/B at sf0.1
     measured 3.96 s for this shape vs 5.4–6.4 s for the former
-    per-half checkpoint_hybrid (five persist+count+checkpoint cycles:
+    per-half ``checkpoint_leaf`` (five persist+count+checkpoint cycles:
     the checkpoint copies dominated on O(keys) frames). The returned
     frames are narrow reads of that one leaf, so no cache entries
     outlive the call. λ > 0 keeps every 2×2 system non-singular (cold
@@ -686,32 +684,23 @@ def als_factorize(
 
     u_type = df.schema[user_col].dataType
     it_type = df.schema[item_col].dataType
-    if (
-        driver_gates_enabled()
-        and n_ratings <= ALS_DRIVER_MAX_ROWS
-        and isinstance(u_type, IntegralType)
+    # non-integral key columns stay on the distributed arm (the
+    # portable-hash init is defined on integer keys and the replica's
+    # arrays are int64)
+    tbl = (
+        driver_table(base, ALS_DRIVER_MAX_ROWS, size=n_ratings)
+        if isinstance(u_type, IntegralType)
         and isinstance(it_type, IntegralType)
-    ):
-        # bounded driver fast path (gate rationale at
-        # ALS_DRIVER_MAX_ROWS); non-integral key columns stay on the
-        # distributed arm (the portable-hash init is defined on
-        # integer keys and the replica's arrays are int64). ONE Arrow
-        # transfer of the three numeric columns — columnar batches,
-        # not pickled Rows (guide §6: Arrow for driver transfers).
+        else None
+    )
+    if tbl is not None:
         import numpy as np
 
-        tbl = base.toArrow()
         base.unpersist()
         arrs = (
-            tbl.column("__u").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            ),
-            tbl.column("__it").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            ),
-            tbl.column("__r").to_numpy(zero_copy_only=False).astype(
-                np.float64
-            ),
+            column_np(tbl, "__u", np.int64),
+            column_np(tbl, "__it", np.int64),
+            column_np(tbl, "__r", np.float64),
         )
         return _als_driver_py(
             df.sparkSession,
@@ -728,7 +717,7 @@ def als_factorize(
     # checkpoint): the next half's broadcast build populates the cache
     # on demand, so each half still executes exactly once, without the
     # per-half count job and checkpoint copy of the former
-    # checkpoint_hybrid form (measured: see docstring). Handles are
+    # checkpoint_leaf form (measured: see docstring). Handles are
     # released after the single end-of-op leaf below.
     _handles: list[DataFrame] = []
 

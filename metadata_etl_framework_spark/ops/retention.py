@@ -19,8 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
-    driver_gates_enabled,
+    column_np,
+    driver_table,
 )
+from metadata_etl_framework_spark.ops.materialize import checkpoint_leaf
 
 _PERIOD_DAYS = {"day": 1, "week": 7}
 
@@ -847,21 +849,17 @@ def rfm_segments(
     # passes with the cache-then-checkpoint hybrid; the frame is
     # CUSTOMER-level (tiny relative to facts), so the materializations
     # are O(users) each and the audited plan stays one-pass-sized
-    from metadata_etl_framework_spark.ops.graph import _materialize_iter
-
     # superseded checkpoint blocks are released by the ContextCleaner
     # as the Python references drop at each rebind below —
     # Dataset.unpersist() cannot reach localCheckpoint blocks (they are
     # RDD-level, not cache-manager entries), so there is no eager-release
     # lever here; the frames are O(users) each, bounded between calls
-    scored = _materialize_iter(scored, truncate=True)
-    scored = _materialize_iter(
-        ntile_assign(scored, ["recency_days", "user"], n_buckets, out="_rb"),
-        truncate=True,
+    scored, _ = checkpoint_leaf(scored)
+    scored, _ = checkpoint_leaf(
+        ntile_assign(scored, ["recency_days", "user"], n_buckets, out="_rb")
     )
-    scored = _materialize_iter(
-        ntile_assign(scored, ["frequency", "user"], n_buckets, out="f_score"),
-        truncate=True,
+    scored, _ = checkpoint_leaf(
+        ntile_assign(scored, ["frequency", "user"], n_buckets, out="f_score")
     )
     scored = ntile_assign(
         scored, ["monetary", "user"], n_buckets, out="m_score"
@@ -1435,25 +1433,18 @@ def cox_ph(
         )
 
         arrs = None
-        if driver_gates_enabled() and n_subj <= GLM_DRIVER_MAX_ROWS:
-            # bounded driver fast path (the GLM trainer convention):
-            # ONE Arrow transfer of the three subject columns; each
-            # Newton pass then runs on the exact vectorized twin
-            # (_cox_pass_np) instead of a grouped-aggregation +
-            # window + aggregation job chain. base stays persisted so
-            # a pass whose magnitudes outgrow the int64 bound falls
-            # back to the distributed form below, bit-identically.
+        tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_subj)
+        if tbl is not None:
+            # base stays persisted: a Newton pass whose magnitudes
+            # outgrow the int64 bound falls back to the distributed
+            # form below, bit-identically
             import numpy as np
 
-            tbl = base.toArrow()
             arrs = (
                 np.zeros(n_subj, dtype=np.int64),
-                tbl.column("_t").to_numpy(zero_copy_only=False)
-                .astype(np.int64),
-                tbl.column("_e").to_numpy(zero_copy_only=False)
-                .astype(np.float64),
-                tbl.column("_x").to_numpy(zero_copy_only=False)
-                .astype(np.float64),
+                column_np(tbl, "_t", np.int64),
+                column_np(tbl, "_e", np.float64),
+                column_np(tbl, "_x", np.float64),
             )
 
         def _pass(beta: float):
@@ -1713,33 +1704,24 @@ def cox_ph_multi(
         )
 
         arrs = None
-        if driver_gates_enabled() and n_subj <= GLM_DRIVER_MAX_ROWS:
-            # bounded driver fast path (see cox_ph): one Arrow
-            # transfer; per-pass magnitude bound re-checked, with the
-            # distributed form below as the bit-identical fallback
+        tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_subj)
+        if tbl is not None:
+            # base stays persisted (see cox_ph): per-pass magnitude
+            # bound re-checked, the distributed form as the fallback
             import numpy as np
 
-            tbl = base.toArrow()
             if strata_col is not None:
                 _, gcodes = np.unique(
-                    tbl.column("_g").to_numpy(zero_copy_only=False),
-                    return_inverse=True,
+                    column_np(tbl, "_g"), return_inverse=True
                 )
                 gcodes = gcodes.astype(np.int64)
             else:
                 gcodes = np.zeros(n_subj, dtype=np.int64)
             arrs = (
                 gcodes,
-                tbl.column("_t").to_numpy(zero_copy_only=False)
-                .astype(np.int64),
-                tbl.column("_e").to_numpy(zero_copy_only=False)
-                .astype(np.float64),
-                [
-                    tbl.column(f"_x{j + 1}")
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                    for j in range(d)
-                ],
+                column_np(tbl, "_t", np.int64),
+                column_np(tbl, "_e", np.float64),
+                [column_np(tbl, f"_x{j + 1}", np.float64) for j in range(d)],
             )
 
         def _pass(betas: "list[float]"):

@@ -1767,8 +1767,8 @@ def _lof_from_nn(
     return out
 
 
-# Driver gate for the bucketed-LOF fast path: at or under these bounds
-# the (id, vector) frame transfers in ONE Arrow collect and the whole
+# Driver twin caps for bucketed LOF: at or under these bounds the
+# (id, vector) frame crosses the driver_table seam once and the whole
 # bucket → candidate-pair → top-k → LOF derivation runs on exact
 # vectorized twins of the DECIMAL conventions (driver_exact.py) — no
 # transcendental kernels beyond the correctly-rounded sqrt, so the twin
@@ -2018,43 +2018,31 @@ def lof_scores_bucketed(
     from pyspark.sql.types import IntegralType
 
     from metadata_etl_framework_spark.ops.driver_exact import (
-        driver_gates_enabled,
+        column_np,
+        driver_table,
     )
 
-    # row cap from BOTH gate dimensions (rows and rows×dim cells) so
-    # the limit probe below bounds the transfer under either
+    # row cap from BOTH gate dimensions (rows and rows×dim cells); the
+    # twin is row-order-free (it groups by bucket and ranks by
+    # (cos, id)), so the limit probe may transfer. Ragged vectors,
+    # duplicate ids, out-of-bound magnitudes or a Σ|bucket|² above the
+    # pair cap fall back to the distributed chain.
     _lof_cap = min(
         LOF_DRIVER_MAX_ROWS, LOF_DRIVER_MAX_CELLS // max(dim, 1)
     )
-    if driver_gates_enabled() and isinstance(
-        df.schema[id_col].dataType, IntegralType
-    ):
-        # bounded driver fast path (gate rationale at
-        # LOF_DRIVER_MAX_ROWS); ragged vectors, duplicate ids or
-        # out-of-bound magnitudes fall through to the distributed
-        # chain, as does a Σ|bucket|² above the pair cap. The gate
-        # probe IS the transfer: limit(cap+1) collects at most cap+1
-        # rows (the former separate base.count() full-scan gate job
-        # is gone), and the twin is row-order-free (it groups by
-        # bucket and ranks by (cos, id)), so limit's order is
-        # irrelevant.
+    tbl = (
+        driver_table(base.select(id_col, vec_col), _lof_cap)
+        if isinstance(df.schema[id_col].dataType, IntegralType)
+        else None
+    )
+    if tbl is not None:
         import numpy as np
 
-        tbl = base.select(id_col, vec_col).limit(_lof_cap + 1).toArrow()
         n_rows = tbl.num_rows
-        if n_rows > _lof_cap:
-            tbl = None
-    else:
-        tbl = None
-    if tbl is not None:
         vcol = tbl.column(vec_col).combine_chunks()
         offs = np.diff(vcol.offsets.to_numpy(zero_copy_only=False))
         if vcol.null_count == 0 and (offs == dim).all():
-            ids_np = (
-                tbl.column(id_col)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
+            ids_np = column_np(tbl, id_col, np.int64)
             V = (
                 vcol.flatten()
                 .to_numpy(zero_copy_only=False)

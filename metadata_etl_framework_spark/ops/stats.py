@@ -587,41 +587,28 @@ def spearman_corr(
     _scan_cached: "list[DataFrame]" = []
     try:
         n = base.count()
+        from metadata_etl_framework_spark.ops.driver_exact import (
+            column_np,
+            driver_table,
+            exact_sum_i64,
+        )
         from metadata_etl_framework_spark.ops.glm import (
             GLM_DRIVER_MAX_ROWS,
         )
 
-        from metadata_etl_framework_spark.ops.driver_exact import (
-            driver_gates_enabled,
+        tbl = (
+            driver_table(base, GLM_DRIVER_MAX_ROWS, size=n)
+            if n > 0
+            else None
         )
-
-        if driver_gates_enabled() and 0 < n <= GLM_DRIVER_MAX_ROWS:
-            # bounded driver fast path (the GLM trainer convention):
-            # ONE Arrow transfer of the two double columns, then the
-            # tie-averaged doubled ranks and the five moment sums run
-            # as exact integer arithmetic — np.unique groups doubles
-            # exactly like the distributed groupBy (NaNs collapse and
-            # sort last, -0.0 merges with 0.0) and the doubled ranks
-            # are exact ints, so the twin is bit-exact by
-            # construction. Above the gate the distributed
-            # prefix-scan chain below is unchanged.
+        if tbl is not None:
+            # exact: np.unique groups doubles like the distributed
+            # groupBy (NaNs collapse and sort last, -0.0 merges with
+            # 0.0), and the doubled ranks and moment sums are exact ints
             import numpy as np
 
-            from metadata_etl_framework_spark.ops.driver_exact import (
-                exact_sum_i64,
-            )
-
-            tbl = base.toArrow()
-            a_np = (
-                tbl.column("_a")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
-            b_np = (
-                tbl.column("_b")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
+            a_np = column_np(tbl, "_a", np.float64)
+            b_np = column_np(tbl, "_b", np.float64)
 
             def _dranks(x):
                 _, inv, cnts = np.unique(

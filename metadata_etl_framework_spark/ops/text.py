@@ -13,9 +13,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from metadata_etl_framework_spark.ops.driver_exact import (
-    driver_gates_enabled,
-)
+from metadata_etl_framework_spark.ops.driver_exact import driver_table
 
 
 DEFAULT_STOPWORDS = (
@@ -1807,7 +1805,7 @@ def remove_spans(
 
 
 def _bpe_train_local(
-    word_counts: "list[tuple[list[str], int]]",
+    word_counts: "Iterable[tuple[list[str], int]]",
     n_merges: int,
     min_pair_count: int,
 ) -> "list[tuple[int, str, str, str, int]]":
@@ -1880,12 +1878,12 @@ def bpe_train(
     sequential Spark jobs, while the word-frequency table is
     vocab-sized (millions of rows at web scale, not corpus-sized) and
     CONSTANT in row count across iterations. When it has at most
-    ``BPE_DRIVER_MAX_WORDS`` distinct words, the table is collected
-    once and all merges run in pure Python — merge-for-merge identical
-    output (same weighted counts, same ordering, same greedy fuse;
-    pinned by a both-paths test). Above the gate, or with
-    ``SPARK_GRAFT_DRIVER_GATE=0``, the fully distributed per-iteration
-    loop runs.
+    ``BPE_DRIVER_MAX_WORDS`` distinct words, the table crosses the
+    ``driver_table`` seam once and all merges run in pure Python —
+    merge-for-merge identical output (same weighted counts, same
+    ordering, same greedy fuse; pinned by a both-paths test). Above
+    the gate, or with ``SPARK_GRAFT_DRIVER_GATE=0``, the fully
+    distributed per-iteration loop runs.
 
     Property-tested against an independent pure-Python BPE reference
     (tests/test_corpus_ops.py).
@@ -1907,11 +1905,14 @@ def bpe_train(
         "merge_idx int, left string, right string, merged string, "
         "pair_count long"
     )
-    if driver_gates_enabled() and cur.count() <= BPE_DRIVER_MAX_WORDS:
-        rows = cur.collect()
+    tbl = driver_table(cur, BPE_DRIVER_MAX_WORDS, size=cur.count)
+    if tbl is not None:
         cur.unpersist()
         local = _bpe_train_local(
-            [(list(r["syms"]), int(r["count"])) for r in rows],
+            zip(
+                tbl.column("syms").to_pylist(),
+                tbl.column("count").to_pylist(),
+            ),
             n_merges,
             min_pair_count,
         )

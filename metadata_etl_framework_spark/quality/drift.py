@@ -205,80 +205,6 @@ def _dual_prefix_scan(
     return out.drop("__pid", "__la", "__lb", "__oa", "__ob", "__ns")
 
 
-def _grouped_dual_prefix_scan(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    a_col: str,
-    b_col: str,
-    persisted: "list[DataFrame] | None" = None,
-) -> DataFrame:
-    """Per-group inclusive running totals of two count columns over
-    ``order_col`` — ALL groups' dual prefix scans through ONE
-    repartition (the :func:`_dual_prefix_scan` two-phase pattern lifted
-    to a group key): range-partition by (group, order), collect one
-    (partition, group) subtotal row each — O(partitions · groups),
-    driver-sized — walk each group's partitions in order for its
-    offsets, then broadcast the offsets back onto a local window
-    partitioned by (partition, group). A group may span partitions and
-    a partition may hold many groups; both are handled because ranges
-    are contiguous in (group, order) order. ``(group_col, order_col)``
-    pairs must be unique (callers pass grouped-by-value frames).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    n_parts = max(
-        df.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
-    )
-    ranged = df.repartitionByRange(
-        n_parts, F.col(group_col), F.col(order_col)
-    )
-    # persist before the subtotal collect: range boundaries come from a
-    # sample, so re-evaluating lineage could re-partition differently
-    # than the job the offsets were computed from
-    with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if persisted is not None:
-        persisted.append(with_pid)
-    subtotals = (
-        with_pid.groupBy("__pid", group_col)
-        .agg(
-            F.sum(F.col(a_col)).alias("__sa"),
-            F.sum(F.col(b_col)).alias("__sb"),
-        )
-        .collect()
-    )
-    if not subtotals:
-        return df.withColumn("__ca", F.lit(0).cast("long")).withColumn(
-            "__cb", F.lit(0).cast("long")
-        )
-    offsets = []
-    acc: dict = {}
-    for row in sorted(subtotals, key=lambda r: (r[group_col], r["__pid"])):
-        g = row[group_col]
-        oa, ob = acc.get(g, (0, 0))
-        offsets.append((row["__pid"], g, oa, ob))
-        acc[g] = (oa + (row["__sa"] or 0), ob + (row["__sb"] or 0))
-    off = spark.createDataFrame(
-        offsets, f"__pid int, {group_col} string, __oa long, __ob long"
-    )
-    w = (
-        Window.partitionBy("__pid", group_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        with_pid.withColumn("__la", F.sum(F.col(a_col)).over(w))
-        .withColumn("__lb", F.sum(F.col(b_col)).over(w))
-        .join(F.broadcast(off), ["__pid", group_col])
-        .withColumn("__ca", (F.col("__la") + F.col("__oa")).cast("long"))
-        .withColumn("__cb", (F.col("__lb") + F.col("__ob")).cast("long"))
-        .drop("__pid", "__la", "__lb", "__oa", "__ob")
-    )
-
-
 def _merged_value_counts(ref: DataFrame, cur: DataFrame, col: str) -> DataFrame:
     """Per-distinct-value counts for both sides, full-outer merged:
     (v, rc, cc). The shared first stage of every exact CDF-comparison

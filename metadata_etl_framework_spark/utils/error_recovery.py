@@ -1,8 +1,8 @@
 """Error recovery: classification, retry/backoff, circuit breaker,
-checkpoints, quarantine.
+quarantine.
 
 Parity target: src/utils/error_recovery.py:30-556 (classify :184-227,
-breaker :259-307, checkpoint :309-344, quarantine :345-398). All control
+breaker :259-307, quarantine :345-398). All control
 logic is driver-side; the quarantine path is the only data-plane piece —
 it writes the failing rows (a rule's failure mask) as parquet so they can
 be reprocessed, which at scale is a filtered write, never a collect.
@@ -11,7 +11,7 @@ be reprocessed, which at scale is a filtered write, never a collect.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
@@ -93,25 +93,6 @@ class CircuitBreaker:
         self._failures = 0
         self._opened_at = None
         return result
-
-
-@dataclass
-class CheckpointManager:
-    """Step-level resume points for batch pipelines (reference :309-344).
-    Streaming uses Spark's checkpointLocation instead — this is for the
-    batch orchestration path."""
-
-    store: Any  # MetadataStore-like (insert/query)
-    _memory: dict[tuple[int, str], dict] = field(default_factory=dict)
-
-    def save(self, run_id: int, step: str, state: dict[str, Any]) -> None:
-        self._memory[(run_id, step)] = dict(state)
-
-    def load(self, run_id: int, step: str) -> dict[str, Any] | None:
-        return self._memory.get((run_id, step))
-
-    def completed_steps(self, run_id: int) -> list[str]:
-        return [s for (r, s) in self._memory if r == run_id]
 
 
 def quarantine_rows(

@@ -4,6 +4,9 @@
    twin: with it at 0 each env-gated operator must run its
    DISTRIBUTED arm and produce bit-identical results — the twins are
    exact replicas, so toggling the venue may never change a value.
+   A spy on the ``driver_table`` seam proves the twin arm really ran
+   with the gate on (else both arms would be distributed and the
+   comparison vacuous) and never with it off.
 2. ``round_half_up_int64``'s vectorized tie-band branch is fuzzed
    against the exact scalar Decimal path (the regression test the
    r16 ADVICE found missing).
@@ -18,12 +21,15 @@
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pytest
 
 from metadata_etl_framework_spark.functions.aggregations import (
     robust_moments,
 )
+from metadata_etl_framework_spark.ops import driver_exact
 from metadata_etl_framework_spark.ops.clustering import gmm2_train
 from metadata_etl_framework_spark.ops.dedup import connected_components
 from metadata_etl_framework_spark.ops.driver_exact import (
@@ -182,8 +188,8 @@ def _bpe(spark):
     return bpe_train(docs, n_merges=5)
 
 
-# Every operator that reads driver_gates_enabled(), each on a fixture
-# small enough to sit under its twin's cap.
+# Every operator with a driver twin, each on a fixture small enough to
+# sit under its twin's cap.
 GATED = {
     "huber_train": lambda s: huber_train(
         _numeric(s), ["x1", "x2"], "t", iterations=2
@@ -231,19 +237,48 @@ GATED = {
 }
 
 
+@pytest.fixture()
+def seam_spy(monkeypatch):
+    """Wrap the ``driver_table`` seam wherever the package bound it;
+    the returned list records, per call, whether it handed a table to
+    a twin."""
+    real = driver_exact.driver_table
+    handed: list = []
+
+    def spy(*args, **kwargs):
+        tbl = real(*args, **kwargs)
+        handed.append(tbl is not None)
+        return tbl
+
+    for name, mod in list(sys.modules.items()):
+        if (
+            name.startswith("metadata_etl_framework_spark")
+            and getattr(mod, "driver_table", None) is real
+        ):
+            monkeypatch.setattr(mod, "driver_table", spy)
+    return handed
+
+
 @pytest.mark.parametrize("op", sorted(GATED))
-def test_gate_env_forces_distributed_identical(spark, monkeypatch, op):
+def test_gate_env_forces_distributed_identical(
+    spark, monkeypatch, seam_spy, op
+):
     """The operator's output with the env gate OFF (distributed arm)
     must match the twin's (gate ON) bit-for-bit: rows compare by
-    ``repr``, so every float digit and every NULL must agree."""
+    ``repr``, so every float digit and every NULL must agree. The
+    seam must hand a twin its table at least once with the gate on,
+    and never with it off."""
 
     def rows():
         return sorted(repr(tuple(r)) for r in GATED[op](spark).collect())
 
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "1")
     on = rows()
+    assert any(seam_spy), f"{op}: no driver twin engaged with the gate on"
+    seam_spy.clear()
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
     assert rows() == on
+    assert not any(seam_spy)
     assert on
 
 

@@ -128,10 +128,6 @@ RETURNED_LAZY_PERSISTS = {
     ("ops/dedup.py", "_shingle_base"),
     ("ops/dedup.py", "minhash_near_duplicates"),
     ("ops/dedup.py", "bloom_incremental_dedup"),
-    # loop-materialization helper: persist/release ownership sits in the
-    # calling loop (pagerank/label_propagation), localCheckpoint arm has
-    # no release API (ContextCleaner)
-    ("ops/graph.py", "_materialize_iter"),
     # offsets-correctness cache (see packing.py docstring): released by
     # the ContextCleaner when the returned frame is dropped
     ("ops/packing.py", "global_row_number"),

@@ -2872,3 +2872,20 @@ def test_cox_driver_pass_gate_parity(spark, monkeypatch):
         pd.testing.assert_frame_equal(
             make().toPandas(), want, check_exact=True
         )
+
+
+def test_checkpoint_leaf_returns_leaf_and_rows(spark):
+    """The one materializer hands back the count its persist job
+    computed, and a frame whose logical plan is a single LogicalRDD
+    (lineage cut)."""
+    from metadata_etl_framework_spark.ops.materialize import checkpoint_leaf
+
+    df = spark.range(37).where(F.col("id") % 3 != 0)
+    leaf, rows = checkpoint_leaf(df)
+    assert rows == df.count() == 24
+    plan = leaf._jdf.queryExecution().logical()
+    assert plan.nodeName() == "LogicalRDD"
+    assert plan.children().isEmpty()
+    assert sorted(r.id for r in leaf.collect()) == [
+        i for i in range(37) if i % 3
+    ]
