@@ -22,230 +22,14 @@ import time
 from metadata_etl_framework_spark.session import get_spark
 
 import __spark_entry__ as entry_mod
+from driver_keys import tagged
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: one per operator family — scan+agg, joins, windows,
 # set-ops, DQ single-pass, anomaly, sessionization, text, dedup, ANN.
-HEADLINE = [
-    "q1_pricing_summary",
-    "sql_q3_shipping_priority",
-    "sql_q5_local_volume",
-    "sql_q10_returned_items",
-    "join_inner",
-    "join_multi",
-    "agg_orders_by_priority",
-    "window_rank_lag",
-    "window_frames",
-    "dedup_distinct",
-    "dq_suite",
-    "profile_all_columns",
-    "anomaly_suite",
-    "events_sessions",
-    "events_windows",
-    "text_features",
-    "dedup_exact_groups",
-    "minhash_near_dups",
-    "dedup_embedding_cosine",
-    "embed_knn_join",
-    "asof_join_purchases",
-    "range_join_price_bands",
-    "dedup_clusters",
-    "text_decontaminate",
-    "funnel_conversion",
-    "pack_sequences",
-    "topk_per_order",
-    "heavy_hitters_qty",
-    "text_tfidf_top_terms",
-    "corpus_weighted_sample",
-    "embed_group_centroids",
-    "text_quality_score",
-    "dedup_incremental",
-    "pack_length_buckets",
-    "embed_group_diversity",
-    "layout_compaction_plan",
-    "dedup_bloom_probe",
-    "corpus_dsir_weights",
-    "corpus_domain_cap",
-    "embed_semantic_dedup",
-    "drift_suite",
-    "curation_funnel",
-    "events_cohort_retention",
-    "events_rolling_active_users",
-    "events_attribution_last_touch",
-    "drift_emd_quantity",
-    "orders_global_rank",
-    # round-7 flagships: binned (100-TB arm) drift stats + scale-safe
-    # exact global quantiles
-    "drift_ks_binned",
-    "drift_emd_binned",
-    "profile_global_quantiles",
-    "ann_pq_adc",
-    # round-8: the combined IVF-PQ search and the gate-forced binned
-    # drift suite (the 100-TB arm's cost tracked per round, not just
-    # its correctness — r7 verdict item 6)
-    "ann_ivf_pq",
-    "drift_suite_forced_binned",
-    # round-8: one-pass all-pairs correlation and the iterative
-    # PageRank (per-iteration persist/release discipline under timing).
-    # r16: graph_pagerank_parts ADDED alongside the supplier key — the
-    # supplier co-occurrence projection is near-complete at sf≥0.01
-    # (edge count grows quadratically with scale, so it measures graph
-    # DENSITY), while the part co-purchase graph is the sparse
-    # plan-quality workload (r15 verdict task 5). The optimization
-    # contract forbids removing bench entries, so both run.
-    "corr_matrix_lineitem",
-    "graph_pagerank_suppliers",
-    "graph_pagerank_parts",
-    # round-10 flagships: reference-LM perplexity (two corpus-scale
-    # shuffle joins), the distinct-score prefix-scan eval pair, the
-    # mass-conserving PageRank arm, and the mapInPandas Mahalanobis
-    # pass (covariance GEMM partials + scoring GEMM under timing)
-    "text_ccnet_perplexity",
-    "eval_pr_auc_orders",
-    "eval_threshold_sweep_orders",
-    "graph_pagerank_dangling",
-    "embed_mahalanobis",
-    # round-10 second sweep: the degree-ordered triangle census on its
-    # sparse design-case graph (the co-supplier entry is the DENSE
-    # stress shape: ~90M triangles on a near-clique at sf0.1 — correct
-    # but a census workload, not a latency headline), the two-stage
-    # BM25->TREC retrieval audit, the windowed HLL sketch rollup, and
-    # the fused-residual regression scorecard
-    "graph_triangles_ring",
-    "eval_retrieval_bm25",
-    "sketch_hll_rollup_events",
-    "eval_regression_orders",
-    # round-10 third sweep: iterative community/peel loops under timing
-    # (persist-release vs localCheckpoint disciplines), the corpus BLEU
-    # double gram-join, the OOF encoding grid + broadcast join-back,
-    # and the embedding-drift GEMV pass
-    "graph_label_propagation",
-    "graph_kcore_ring",
-    "eval_bleu_docs",
-    "feat_target_encoding_orders",
-    "embed_drift_snapshots",
-    # round-10 fourth sweep: the char-gram clip join (heaviest gram
-    # fan-out), journey-window Markov attribution, the exact-NTILE
-    # uplift grid, and the double log-log OLS over term/growth grids
-    "eval_chrf_docs",
-    "events_markov_attribution",
-    "eval_qini_orders",
-    "text_scaling_laws",
-    # round-10 fifth sweep: the one-shuffle Expand rollup and the
-    # bucket x period spectral fan-out
-    "agg_rollup_orders",
-    "events_periodogram",
-    # round-11: the replicate-fan-out Poisson bootstrap (map-side
-    # partial collapse under timing), item-item CF + top-N scoring
-    # (symmetrized broadcast model), the O(n·L) centroid silhouette,
-    # the two-round Lloyd loop, and the DP release audit. Exact LOF is
-    # deliberately NOT a headline: it is the O(n²)-by-contract gated
-    # path (exact_max_rows) — correctness-checked by the oracle suite,
-    # not raced as a latency number.
-    "stats_bootstrap_ci_price",
-    "recsys_user_brand_recs",
-    "embed_silhouette_labels",
-    "embed_kmeans_summary",
-    "privacy_dp_counts_orders",
-    # round-11 close: the two-phase average-rank scan (Mann-Whitney),
-    # the integrated-gap drift statistic on the dual prefix scan, the
-    # two-string-pass RAKE keyword pipeline, and the MA-decomposition
-    # window ladder. (graph_closeness_ring is fixed-size BFS overhead,
-    # not a data-scaled workload; exact LOF stays gated — neither is a
-    # latency headline.)
-    "stats_mannwhitney_price",
-    "drift_cvm_quantity",
-    "text_rake_keywords",
-    "events_seasonal_decompose",
-    # round-12: the top-k-pruned CF model (symmetrize-rank-canonicalize
-    # under timing), the LSH-bucketed LOF scale path, NB train+score
-    # over the full corpus, the two-sample bootstrap fan-out, and the
-    # Ljung-Box cumulation on the ACF grid. (events_ab_always_valid is
-    # a 1-row closed form over the ab_test reduction — oracle-checked,
-    # not a latency headline.)
-    "recsys_topk_model",
-    "embed_lof_bucketed",
-    "nb_lang_docs",
-    "stats_bootstrap_diff_price",
-    "events_ljung_box",
-    # round-12 second sweep: 3 Newton passes over the full orders scan
-    # (the iterative-GLM cost under timing), and the walk corpus +
-    # skip-gram PMI counting over the bipartite graph (walks are 3
-    # hash-seeded equi-join hops; PMI is the band self-join)
-    "glm_logit_orders",
-    "graph_walk_pmi",
-    # round-12 third sweep: the df-capped containment inverted index,
-    # the distinct-values robust-moments scans, and the two rank tests
-    # (per-value prefix-scan ranks joined back to rows)
-    "dedup_containment_docs",
-    "profile_robust_price",
-    "stats_spearman_qty_price",
-    "stats_kruskal_price_prio",
-    # round-13: per-group KLL block compactors + merge + CDF probe,
-    # 2-round rank-2 ALS (4 grouped normal-equation passes + 4
-    # distributed 2×2 solves under timing), 4-fold leave-one-fold-out
-    # CV (two scans for all 4 models), and forward-σ/backward-δ
-    # Brandes from 4 sources on the chorded ring
-    "sketch_kll_rollup_price",
-    "recsys_als_factors",
-    "glm_cv_lineitem",
-    "glm_cv_logit_orders",
-    "graph_betweenness_ring",
-    # round-13 second sweep: Cox PH — per-Newton-iteration duration
-    # grid + DESC risk-set suffix sums under timing — and the DeLong
-    # AUC interval (dual prefix scan + two grid aggregates)
-    "events_cox_ph",
-    "eval_auc_delong_orders",
-    "sketch_kll_rollup_events",
-    # round-13 continuation sweep: GLM family completion (Poisson),
-    # link prediction + partition quality on the sparse part
-    # co-purchase graph, and the t-closeness release audit
-    "glm_poisson_orders",
-    "graph_link_prediction",
-    "graph_assortativity_parts",
-    "graph_modularity_brands",
-    "privacy_t_closeness_customer",
-    "events_ar2_forecast",
-    "events_esd_hourly",
-    "eval_aipw_ate_orders",
-    "text_textrank_keywords",
-    "recsys_pop_recs",
-    "recsys_eval_coverage",
-    "glm_huber_lineitem",
-    "stats_gmm2_price",
-    "events_ab_ratio_delta",
-    "sketch_cm_rollup_events",
-    "graph_eigenvector_trade",
-    "anomaly_hbos_lineitem",
-    "events_rmst",
-    # round-14: joint-tau quantile IRLS (shared scan per pass through
-    # the two-level exact aggregation), the min-ward greedy modularity
-    # rounds on the co-purchase graph, and the Holt-Winters backtest
-    # (driver recursion over the calendar-bounded window; the timing
-    # is the bucket groupBy + last-window pick)
-    "glm_quantile_lineitem",
-    "graph_greedy_modularity",
-    "events_holt_winters",
-    # round-14 continuation: full two-level Louvain (phase-1 rounds +
-    # contraction + weighted phase-2 rounds + exact acceptance pick)
-    "graph_louvain_copurchase",
-    # round-15: the DeepWalk factorization half (walks → PMI → PPMI →
-    # rank-2 ALS), its end-to-end embedding consumption (brute-force
-    # cosine top-3 over the factored vectors), and the d=2 Cox PH
-    # (4 subject scans, 9 pico streams each, closed-form 2×2 solves)
-    "graph_pmi_factors",
-    "graph_pmi_knn",
-    "events_cox_ph_multi",
-    # round-15 continuation: stratified Cox (per-stratum risk-set
-    # suffix sums under a shared β) and linear-time kernel drift
-    # (RFF-MMD: one tagged aggregation, 8 plane-dot features)
-    "events_cox_ph_strata",
-    "drift_mmd_embeddings",
-    # round-16: native distributed DBSCAN (grid-cell ε-join + core-core
-    # connected components) over the 2-D embedding slice
-    "anomaly_dbscan_embeddings",
-]
+# A key joins it with the "headline" tag on its registry record.
+HEADLINE = tagged("headline")
 
 # NOTE (r16): a 3-slice sampled "stable tier" (r15 verdict task 7) was
 # prototyped here and REVERTED before close — the optimization-round
@@ -264,33 +48,9 @@ HEADLINE = [
 # that actually runs at fact scale, and it is what optimization rounds
 # target. Results are identical either way (the twins are bit-exact);
 # only the execution venue changes, so this is measurement, not a
-# second query set — the headline "queries" map is untouched.
-DRIVER_GATED = [
-    "glm_cv_logit_orders",
-    "glm_huber_lineitem",
-    "glm_quantile_lineitem",
-    "graph_pagerank_suppliers",
-    "graph_pagerank_parts",
-    "graph_pagerank_dangling",
-    "graph_label_propagation",
-    "graph_walk_pmi",
-    "graph_pmi_factors",
-    "graph_pmi_knn",
-    "graph_betweenness_ring",
-    "graph_greedy_modularity",
-    "graph_louvain_copurchase",
-    "graph_eigenvector_trade",
-    "recsys_user_brand_recs",
-    "recsys_topk_model",
-    "recsys_als_factors",
-    "embed_lof_bucketed",
-    "stats_gmm2_price",
-    "stats_spearman_qty_price",
-    "profile_robust_price",
-    "events_cox_ph",
-    "events_cox_ph_multi",
-    "events_cox_ph_strata",
-]
+# second query set — the headline "queries" map is untouched. A key
+# joins the arm with the "gated" tag on its registry record.
+DRIVER_GATED = tagged("gated")
 
 
 def _force(df) -> None:
@@ -618,7 +378,9 @@ def main() -> None:
     # noise anchor is useless if it gets truncated out of the artifact.
     # Stdout carries ONLY this line when the detail file wrote (the r15
     # artifact's tail held the summary twice — full-out + summary both
-    # landed in the capture window).
+    # landed in the capture window). The per-query map rides this line
+    # as well: round-over-round comparisons read "queries" from it, and
+    # without it they record an empty per_query.
     summary = {
         "metric": "total_query_time",
         "value": out["value"],
@@ -626,6 +388,7 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         "n_queries": len(timings),
+        "queries": timings,
         "detail": detail_path,
         "canary": canary,
     }

@@ -66,20 +66,6 @@ def convert_to_string(df: DataFrame, column: str) -> DataFrame:
     return df.withColumn(column, F.col(column).cast("string"))
 
 
-# strptime → Spark datetime pattern translation (config compatibility).
-_STRPTIME = {
-    "%Y": "yyyy", "%m": "MM", "%d": "dd", "%H": "HH", "%M": "mm",
-    "%S": "ss", "%y": "yy", "%f": "SSSSSS",
-}
-
-
-def strptime_to_spark(fmt: str) -> str:
-    out = fmt
-    for k, v in _STRPTIME.items():
-        out = out.replace(k, v)
-    return out
-
-
 def parse_json_column(
     df: DataFrame,
     column: str,

@@ -6,9 +6,8 @@ signatures, partition sizing — are real and tested. Image METADATA
 decode is REAL: a pure-Python container-header parser handles
 PNG/GIF/BMP/JPEG without any imaging library (``decode_image_header``),
 with Pillow import-gated for full decodes of other formats. Pixel-level
-feature extraction and video frame decode remain STUBBED with
-deterministic fakes (ffmpeg/torch are not in this container), clearly
-marked below.
+feature extraction remains STUBBED with deterministic fakes (torch is
+not a dependency), clearly marked below; video frames are not decoded.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ IMAGE_META_SCHEMA = (
 IMAGE_FEATURES_SCHEMA = (
     "doc_id long, width int, height int, format string, feature array<float>"
 )
-FRAME_SAMPLE_SCHEMA = "doc_id long, frame_index int, frame binary"
 
 
 def _decode_image_stub(payload: bytes) -> tuple[int, int, str]:
@@ -151,32 +149,6 @@ def image_features(df: DataFrame, media_col: str = "media", dim: int = 8) -> Dat
             )
 
     return df.mapInPandas(featurize, schema=f"doc_id long, feature array<float>")
-
-
-def sample_frames(df: DataFrame, media_col: str = "media", every_n: int = 10) -> DataFrame:
-    """video binary → sampled frame rows (STUB frames; real: ffmpeg).
-
-    One input row fans out to many frame rows — done inside mapInPandas so
-    the fan-out never materializes on the driver.
-    """
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r[media_col] or b"")
-                n_frames = 1 + (hashlib.sha256(payload).digest()[0] % 5)
-                for i in range(n_frames):
-                    rows.append(
-                        {
-                            "doc_id": r["doc_id"],
-                            "frame_index": i * every_n,
-                            "frame": hashlib.sha256(payload + bytes([i])).digest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_index", "frame"])
-
-    return df.mapInPandas(sample, schema=FRAME_SAMPLE_SCHEMA)
 
 
 def decode_wav_header(payload: bytes) -> tuple[int, int, int, int] | None:

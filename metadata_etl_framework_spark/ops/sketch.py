@@ -46,7 +46,7 @@ def hash32(col: Column) -> Column:
     low-31-bit clamp → Knuth multiply → xor-shift → multiply →
     xor-shift. Every step is %/*/xor/shift on BIGINT, replayable in
     any SQL engine (the DuckDB oracle fragment is
-    ``__spark_entry__._HASH32_SQL``)."""
+    ``driver_keys/common.py::_hash32_cte_sql``)."""
     x = col.cast("long") % _M31
     h1 = (x * F.lit(_MULT_A)) % _M32
     h2 = (h1.bitwiseXOR(F.shiftright(h1, 16)) * F.lit(_MULT_B)) % _M32

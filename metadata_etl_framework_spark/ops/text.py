@@ -756,9 +756,8 @@ def mixing_plan(
     counts land on the target ratio exactly. One groupBy over the corpus
     + broadcast scalar — the plan is a tiny frame regardless of corpus
     size. Returns (source, n_docs, n_tokens, target_share,
-    sample_fraction, expected_tokens); feed fractions to
-    ``DataFrame.sampleBy(source_col, fractions, seed)`` to materialize
-    the mix (sampling itself is RNG-dependent, hence split out).
+    sample_fraction, expected_tokens); ``apply_mixing_plan`` draws the
+    mix from it.
     """
     tok = docs.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -836,19 +835,27 @@ def apply_mixing_plan(
     plan: DataFrame,
     source_col: str = "source",
     seed: int = 42,
+    id_col: str = "doc_id",
 ) -> DataFrame:
     """Materialize a ``mixing_plan``: stratified Bernoulli sampling with
-    the plan's per-source fractions (``sampleBy`` — one pass, no
-    shuffle; each row flips a seeded coin for its own stratum).
-    Sampling is RNG-dependent, so correctness is statistical: realized
-    token counts concentrate on the plan's ``expected_tokens`` (tested
-    with tolerance); the deterministic arithmetic lives in
-    ``mixing_plan`` where the oracle checks it exactly."""
-    fractions = {
-        r[source_col]: float(r["sample_fraction"])
-        for r in plan.select(source_col, "sample_fraction").collect()
-    }
-    return docs.sampleBy(source_col, fractions, seed)
+    the plan's per-source fractions. A row is kept when
+    ``corpus.md5_uniform(id_col, salt=str(seed))`` is below its stratum's
+    ``sample_fraction`` (sources missing from the plan keep nothing) —
+    the step compiler's ``sample`` fraction draw: one pass, no shuffle,
+    no RNG. Results are deterministic per (id, seed) and independent of
+    partitioning, and a SQL oracle can replay the draw. Realized token
+    counts concentrate on the plan's ``expected_tokens`` (tested with
+    tolerance); the plan arithmetic lives in ``mixing_plan`` where the
+    oracle checks it exactly."""
+    from metadata_etl_framework_spark.ops.corpus import md5_uniform
+
+    frac = F.lit(0.0)
+    for r in plan.select(source_col, "sample_fraction").collect():
+        frac = F.when(
+            F.col(source_col) == F.lit(r[source_col]),
+            F.lit(float(r["sample_fraction"])),
+        ).otherwise(frac)
+    return docs.filter(md5_uniform(F.col(id_col), salt=str(seed)) < frac)
 
 
 def oov_rate(

@@ -444,6 +444,28 @@ def test_apply_mixing_plan_realizes_expected_tokens(spark):
     assert abs(got["big"] - expected["big"]) / expected["big"] < 0.2
 
 
+def test_apply_mixing_plan_independent_of_partitioning(spark):
+    from metadata_etl_framework_spark.ops.text import (
+        apply_mixing_plan,
+        mixing_plan,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "w " * (1 + i % 9), ("a", "b", "c")[i % 3]) for i in range(600)],
+        "doc_id long, text string, source string",
+    )
+    weights = spark.createDataFrame(
+        [("a", 0.2), ("b", 0.3), ("c", 0.5)], "source string, share double"
+    )
+    plan = mixing_plan(docs, weights)
+    one, seven = (
+        sorted(apply_mixing_plan(docs.repartition(n), plan, seed=3).collect())
+        for n in (1, 7)
+    )
+    assert one == seven
+    assert 0 < len(one) < 600
+
+
 def test_global_prefix_sum_matches_naive_window(spark):
     from metadata_etl_framework_spark.ops.packing import global_prefix_sum
 
