@@ -83,18 +83,16 @@ def _simhash_near_dups_pairs(spark, sf_dir):
 
 def _dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: the pair output of minhash_near_dups closed
-    into connected components (ops/dedup.py::connected_components,
-    iterative hash-min label propagation) — similarity pairs are not
-    transitive, so actual dedup needs the component's min id as cluster
-    id and a canonical-keeper flag. Oracle: DuckDB recursive CTE over
+    into connected components (ops/dedup.py::near_duplicate_clusters →
+    connected_components, iterative hash-min label propagation; the pair
+    caches are released once the components exist) — similarity pairs
+    are not transitive, so actual dedup needs the component's min id as
+    cluster id and a canonical-keeper flag. Oracle: DuckDB recursive CTE over
     the same exact-Jaccard pair set."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup_ops.minhash_near_duplicates(
+    return dedup_ops.near_duplicate_clusters(
         docs, threshold=0.2, num_hashes=32, num_bands=8
-    )
-    return dedup_ops.connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "cluster_id", "is_canonical"
-    )
+    ).select(F.col("node").alias("doc_id"), "cluster_id", "is_canonical")
 
 
 def _simhash_signatures(spark, sf_dir):

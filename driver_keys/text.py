@@ -257,7 +257,7 @@ def _text_quality_score(spark, sf_dir):
     """Composite [0,1] quality score (ops/text.py::quality_score):
     weighted blend of capped length, stopword, punctuation-density, and
     Gopher line-repetition components — the single sortable number a
-    corpus filter thresholds on. One JVM projection + one id join."""
+    corpus filter thresholds on. One JVM projection, no join."""
     docs = _t(spark, sf_dir, "documents")
     return text_ops.quality_score(docs)
 

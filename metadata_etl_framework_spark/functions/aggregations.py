@@ -523,16 +523,33 @@ def stratified_sample(
     fractions: dict | float,
     seed: int = 42,
 ) -> DataFrame:
-    """Per-stratum Bernoulli sampling (``sampleBy``): the standard way to
-    downsample a training corpus while controlling per-class rates.
+    """Per-stratum Bernoulli sampling: the standard way to downsample a
+    training corpus while controlling per-class rates.
 
-    ``fractions`` is {stratum: fraction} or a single fraction applied to
-    every observed stratum (one distinct-scan to enumerate strata — at
-    scale pass the explicit dict instead). Deterministic per seed."""
-    if not isinstance(fractions, dict):
-        strata = [r[0] for r in df.select(strata_col).distinct().collect()]
-        fractions = {s: float(fractions) for s in strata}
-    return df.sampleBy(strata_col, fractions, seed=seed)
+    ``fractions`` is {stratum: fraction} (strata missing from it keep
+    nothing) or a single fraction applied to every stratum. A row is kept
+    when a seeded hash of its content, ``xxhash64(seed, *columns)``
+    scaled to [0, 1), is below its stratum's fraction: one pass, no
+    shuffle, no RNG stream. The draw is deterministic per seed and
+    independent of partitioning and cluster size (``sampleBy`` draws from
+    a per-partition RNG, so its rows change with the partitioning).
+    Identical rows share one draw: they are all kept or all dropped."""
+    if isinstance(fractions, dict):
+        if not all(0.0 <= float(f) <= 1.0 for f in fractions.values()):
+            raise ValueError("fractions must be in [0, 1]")
+        frac = F.lit(0.0)
+        for stratum, f in fractions.items():
+            frac = F.when(
+                F.col(strata_col).eqNullSafe(F.lit(stratum)), F.lit(float(f))
+            ).otherwise(frac)
+    else:
+        if not 0.0 <= float(fractions) <= 1.0:
+            raise ValueError("fractions must be in [0, 1]")
+        frac = F.lit(float(fractions))
+    cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
+    h = F.xxhash64(F.lit(int(seed)), *cols)
+    u = F.shiftrightunsigned(h, 11).cast("double") / F.lit(float(1 << 53))
+    return df.filter(u < frac)
 
 
 def group_concat(

@@ -356,34 +356,32 @@ class TransformEngine:
                 .drop("__rn", "fingerprint")
             )
         if method == "near":
-            pairs = dedup_lib.minhash_near_duplicates(
+            losers = dedup_lib.near_duplicate_clusters(
                 data, id_col, text_col,
                 threshold=float(cfg.get("threshold", 0.8)),
                 num_hashes=int(cfg.get("num_hashes", 64)),
                 num_bands=int(cfg.get("num_bands", 16)),
-            )
-            losers = dedup_lib.connected_components(pairs).filter(
-                ~F.col("is_canonical")
-            ).select(F.col("node").alias(id_col))
+            ).filter(~F.col("is_canonical")).select(F.col("node").alias(id_col))
             return data.join(losers, id_col, "left_anti")
         raise ValueError(f"unknown dedup method: {method!r}")
 
     def _quality_filter(self, data, step, sources) -> DataFrame:
         """Composite-quality threshold filter as a config step: drop
-        documents scoring below min_score (ops/text.py::quality_score);
-        keep_score retains the score column for downstream ordering."""
-        from metadata_etl_framework_spark.ops.text import quality_score
+        documents scoring below min_score, and rows with a NULL id. The
+        score (ops/text.py::quality_score_column) is computed in place,
+        one projection + filter, so the upstream chain runs once;
+        keep_score retains it for downstream ordering."""
+        from metadata_etl_framework_spark.ops.text import quality_score_column
 
         cfg = step.get("config", step)
         id_col = cfg.get("id_column", "doc_id")
-        scored = quality_score(
-            data,
-            id_col=id_col,
-            text_col=cfg.get("text_column", "text"),
+        score = quality_score_column(
+            cfg.get("text_column", "text"),
             target_tokens=int(cfg.get("target_tokens", 200)),
-        ).filter(F.col("quality_score") >= float(cfg.get("min_score", 0.5)))
-        out = data.join(
-            scored.select(id_col, "quality_score"), id_col, "inner"
+        )
+        out = data.withColumn("quality_score", score).filter(
+            F.col(id_col).isNotNull()
+            & (F.col("quality_score") >= float(cfg.get("min_score", 0.5)))
         )
         if not cfg.get("keep_score", False):
             out = out.drop("quality_score")

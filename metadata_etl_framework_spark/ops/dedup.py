@@ -16,6 +16,7 @@ runs and cluster sizes). No Python in the hot path.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,18 +43,29 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 def shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingle set (distinct, sorted for determinism).
 
-    Documents shorter than ``n`` tokens (including empty/null text) yield
-    an EMPTY shingle array rather than a negative-length sequence, which
-    would abort the whole job (INVALID_PARAMETER_VALUE.START)."""
+    Tokens are the ``\\s+`` split of the lowercased, space-trimmed text,
+    and a gram is ``n`` consecutive tokens joined by one space. Documents
+    with fewer than ``n`` tokens (NULL text included) yield an EMPTY
+    shingle array: every slice below then has length 0, never a negative
+    length, which would abort the whole job
+    (INVALID_PARAMETER_VALUE.LENGTH).
+
+    Linear in document length: the ``n`` shifted slices of the token
+    array are zipped OUTSIDE the lambda, so the split runs a fixed
+    ``2n`` times per row, whatever its length. A lambda that slices the
+    token array itself re-evaluates the split once per position, because
+    higher-order functions evaluate interpreted (CodegenFallback) —
+    quadratic in the number of tokens."""
     c = F.col(col) if isinstance(col, str) else col
     toks = F.split(F.trim(F.lower(c)), r"\s+")
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)])
     grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
+        zipped, lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)])
     )
-    return F.array_sort(F.array_distinct(grams))
+    return F.array_sort(
+        F.array_distinct(F.coalesce(grams, F.array().cast("array<string>")))
+    )
 
 
 def _seeded_hash(s: Column, seed: int, hash_fn: str) -> Column:
@@ -173,21 +185,30 @@ def jaccard_similarity(
 
 
 def _shingle_base(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int,
+    persisted: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """(id, shingle-array) projection, repartitioned to cluster
     parallelism BEFORE the CPU-bound n-gram transform (a small-file
-    corpus arrives as 1-2 scan partitions) and persisted so every
-    consumer — fan-out probe, inverted-index join sides, signature
-    computation — pays the projection once."""
+    corpus arrives as 1-2 scan partitions).
+
+    With ``persisted`` the projection is persisted and appended there, so
+    every consumer — size gate, fan-out probe, inverted-index join sides,
+    signature computation — pays it once; the caller owns the release
+    and unpersists it once the last consumer has run. Without it nothing
+    is cached: a single consumer needs no cache (both sides of a
+    self-join reuse one exchange)."""
     from pyspark.storagelevel import StorageLevel
 
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
-    return df.select(
-        F.col(id_col), shingles(text_col, shingle_n).alias("_sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = df.select(F.col(id_col), shingles(text_col, shingle_n).alias("_sh"))
+    if persisted is None:
+        return base
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(base)
+    return base
 
 
 def exact_jaccard_pairs(
@@ -209,11 +230,11 @@ def exact_jaccard_pairs(
     if threshold <= 0:
         raise ValueError("exact_jaccard_pairs requires threshold > 0 "
                          "(J=0 pairs share no shingle and are unindexable)")
-    # shingle arrays materialize ONCE (the tokenize+n-gram transform is the
-    # expensive projection); sizes come from F.size — no groupBy shuffle —
-    # and both self-join sides re-explode the persisted arrays. Callers
-    # that already paid the projection (minhash_near_duplicates' fan-out
-    # probe) pass it in via _shingled to avoid a second corpus pass.
+    # shingle arrays compute ONCE (the tokenize+n-gram transform is the
+    # expensive projection): both self-join sides re-explode them through
+    # one reused exchange, and sizes come from F.size — no groupBy
+    # shuffle. Callers that already paid the projection
+    # (minhash_near_duplicates' cached base) pass it in via _shingled.
     base = _shingle_base(df, id_col, text_col, shingle_n) \
         if _shingled is None else _shingled
     # each exploded row carries its doc's shingle count, and the counts
@@ -289,7 +310,10 @@ def containment_pairs(
             f"shingles; lower max_shingle_df and raise the gate "
             f"explicitly, or pre-block the corpus"
         )
-    base = _shingle_base(df, id_col, text_col, shingle_n)
+    # the shingle arrays feed the document-frequency count AND both
+    # join sides
+    handles: list[DataFrame] = []
+    base = _shingle_base(df, id_col, text_col, shingle_n, handles)
     try:
         sh = base.select(
             F.col(id_col),
@@ -353,7 +377,8 @@ def containment_pairs(
         )
         out = out.localCheckpoint(eager=True)
     finally:
-        base.unpersist()
+        for h in handles:
+            h.unpersist()
     return out
 
 
@@ -363,6 +388,7 @@ def minhash_near_duplicates(
     num_bands: int = 16, shingle_n: int = 3,
     exact_max_rows: int = 100_000,
     exact_max_fanout: int = 50_000_000,
+    persisted: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Near-duplicate pairs (n-gram Jaccard ≥ threshold), two regimes:
 
@@ -381,16 +407,43 @@ def minhash_near_duplicates(
       ``1 - (1 - J^r)^b``; at web scale the inverted index's Σdf² blowup
       on high-frequency shingles makes this the only tractable path.
 
+    The shingle projection is built once and persisted; its own count()
+    is the size gate (so the corpus is scanned once), and the probe, the
+    exact join or the LSH arm all read it. The LSH arm also persists the
+    signatures, which both self-join sides read.
+
+    Cache lifetime: the returned pairs are LAZY over those caches. With
+    ``persisted`` the caller owns them — they are appended there, and the
+    caller unpersists them once it has consumed the pairs (the dedup step
+    releases them as soon as ``connected_components`` has returned).
+    Without it the pairs are materialized here (``localCheckpoint``) and
+    every cache is released before returning.
+
     Returns (id_a, id_b, jaccard). Mirrors the exact-below-gate /
     probabilistic-above design of similarity.embedding_near_dup_pairs."""
+    args = (df, id_col, text_col, threshold, num_hashes, num_bands,
+            shingle_n, exact_max_rows, exact_max_fanout)
+    if persisted is not None:
+        return _near_dup_pairs(*args, persisted)
+    handles: list[DataFrame] = []
+    try:
+        return _near_dup_pairs(*args, handles).localCheckpoint(eager=True)
+    finally:
+        for h in handles:
+            h.unpersist()
+
+
+def _near_dup_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float,
+    num_hashes: int, num_bands: int, shingle_n: int, exact_max_rows: int,
+    exact_max_fanout: int, persisted: "list[DataFrame]",
+) -> DataFrame:
+    """The lazy pairs of :func:`minhash_near_duplicates`; every frame it
+    persists is appended to ``persisted``."""
     from pyspark.storagelevel import StorageLevel
 
-    base: DataFrame | None = None
-    if threshold > 0 and 0 < df.count() <= exact_max_rows:
-        # the shingle projection is the dominant per-row cost; build it
-        # ONCE (repartitioned + persisted) and let the probe, the exact
-        # join, and — on gate overflow — the LSH arms all read the cache
-        base = _shingle_base(df, id_col, text_col, shingle_n)
+    base = _shingle_base(df, id_col, text_col, shingle_n, persisted)
+    if threshold > 0 and 0 < base.count() <= exact_max_rows:
         fanout = (
             base.select(F.explode("_sh").alias("_s"))
             .groupBy("_s")
@@ -402,20 +455,14 @@ def minhash_near_duplicates(
             return exact_jaccard_pairs(
                 df, id_col, text_col, threshold, shingle_n, _shingled=base
             )
-    # persist the two frames each referenced by both sides of a self-join:
-    # without this the whole shingle+hash lineage recomputes per side
-    # (signatures are id + K longs — tiny relative to the text they derive
-    # from, so this holds at corpus scale with MEMORY_AND_DISK spill)
+    # signatures are id + K longs — tiny relative to the text they derive
+    # from — and both sides of the banding self-join read them
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_n, _shingled=base,
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(sigs)
     pairs = lsh_candidate_pairs(sigs, id_col, num_bands, num_hashes // num_bands)
-    if base is not None:
-        sh = base.withColumnRenamed("_sh", "sh")
-    else:
-        sh = df.select(
-            F.col(id_col), shingles(text_col, shingle_n).alias("sh")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = base.withColumnRenamed("_sh", "sh")
     j = (
         pairs.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
@@ -546,13 +593,25 @@ def connected_components(
     path covers most real runs and skips the multi-round shuffle loop
     entirely; anything over the gate, or any
     run with ``SPARK_GRAFT_DRIVER_GATE=0``, takes the fully-distributed
-    iteration, same results. The gate's count() is an
-    action either path needs to materialize the pair computation once.
+    iteration, same results. The twin's result comes back as an Arrow
+    table, so it plans as a ``LocalRelation``: a JVM-only leaf of known
+    size that starts no Python worker when a later plan reads it.
+
+    The pair frame is local-checkpointed on entry, so the pair
+    computation runs once whichever arm runs: the seam's probe
+    (``limit(cap + 1)``, one job) fills the checkpoint, and an over-cap
+    graph falls through to the distributed arm, which reads it; with the
+    gate off the distributed arm is its first reader. No count is needed
+    for the gate.
     """
-    half = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    n_edges = half.count()
+    # `uv` stays bound until return: the lazy checkpoint's tasks report
+    # SQL metrics to the plan it was cut from, and once that plan is
+    # garbage-collected the driver logs "attempted to access non-existent
+    # accumulator" for every task update (seen on the distributed arm)
+    uv = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    half = uv.localCheckpoint(eager=False)
     out_type = half.schema["u"].dataType
-    tbl = driver_table(half, CC_DRIVER_MAX_EDGES, size=n_edges)
+    tbl = driver_table(half, CC_DRIVER_MAX_EDGES)
     if tbl is not None:
         parent: dict = {}
 
@@ -564,19 +623,25 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        nodes = set()
+        nodes: dict = {}  # insertion-ordered set
         for u, v in zip(
             tbl.column("u").to_pylist(), tbl.column("v").to_pylist()
         ):
-            nodes.add(u)
-            nodes.add(v)
+            nodes[u] = nodes[v] = None
             ru, rv = find(u), find(v)
             if ru != rv:
                 # root := min of merged roots, so by induction every
                 # tree's root IS its component minimum (= cluster id)
                 parent[max(ru, rv)] = min(ru, rv)
-        half.unpersist()
-        data = [(n, find(n), n == find(n)) for n in nodes]
+        roots = [find(n) for n in nodes]
+        id_type = tbl.schema.field("u").type
+        result = pa.table({
+            "node": pa.array(list(nodes), id_type),
+            "cluster_id": pa.array(roots, id_type),
+            "is_canonical": pa.array(
+                [n == r for n, r in zip(nodes, roots)], pa.bool_()
+            ),
+        })
         schema = T.StructType(
             [
                 T.StructField("node", out_type),
@@ -584,7 +649,7 @@ def connected_components(
                 T.StructField("is_canonical", T.BooleanType()),
             ]
         )
-        return pairs.sparkSession.createDataFrame(data, schema)
+        return pairs.sparkSession.createDataFrame(result, schema)
     edges = (
         half.select("u", "v")
         .unionByName(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -658,12 +723,36 @@ def connected_components(
         if changed == 0:
             break
     edges.unpersist()
-    half.unpersist()
     return labels.select(
         F.col("node"),
         F.col("label").alias("cluster_id"),
         (F.col("node") == F.col("label")).alias("is_canonical"),
     )
+
+
+def near_duplicate_clusters(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    threshold: float = 0.8, num_hashes: int = 64, num_bands: int = 16,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Near-duplicate CLUSTERS of a corpus: :func:`connected_components`
+    over :func:`minhash_near_duplicates`' pairs, as (node, cluster_id,
+    is_canonical).
+
+    The caches the lazy pairs read are released as soon as the components
+    exist: both arms of ``connected_components`` return a frame that no
+    longer reads the pairs (the twin's Arrow table, or the distributed
+    arm's materialized labels), so nothing stays cached between calls."""
+    handles: list[DataFrame] = []
+    pairs = minhash_near_duplicates(
+        df, id_col, text_col, threshold=threshold, num_hashes=num_hashes,
+        num_bands=num_bands, shingle_n=shingle_n, persisted=handles,
+    )
+    try:
+        return connected_components(pairs)
+    finally:
+        for h in handles:
+            h.unpersist()
 
 
 def simhash_near_duplicates(
@@ -1074,17 +1163,23 @@ def lsh_quality_report(
             f"lsh_quality_report is an evaluation harness; corpus has "
             f"{n} rows > max_rows={max_rows}"
         )
-    base = _shingle_base(df, id_col, text_col, shingle_n)
-    truth = exact_jaccard_pairs(
-        df, id_col, text_col, threshold, shingle_n, _shingled=base
-    ).select(F.col("id_a"), F.col("id_b"))
-    lsh = minhash_near_duplicates(
-        df, id_col, text_col, threshold, num_hashes, num_bands,
-        shingle_n, exact_max_rows=0, exact_max_fanout=0,
-    ).select(F.col("id_a"), F.col("id_b"))
-    t = truth.count()
-    v = lsh.count()
-    hit = truth.join(lsh, ["id_a", "id_b"], "inner").count()
+    handles: list[DataFrame] = []
+    try:
+        base = _shingle_base(df, id_col, text_col, shingle_n, handles)
+        truth = exact_jaccard_pairs(
+            df, id_col, text_col, threshold, shingle_n, _shingled=base
+        ).select(F.col("id_a"), F.col("id_b"))
+        lsh = minhash_near_duplicates(
+            df, id_col, text_col, threshold, num_hashes, num_bands,
+            shingle_n, exact_max_rows=0, exact_max_fanout=0,
+            persisted=handles,
+        ).select(F.col("id_a"), F.col("id_b"))
+        t = truth.count()
+        v = lsh.count()
+        hit = truth.join(lsh, ["id_a", "id_b"], "inner").count()
+    finally:
+        for h in handles:
+            h.unpersist()
     spark = df.sparkSession
     return spark.createDataFrame(
         [(

@@ -58,6 +58,33 @@ def bpe_ish_token_count(df: DataFrame, text_col: str = "text", out: str = "n_bpe
     )
 
 
+def _quality_feature_columns(
+    text_col: str, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
+) -> dict[str, Column]:
+    """The per-document signals of :func:`quality_features`, by output
+    name, as Columns over ``text_col`` (also the inputs of
+    :func:`quality_score_column`)."""
+    toks = tokens(text_col)
+    n_tok = F.size(toks)
+    sw_array = F.array(*[F.lit(s) for s in stopwords])
+    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw_array, F.lower(t))))
+    n_chars = F.length(F.col(text_col))
+    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^!-/:-@\[-`{-~]", ""))
+    return {
+        "n_chars_computed": n_chars,
+        "n_tokens": n_tok,
+        "avg_token_len": F.round(
+            F.when(n_tok > 0, n_chars.cast("double") / n_tok).otherwise(F.lit(0.0)), 6
+        ),
+        "punct_ratio": F.round(
+            F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(F.lit(0.0)), 6
+        ),
+        "stopword_ratio": F.round(
+            F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(F.lit(0.0)), 6
+        ),
+    }
+
+
 def quality_features(
     df: DataFrame, text_col: str = "text", stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
 ) -> DataFrame:
@@ -67,34 +94,7 @@ def quality_features(
     extreme length, high punctuation density, or near-zero stopword ratio
     are low-quality candidates.
     """
-    toks = tokens(text_col)
-    n_tok = F.size(toks)
-    sw_array = F.array(*[F.lit(s) for s in stopwords])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw_array, F.lower(t))))
-    n_chars = F.length(F.col(text_col))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^!-/:-@\[-`{-~]", ""))
-    return (
-        df.withColumn("n_chars_computed", n_chars)
-        .withColumn("n_tokens", n_tok)
-        .withColumn(
-            "avg_token_len",
-            F.round(
-                F.when(n_tok > 0, n_chars.cast("double") / n_tok).otherwise(F.lit(0.0)), 6
-            ),
-        )
-        .withColumn(
-            "punct_ratio",
-            F.round(
-                F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(F.lit(0.0)), 6
-            ),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.round(
-                F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(F.lit(0.0)), 6
-            ),
-        )
-    )
+    return df.withColumns(_quality_feature_columns(text_col, stopwords))
 
 
 # Tiny per-language marker lexicons for the n-gram/stopword language-ID
@@ -1264,6 +1264,59 @@ def corpus_summary(
     )
 
 
+def quality_score_column(
+    text_col: str = "text",
+    target_tokens: int = 200,
+    weights: tuple[float, float, float, float] = (0.35, 0.25, 0.2, 0.2),
+) -> Column:
+    """The composite quality score of :func:`quality_score` as ONE
+    Column over ``text_col`` — the builder both ``quality_score`` and the
+    step compiler's ``quality_filter`` use, so a filter scores each row in
+    place (``withColumn`` + ``filter``) instead of joining a scored copy
+    of its input back on the id."""
+    w = [float(x) for x in weights]
+    total = sum(w)
+    if total <= 0:
+        raise ValueError("weights must sum to a positive value")
+    w = [x / total for x in w]
+    f = _quality_feature_columns(text_col)
+    # same expression as repetition_metrics' dup_line_ratio (its unit
+    # tests + oracle pin the semantics; keep in lockstep)
+    lines = F.coalesce(
+        F.filter(F.split(F.col(text_col), r"\n"), lambda ln: ln.rlike(r"\S")),
+        F.array().cast("array<string>"),
+    )
+    n_lines = F.size(lines)
+    dup_line_ratio = F.round(
+        F.when(
+            n_lines > 0,
+            (n_lines - F.size(F.array_distinct(lines))).cast("double")
+            / n_lines,
+        ).otherwise(F.lit(0.0)),
+        6,
+    )
+    # size(NULL array) is NULL and least() SKIPS nulls (a null-text doc
+    # would score a perfect length component) — coalesce to 0 first
+    nt = F.coalesce(f["n_tokens"].cast("double"), F.lit(0.0))
+    length_s = F.least(nt / F.lit(float(target_tokens)), F.lit(1.0))
+    stop_s = F.least(f["stopword_ratio"] * 3.0, F.lit(1.0))
+    punct_s = 1.0 - F.least(f["punct_ratio"] * 3.0, F.lit(1.0))
+    dedup_s = 1.0 - dup_line_ratio
+
+    # decimal-exact blend (parity convention): every component is a
+    # ~6-decimal quantity, so decimal(16,6) represents it exactly and
+    # the weighted sum can't land a final-round boundary on a double ulp
+    def _d(c: Column) -> Column:
+        return c.cast("decimal(16,6)")
+
+    score = sum(
+        (F.lit(round(wi, 6)).cast("decimal(16,6)") * _d(c)
+         for wi, c in zip(w, (length_s, stop_s, punct_s, dedup_s))),
+        start=F.lit(0).cast("decimal(16,6)"),
+    )
+    return F.round(score, 6).cast("double")
+
+
 def quality_score(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1290,57 +1343,17 @@ def quality_score(
     joining two derivations of the same input (a join here would shuffle
     the whole corpus on id for values computable in place). No shuffle,
     no UDF, so the score pipelines with the scan at corpus scale.
-    Weights are caller-tunable and normalized to sum 1.
+    Weights are caller-tunable and normalized to sum 1. The score is
+    :func:`quality_score_column`, the Column builder a caller that wants
+    the score next to its own columns uses directly.
+    Output: (id, n_tokens long, quality_score double).
     """
-    w = [float(x) for x in weights]
-    total = sum(w)
-    if total <= 0:
-        raise ValueError("weights must sum to a positive value")
-    w = [x / total for x in w]
-    # same expression as repetition_metrics' dup_line_ratio (its unit
-    # tests + oracle pin the semantics; keep in lockstep)
-    lines = F.coalesce(
-        F.filter(F.split(F.col(text_col), r"\n"), lambda ln: ln.rlike(r"\S")),
-        F.array().cast("array<string>"),
-    )
-    n_lines = F.size(lines)
-    dup_line_ratio = F.round(
-        F.when(
-            n_lines > 0,
-            (n_lines - F.size(F.array_distinct(lines))).cast("double")
-            / n_lines,
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    joined = quality_features(df, text_col).select(
-        F.col(id_col), "n_tokens", "punct_ratio", "stopword_ratio",
-        dup_line_ratio.alias("dup_line_ratio"),
-    )
-    # size(NULL array) is NULL and least() SKIPS nulls (a null-text doc
-    # would score a perfect length component) — coalesce to 0 first
-    nt = F.coalesce(F.col("n_tokens").cast("double"), F.lit(0.0))
-    length_s = F.least(nt / F.lit(float(target_tokens)), F.lit(1.0))
-    stop_s = F.least(F.col("stopword_ratio") * 3.0, F.lit(1.0))
-    punct_s = 1.0 - F.least(F.col("punct_ratio") * 3.0, F.lit(1.0))
-    dedup_s = 1.0 - F.col("dup_line_ratio")
-
-    # decimal-exact blend (parity convention): every component is a
-    # ~6-decimal quantity, so decimal(16,6) represents it exactly and
-    # the weighted sum can't land a final-round boundary on a double ulp
-    def _d(c: Column) -> Column:
-        return c.cast("decimal(16,6)")
-
-    score = sum(
-        (F.lit(round(wi, 6)).cast("decimal(16,6)") * _d(c)
-         for wi, c in zip(w, (length_s, stop_s, punct_s, dedup_s))),
-        start=F.lit(0).cast("decimal(16,6)"),
-    )
-    return joined.select(
+    score = quality_score_column(text_col, target_tokens, weights)
+    n_tokens = F.size(tokens(text_col)).cast("long")
+    return df.select(
         id_col,
-        F.coalesce(F.col("n_tokens").cast("long"), F.lit(0)).alias(
-            "n_tokens"
-        ),
-        F.round(score, 6).cast("double").alias("quality_score"),
+        F.coalesce(n_tokens, F.lit(0)).alias("n_tokens"),
+        score.alias("quality_score"),
     )
 
 

@@ -72,8 +72,6 @@ def test_duplicate_def_lint_sees_family_modules():
 RETURNED_LAZY_PERSISTS = {
     # projection shared by every consumer of the returned lazy frame
     ("functions/joins.py", "range_count"),
-    ("ops/dedup.py", "_shingle_base"),
-    ("ops/dedup.py", "minhash_near_duplicates"),
     ("ops/dedup.py", "bloom_incremental_dedup"),
     # offsets-correctness cache (see packing.py docstring): released by
     # the ContextCleaner when the returned frame is dropped

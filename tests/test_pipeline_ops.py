@@ -171,6 +171,24 @@ def test_stratified_sample_proportions_and_determinism(spark):
     assert 0 < s3.count() < ev.count()
 
 
+def test_stratified_sample_independent_of_partitioning(spark):
+    from metadata_etl_framework_spark.functions.aggregations import (
+        stratified_sample,
+    )
+
+    df = spark.createDataFrame(
+        [(i, "a" if i % 3 else "b", i * 0.25) for i in range(2000)],
+        "id long, s string, v double",
+    )
+    frac = {"a": 0.1, "b": 0.4}
+    one = stratified_sample(df.repartition(1), "s", frac, seed=3).collect()
+    seven = stratified_sample(df.repartition(7), "s", frac, seed=3).collect()
+    assert sorted(one) == sorted(seven)
+    assert 0 < len(one) < 2000
+    # a stratum missing from the dict keeps nothing
+    assert stratified_sample(df, "s", {"a": 1.0}, seed=3).filter("s = 'b'").count() == 0
+
+
 def test_c4_quality_flags(spark):
     from metadata_etl_framework_spark.ops.text import c4_quality_flags
 
