@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
+from .materialize import Supersteps
 from .similarity import _decimal_dot, _norm
 
 __all__ = ["kmeans_assign", "kmeans_summary", "gmm2_train", "dbscan_grid"]
@@ -63,9 +63,9 @@ def kmeans_assign(
     max-cosine (ties to the smallest cluster index) and recomputes
     6-dp decimal-exact per-dim means. Clusters that lose every member
     keep their previous centroid (the standard empty-cluster rule that
-    keeps k stable). ``iterations`` > ``max_iterations`` raises — the
-    loop is plan-unrolled per round; long loops need the
-    localCheckpoint discipline of ops/graph.py, not more rounds here.
+    keeps k stable). Each round's centroids are a superstep cut
+    (``ops/materialize.Supersteps``); ``iterations`` >
+    ``max_iterations`` raises.
     """
     if not 1 <= iterations <= max_iterations:
         raise ValueError(
@@ -92,9 +92,9 @@ def kmeans_assign(
         ).alias("_cv"),
     )
     pts = pts.persist()
+    steps = Supersteps(iterations)
     try:
-        assigned = None
-        for it in range(int(iterations)):
+        for it in steps:
             cen = _centroid_frame(cents)
             den = F.col("_nrm") * F.col("_cnrm")
             scored = pts.crossJoin(F.broadcast(cen)).select(
@@ -142,7 +142,8 @@ def kmeans_assign(
             )
             # empty-cluster rule: keep the previous centroid
             kept = cents.join(new_cents.select("_c"), "_c", "left_anti")
-            cents = new_cents.unionByName(kept).localCheckpoint(eager=True)
+            cents, _ = steps.cut(new_cents.unionByName(kept))
+            steps.retain(cents)
         return assigned.select(
             F.col("_p").alias(id_col),
             F.col("_c").alias("cluster"),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from metadata_etl_framework_spark.ops.driver_exact import driver_table
+from metadata_etl_framework_spark.ops.materialize import Supersteps, release
 from metadata_etl_framework_spark.ops.text import fingerprint
 
 
@@ -565,14 +566,15 @@ def connected_components(
     neighbors', take the min — a self-equi-join + groupBy (two shuffles
     on node id) — then one pointer-jumping join (label ← label's label)
     that halves remaining path lengths, so convergence is O(log
-    diameter) rounds rather than O(diameter). ``localCheckpoint`` after
-    each round truncates the exponentially-growing lineage — standard
-    for iterative Spark algorithms. Convergence detection exploits
+    diameter) rounds rather than O(diameter). A superstep cut after
+    each round (``ops/materialize.Supersteps``) truncates the
+    exponentially-growing lineage and releases the superseded labels.
+    Convergence detection exploits
     monotonicity: every step (min over neighbors, pointer jump to an
     ancestor) can only DECREASE a node's label, so the global
     sum(label) is strictly decreasing until the fixpoint — comparing it
-    across rounds needs one cheap aggregate per round (which also
-    materializes the lazy checkpoint), not a self-join + count.
+    across rounds needs one cheap aggregate per round (the job that
+    fills the round's cut), not a self-join + count.
 
     Returns (node, cluster_id, is_canonical): every node that appears in
     a pair, its component's min id, and whether it IS that min (the
@@ -604,6 +606,8 @@ def connected_components(
     gate off the distributed arm is its first reader. No count is needed
     for the gate.
     """
+    if max_iterations < 1:
+        raise ValueError("max_iterations must be >= 1")
     # `uv` stays bound until return: the lazy checkpoint's tasks report
     # SQL metrics to the plan it was cut from, and once that plan is
     # garbage-collected the driver logs "attempted to access non-existent
@@ -659,9 +663,23 @@ def connected_components(
     labels = edges.select("u").dropDuplicates().select(
         F.col("u").alias("node"), F.col("u").alias("label")
     )
+    # one aggregate fills each round's cut AND tests the fixpoint: labels
+    # are per-node monotone non-increasing, so an unchanged global sum
+    # <=> no label changed. Decimal accumulation so arbitrary 64-bit ids
+    # can't overflow the sum. Non-numeric (string) ids can't sum — count
+    # the labels that changed against the previous round's instead.
     numeric_ids = isinstance(out_type, T.NumericType)
-    prev_sum = None  # sum(label) of the previous round; None = first round
-    for _ in range(max_iterations):
+    if numeric_ids:
+        probe = lambda d: d.agg(  # noqa: E731
+            F.sum(F.col("label").cast("decimal(38,0)"))
+        )
+    else:
+        probe = lambda d: d.alias("n").join(  # noqa: E731
+            prev.alias("o"), F.col("n.node") == F.col("o.node")
+        ).agg(F.count_if(F.col("n.label") != F.col("o.label")))
+    last = None  # the previous round's probe; None = first round
+    steps = Supersteps(max_iterations)
+    for _ in steps:
         # candidate label per node = min over (own label, neighbors' labels)
         # (join + least, not union + groupBy: Spark's
         # UnionBase.rewriteConstraints crashes with "key not found:
@@ -699,30 +717,15 @@ def connected_components(
                 F.col("l.node").alias("node"),
                 F.coalesce(F.col("m.label"), F.col("l.label")).alias("label"),
             )
-            .localCheckpoint(eager=False)
         )
-        # one aggregate materializes the lazy checkpoint AND tests the
-        # fixpoint: labels are per-node monotone non-increasing, so an
-        # unchanged global sum <=> no label changed. Decimal accumulation
-        # so arbitrary 64-bit ids can't overflow the sum. Non-numeric
-        # (string) ids can't sum — fall back to the changed-label join.
-        if numeric_ids:
-            cur_sum = new_labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).first()["s"]
-            changed = None if prev_sum is None else int(cur_sum != prev_sum)
-            prev_sum = cur_sum
-        else:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-        labels = new_labels
-        if changed == 0:
+        prev = labels
+        labels, row = steps.cut(new_labels, probe)
+        steps.retain(labels)
+        if (row[0] == last) if numeric_ids else row[0] == 0:
             break
+        last = row[0]
     edges.unpersist()
+    release(half)
     return labels.select(
         F.col("node"),
         F.col("label").alias("cluster_id"),

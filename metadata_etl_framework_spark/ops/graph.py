@@ -33,7 +33,10 @@ from metadata_etl_framework_spark.ops.driver_exact import (
 )
 from metadata_etl_framework_spark.ops.materialize import (
     BCAST_MAX_ROWS,
+    Supersteps,
     checkpoint_leaf,
+    count_rows,
+    release,
 )
 
 __all__ = [
@@ -86,11 +89,10 @@ def pagerank(
 
     Each iteration: edge⋈rank join (shuffle on src), contribution
     aggregation (shuffle on dst), left join back onto the node set.
-    The edge list is out-weight-annotated once and persisted; each new
-    rank frame is persisted and materialized every ``checkpoint_every``
+    The edge list is out-weight-annotated once and persisted; the rank
+    frame is cut to a checkpoint leaf every ``checkpoint_every``
     iterations (and always at the end), its predecessor released — plan
-    depth and cached state stay O(checkpoint_every), the
-    iterative-algorithm discipline the BPE trainer uses. Raising
+    depth and held state stay O(checkpoint_every). Raising
     ``checkpoint_every`` trades plan depth for fewer jobs: a handful of
     iterations can run as one job (Catalyst handles a few stacked
     join+agg rounds fine); at hundreds of iterations keep it small.
@@ -107,16 +109,15 @@ def pagerank(
 
     ``tol`` enables convergence-based early termination: at every
     checkpoint materialization the L1 rank delta vs the previous
-    checkpoint (one extra equi-join + 1-row DECIMAL aggregate on the
-    O(nodes) frames, collected driver-side — the standard iterative-
-    algorithm convergence probe) is compared against ``tol``; below it,
+    checkpoint (an equi-join + 1-row DECIMAL aggregate on the O(nodes)
+    frames, collected driver-side; its job fills the new leaf) is
+    compared against ``tol``; below it,
     remaining iterations are skipped. With ``checkpoint_every > 1`` the
     delta spans that many iterations — coarser checks, fewer jobs.
     ``iterations`` stays the hard upper bound.
 
-    Returns (node, rank) with rank rounded to 6 dp. The returned frame
-    derives from the final cached iteration; call ``.unpersist()`` on
-    it when finished to release the cache.
+    Returns (node, rank) with rank rounded to 6 dp, read from the final
+    iteration's checkpoint leaf (see ``ops/materialize.release``).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -219,12 +220,8 @@ def pagerank(
     # both constants computed DRIVER-side in IEEE doubles so an external
     # SQL oracle computing (1−d)/N and 1/N in its own double arithmetic
     # reproduces them bit-for-bit
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
     if seed_nodes is not None:
         seeds = sorted(set(seed_nodes))
-        if not seeds:
-            raise ValueError("seed_nodes must be non-empty when given")
         is_seed = F.col("node").isin(list(seeds))
         base_col = F.when(
             is_seed, F.lit((1.0 - damping) / len(seeds))
@@ -232,25 +229,19 @@ def pagerank(
         init_col = F.when(
             is_seed, F.lit(1.0 / len(seeds))
         ).otherwise(F.lit(0.0))
+        # teleport distribution the dangling mass re-enters through:
+        # uniform 1/N, or the seed distribution under personalization
+        redist_col = init_col
     else:
         base_col = F.lit((1.0 - damping) / n)
-        init_col = F.lit(1.0 / n)
-    # teleport distribution the dangling mass re-enters through:
-    # uniform 1/N, or the seed distribution under personalization
-    if seed_nodes is not None:
-        redist_col = F.when(
-            is_seed, F.lit(1.0 / len(seeds))
-        ).otherwise(F.lit(0.0))
-    else:
-        redist_col = F.lit(1.0 / n)
+        init_col = redist_col = F.lit(1.0 / n)
     # under the measured node gate the O(nodes) rank iterates coalesce
-    # to _SMALL_GRAPH_NPART — cached/checkpointed plans compile without
-    # AQE partition coalescing, so un-shrunk iterates keep all shuffle
+    # to _SMALL_GRAPH_NPART — cached plans compile without AQE
+    # partition coalescing, so un-shrunk iterates keep all shuffle
     # partitions and every downstream stage pays the task overhead
     small = n <= _MOVE_BCAST_MAX_NODES
-    rank = _shrink(nodes.withColumn("rank", init_col), small).persist()
-    rank.count()
-    last_kept = rank
+    # the start is a projection of the cached node stats: no cut needed
+    rank = last_kept = _shrink(nodes.withColumn("rank", init_col), small)
     # the dangling arm references the rank frame TWICE per iteration
     # (the contribution join and the dangling-mass aggregate), so the
     # un-truncated plan DOUBLES per round (2^i, not linear — the
@@ -280,7 +271,8 @@ def pagerank(
     # into the left-join update the same way. Identical rows either
     # way; the DECIMAL sums are merge-order free.
     bc = F.broadcast if small else (lambda d: d)
-    for i in range(iterations):
+    steps = Supersteps(iterations, every=checkpoint_every)
+    for i in steps:
         jr = bc(rank)
         contrib = (
             e.join(jr, e["_src"] == jr["node"])
@@ -293,6 +285,8 @@ def pagerank(
             .groupBy("_dst")
             .agg(F.sum("_t").cast("double").alias("_s"))
         )
+        upd = nodes.join(bc(contrib), nodes["node"] == contrib["_dst"], "left")
+        mass = F.coalesce(F.col("_s"), F.lit(0.0))
         if dangling is not None:
             # ONE 1-row aggregate: total rank on dangling nodes this
             # iteration, DECIMAL-accumulated (order-independent), then
@@ -303,74 +297,33 @@ def pagerank(
                 .cast("double")
                 .alias("_dm")
             )
-            new_rank = (
-                nodes.join(
-                    bc(contrib), nodes["node"] == contrib["_dst"], "left"
-                )
-                .crossJoin(F.broadcast(dm))
-                .select(
-                    "node",
-                    (
-                        base_col
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("_s"), F.lit(0.0))
-                            + F.coalesce(F.col("_dm"), F.lit(0.0))
-                            * redist_col
-                        )
-                    ).alias("rank"),
-                )
+            upd = upd.crossJoin(F.broadcast(dm))
+            mass = mass + F.coalesce(F.col("_dm"), F.lit(0.0)) * redist_col
+        new_rank = upd.select(
+            "node", (base_col + F.lit(damping) * mass).alias("rank")
+        )
+        at_tol = (i + 1) % ck_tol == 0
+        probe = None
+        if tol is not None and at_tol and i < iterations - 1:
+            # the L1 delta vs the last tol position's iterate is the job
+            # that fills this round's leaf
+            prev = bc(last_kept.select("node", F.col("rank").alias("_p")))
+            probe = lambda r: r.join(prev, "node").agg(  # noqa: E731
+                F.sum(
+                    F.abs(F.col("rank") - F.col("_p")).cast("decimal(38,12)")
+                ).cast("double")
             )
-        else:
-            new_rank = nodes.join(
-                bc(contrib), nodes["node"] == contrib["_dst"], "left"
-            ).select(
-                "node",
-                (
-                    base_col
-                    + F.lit(damping) * F.coalesce(F.col("_s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_rank, _ = checkpoint_leaf(_shrink(new_rank, small))
-            converged = False
-            at_tol = (i + 1) % ck_tol == 0 or i == iterations - 1
-            if tol is not None and i < iterations - 1 and at_tol:
-                delta = (
-                    new_rank.join(
-                        bc(
-                            last_kept.select(
-                                "node", F.col("rank").alias("__prev")
-                            )
-                        ),
-                        "node",
-                    )
-                    .agg(
-                        F.sum(
-                            F.abs(F.col("rank") - F.col("__prev")).cast(
-                                "decimal(38,12)"
-                            )
-                        )
-                        .cast("double")
-                        .alias("d")
-                    )
-                    .collect()[0]["d"]
-                )
-                converged = delta is not None and delta < float(tol)
-            if at_tol:
-                # last_kept is only READ at tol positions — advancing
-                # it there (not at every materialization) keeps the
-                # compared iterates, and so convergence, identical to
-                # the pre-r17 3-round cadence
-                last_kept.unpersist()
-                last_kept = new_rank
-            if converged:
-                rank = new_rank
-                break
-        rank = new_rank
+        rank, row = steps.cut(_shrink(new_rank, small), probe)
+        if at_tol:
+            last_kept = rank
+        steps.retain(rank, last_kept)
+        if row is not None and row[0] is not None and row[0] < float(tol):
+            break
     nodes_stats.unpersist()
     e.unpersist()
-    return rank.select("node", F.round("rank", 6).alias("rank"))
+    out = rank.select("node", F.round("rank", 6).alias("rank"))
+    steps.retain(out)
+    return out
 
 
 def _factorize_nodes(tbl):
@@ -825,14 +778,18 @@ def label_propagation(
         .unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
         .persist()
     )
-    labels = adj.select(F.col("v").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    ).persist()
+    steps = Supersteps(iterations, every=checkpoint_every)
+    labels, n = steps.cut(
+        adj.select(F.col("v").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        ),
+        count_rows,
+    )
     und.unpersist()
     # node-count broadcast gate (the _greedy_move_rounds convention)
-    small = labels.count() <= _MOVE_BCAST_MAX_NODES
+    small = n[0] <= _MOVE_BCAST_MAX_NODES
     bc = F.broadcast if small else (lambda d: d)
-    for it in range(1, iterations + 1):
+    for _ in steps:
         counts = (
             adj.join(
                 bc(
@@ -855,10 +812,8 @@ def label_propagation(
             )
             .select(F.col("v").alias("node"), F.col("m.nl").alias("label"))
         )
-        if it % checkpoint_every == 0 or it == iterations:
-            new_labels, _ = checkpoint_leaf(_shrink(new_labels, small))
-            labels.unpersist()
-        labels = new_labels
+        labels, _ = steps.cut(_shrink(new_labels, small))
+        steps.retain(labels)
     adj.unpersist()
     return labels
 
@@ -881,11 +836,10 @@ def k_core(
     only. Because one peel references the previous edge frame FOUR
     times (twice in the degree union, twice in the semi-joins), the
     logical plan would grow 4^iterations under plain persist(); each
-    round therefore materializes via an eager ``localCheckpoint()``,
-    which truncates lineage outright (the iterative-cascade
-    discipline; superseded frames are released by the ContextCleaner
-    as references drop). Convergence is probed with a 1-row count;
-    since a converged graph is a fixpoint of the peel, running EXTRA
+    round is therefore a :class:`~ops.materialize.Supersteps` cut,
+    which truncates lineage outright and releases the superseded edge
+    frame. Convergence is probed with a 1-row count, the job that fills
+    the cut; since a converged graph is a fixpoint of the peel, running EXTRA
     rounds is a no-op — which is what lets a fixed-unroll SQL oracle
     replay the data-dependent iteration count exactly. ``max_iter``
     bounds the cascade (a path of length L needs L peels); hitting the
@@ -896,12 +850,13 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    cur = _undirected(edges, src_col, dst_col).localCheckpoint()
-    n_edges = cur.count()
+    steps = Supersteps(max_iter)
+    cur, n = steps.cut(_undirected(edges, src_col, dst_col), count_rows)
+    n_edges = n[0]
     # peel iterates coalesce under the measured gate (checkpoint
     # leaves otherwise keep full shuffle-partition counts; see _shrink)
     small = n_edges <= _MOVE_BCAST_MAX_NODES
-    for _ in range(max_iter):
+    for _ in steps:
         deg = (
             cur.select(F.col("a").alias("v"))
             .unionAll(cur.select(F.col("b").alias("v")))
@@ -909,28 +864,30 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.where(F.col("d") >= k).select("v")
-        nxt = _shrink(
-            cur.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
-            .select("a", "b"),
-            small,
-        ).localCheckpoint()
-        n_next = nxt.count()
-        cur = nxt
-        if n_next == n_edges:
+        cur, n = steps.cut(
+            _shrink(
+                cur.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
+                .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
+                .select("a", "b"),
+                small,
+            ),
+            count_rows,
+        )
+        steps.retain(cur)
+        if n[0] == n_edges:
             break
-        n_edges = n_next
+        n_edges = n[0]
     else:
+        steps.retain()
         raise RuntimeError(
             f"k_core did not converge within max_iter={max_iter} peels"
         )
-    out = (
+    return (
         cur.select(F.col("a").alias("node"))
         .unionAll(cur.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    return out
 
 
 def closeness_sampled(
@@ -952,8 +909,8 @@ def closeness_sampled(
     Per hop: frontier ⋈ adjacency (equi-join) → distinct → anti-join
     the visited set; because ``visited`` is referenced TWICE per hop
     (union + anti-join) the logical plan would double per round under
-    plain persist — the k_core 4^n lesson — so every hop truncates
-    with eager localCheckpoint, and the loop stops on an empty
+    plain persist — the k_core 4^n lesson — so every hop is a
+    superstep cut (:func:`_bfs_layers`), and the loop stops on an empty
     frontier or ``max_hops``. Closeness =
     (reached−1)/Σdist; harmonic = Σ 1/dist (10-dp DECIMAL terms —
     merge-order independent), which stays meaningful on disconnected
@@ -977,32 +934,9 @@ def closeness_sampled(
     # populate the persist and decide the small-graph partitioning for
     # the per-hop checkpoint leaves (see _shrink)
     small = adj.count() <= _MOVE_BCAST_MAX_NODES
-    spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in seeds], "s long, node long, dist int"
-    )
-    frontier = visited
-    handles: list = [adj]
+    steps = Supersteps(max_hops)
     try:
-        for hop in range(1, int(max_hops) + 1):
-            # name-based equi-join: attribute references would resolve
-            # ambiguously once the frontier's lineage contains adj
-            # (the self-join trap turns the hop into a cartesian)
-            nxt = (
-                frontier.select("s", F.col("node").alias("a"))
-                .join(adj, "a")
-                .select("s", F.col("b").alias("node"))
-                .distinct()
-                .join(visited, ["s", "node"], "left_anti")
-                .withColumn("dist", F.lit(hop).cast("int"))
-            )
-            nxt, n_nxt = checkpoint_leaf(_shrink(nxt, small))
-            if n_nxt == 0:
-                break
-            visited, _ = checkpoint_leaf(
-                _shrink(visited.unionByName(nxt), small)
-            )
-            frontier = nxt
+        visited, _ = _bfs_layers(adj, seeds, steps, small, sigma=False)
         inv = F.when(
             F.col("dist") > 0, F.lit(1.0) / F.col("dist")
         ).otherwise(F.lit(0.0))
@@ -1033,9 +967,63 @@ def closeness_sampled(
         )
         out = out.localCheckpoint(eager=True)
     finally:
-        for h in handles:
-            h.unpersist()
+        adj.unpersist()
+        steps.retain()
     return out
+
+
+def _bfs_layers(
+    adj: DataFrame, seeds: "list[int]", steps: Supersteps, small: bool,
+    sigma: bool,
+) -> "tuple[DataFrame, int]":
+    """The forward multi-source BFS of :func:`closeness_sampled` and
+    :func:`betweenness_sampled`: ``(visited, depth)``, with one
+    (s, node, dist) row per seed and reached node, plus ``sigma`` (the
+    shortest-path count, summed over the previous layer) when asked.
+    Closeness never asks: Σσ can overflow long, and ANSI mode would
+    then fail it loudly. ``depth`` is the deepest non-empty hop.
+
+    One hop per superstep, stopping on an empty frontier. ``visited`` is
+    referenced twice per hop (union + anti-join), so the plan would
+    double per round without the cuts; under the node gate each hop's
+    frame is O(seeds·nodes) and broadcasts as the build side, so the
+    persisted adjacency streams map-side."""
+    carry = ["sigma"] if sigma else []
+    visited = adj.sparkSession.createDataFrame(
+        [(int(s), int(s), 0, 1)[: 3 + sigma] for s in seeds],
+        "s long, node long, dist int" + (", sigma long" if sigma else ""),
+    )
+    frontier, depth = visited, 0
+    bc = F.broadcast if small else (lambda d: d)
+    for hop in steps:
+        # name-based equi-join: attribute references would resolve
+        # ambiguously once the frontier's lineage contains adj (the
+        # self-join trap turns the hop into a cartesian)
+        reached = bc(
+            frontier.select("s", F.col("node").alias("a"), *carry)
+        ).join(adj, "a")
+        if sigma:
+            reached = reached.groupBy("s", F.col("b").alias("node")).agg(
+                F.sum("sigma").alias("sigma")
+            )
+        else:
+            reached = reached.select("s", F.col("b").alias("node")).distinct()
+        nxt, n = steps.cut(
+            _shrink(
+                reached.join(bc(visited), ["s", "node"], "left_anti")
+                .withColumn("dist", F.lit(hop + 1).cast("int"))
+                .select("s", "node", "dist", *carry),
+                small,
+            ),
+            count_rows,
+        )
+        if n[0] == 0:
+            break
+        visited, _ = steps.cut(_shrink(visited.unionByName(nxt), small))
+        frontier, depth = nxt, hop + 1
+        steps.retain(frontier, visited)
+    steps.retain(visited)
+    return visited, depth
 
 
 def random_walks(
@@ -1619,15 +1607,16 @@ def hits(
     engine-boundary sqrt inside every round). Scores round to 12 dp at
     each normalization so every round is engine-replayable; with the
     default ``tol=None`` the FIXED iteration count (no convergence
-    test) keeps the unrolled oracle exact. Per-round materialization
-    uses eager localCheckpoint (two frames referenced across rounds —
-    the plan-doubling lesson).
+    test) keeps the unrolled oracle exact. Each half-round is a
+    superstep cut (two frames referenced across rounds — the
+    plan-doubling lesson).
 
     ``tol`` enables convergence-based early termination (the pagerank
     discipline): after each full round the combined L1 delta
-    Σ|h−h_prev| + Σ|a−a_prev| — two 1-row DECIMAL aggregates over the
-    O(nodes) checkpointed frames, collected driver-side — is compared
-    against ``tol``; below it, remaining rounds are skipped.
+    Σ|h−h_prev| + Σ|a−a_prev| — one 1-row aggregate of two DECIMAL sums
+    over hub⋈auth⋈prev_hub⋈prev_auth, the job that fills the round's
+    hub leaf — is compared against ``tol``; below it, remaining rounds
+    are skipped.
     ``iterations`` stays the hard upper bound, so a ``tol`` run's
     result always equals SOME fixed-count run (each completed round is
     identical to the fixed-count round) — it is still replayable, just
@@ -1647,13 +1636,15 @@ def hits(
         F.col(src_col).alias("_u"), F.col(dst_col).alias("_v")
     ).distinct()
     e = e.persist()
+    steps = Supersteps(iterations)
     try:
-        nodes = (
+        nodes, row = steps.cut(
             e.select(F.col("_u").alias("node"))
             .unionByName(e.select(F.col("_v").alias("node")))
-            .distinct()
+            .distinct(),
+            count_rows,
         )
-        nodes, n = checkpoint_leaf(nodes)
+        n = row[0]
         if n == 0:
             return edges.sparkSession.createDataFrame(
                 [], "node long, hub double, authority double"
@@ -1664,91 +1655,60 @@ def hits(
         hub = nodes.select("node", start.alias("h"))
         auth = nodes.select("node", start.alias("a"))
         dec = "decimal(28,12)"
-        for it in range(int(iterations)):
+
+        def half(scores, col, by, to, name):
+            # one L1-normalized half-round: Σ over the edges into each
+            # node, then the 1-row total broadcast back as the divisor
+            raw = (
+                e.join(scores.select(F.col("node").alias(by), col), by)
+                .groupBy(F.col(to).alias("node"))
+                .agg(F.sum(F.col(col).cast(dec)).alias("_raw"))
+            )
+            un = nodes.join(raw, "node", "left").select(
+                "node",
+                F.coalesce(
+                    F.col("_raw").cast("double"), F.lit(0.0)
+                ).alias("_raw"),
+            )
+            tot = un.agg(
+                F.sum(F.round(F.col("_raw"), 12).cast(dec)).alias("_t")
+            )
+            return un.crossJoin(F.broadcast(tot)).select(
+                "node",
+                F.when(
+                    F.col("_t") > 0,
+                    F.round(
+                        F.col("_raw") / F.col("_t").cast("double"), 12
+                    ),
+                )
+                .otherwise(F.lit(0.0))
+                .alias(name),
+            )
+
+        for it in steps:
             prev_hub, prev_auth = hub, auth
-            contrib_a = (
-                e.join(
-                    hub.select(F.col("node").alias("_u"), "h"), "_u"
-                )
-                .groupBy(F.col("_v").alias("node"))
-                .agg(F.sum(F.col("h").cast(dec)).alias("_raw"))
-            )
-            a_un = nodes.join(contrib_a, "node", "left").select(
-                "node",
-                F.coalesce(
-                    F.col("_raw").cast("double"), F.lit(0.0)
-                ).alias("_raw"),
-            )
-            tot_a = a_un.agg(
-                F.sum(F.round(F.col("_raw"), 12).cast(dec)).alias("_t")
-            )
-            auth = a_un.crossJoin(F.broadcast(tot_a)).select(
-                "node",
-                F.when(
-                    F.col("_t") > 0,
-                    F.round(
-                        F.col("_raw") / F.col("_t").cast("double"), 12
-                    ),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("a"),
-            )
-            auth, _ = checkpoint_leaf(_shrink(auth, small))
-            contrib_h = (
-                e.join(
-                    auth.select(F.col("node").alias("_v"), "a"), "_v"
-                )
-                .groupBy(F.col("_u").alias("node"))
-                .agg(F.sum(F.col("a").cast(dec)).alias("_raw"))
-            )
-            h_un = nodes.join(contrib_h, "node", "left").select(
-                "node",
-                F.coalesce(
-                    F.col("_raw").cast("double"), F.lit(0.0)
-                ).alias("_raw"),
-            )
-            tot_h = h_un.agg(
-                F.sum(F.round(F.col("_raw"), 12).cast(dec)).alias("_t")
-            )
-            hub = h_un.crossJoin(F.broadcast(tot_h)).select(
-                "node",
-                F.when(
-                    F.col("_t") > 0,
-                    F.round(
-                        F.col("_raw") / F.col("_t").cast("double"), 12
-                    ),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("h"),
-            )
-            hub, _ = checkpoint_leaf(_shrink(hub, small))
+            auth, _ = steps.cut(_shrink(half(hub, "h", "_u", "_v", "a"), small))
+            hub = _shrink(half(auth, "a", "_v", "_u", "h"), small)
+            probe = None
             if tol is not None and it < int(iterations) - 1:
-                deltas = []
-                for cur, prev, col in (
-                    (hub, prev_hub, "h"),
-                    (auth, prev_auth, "a"),
-                ):
-                    row = (
-                        cur.join(
-                            prev.select(
-                                "node", F.col(col).alias("_p")
-                            ),
-                            "node",
-                        )
-                        .agg(
-                            F.sum(
-                                F.abs(
-                                    F.col(col) - F.col("_p")
-                                ).cast(dec)
-                            )
+                # both L1 deltas in ONE aggregate, the job that fills
+                # the hub leaf; every frame carries the full node set
+                probe = lambda h: (  # noqa: E731
+                    h.join(auth, "node")
+                    .join(prev_hub.withColumnRenamed("h", "_ph"), "node")
+                    .join(prev_auth.withColumnRenamed("a", "_pa"), "node")
+                    .agg(
+                        *(
+                            F.sum(F.abs(F.col(c) - F.col(p)).cast(dec))
                             .cast("double")
-                            .alias("_d")
+                            for c, p in (("h", "_ph"), ("a", "_pa"))
                         )
-                        .first()
                     )
-                    deltas.append(row["_d"] or 0.0)
-                if sum(deltas) < float(tol):
-                    break
+                )
+            hub, d = steps.cut(hub, probe)
+            steps.retain(nodes, hub, auth)
+            if d is not None and (d[0] or 0.0) + (d[1] or 0.0) < float(tol):
+                break
         out = (
             hub.join(auth, "node")
             .select(
@@ -1761,6 +1721,7 @@ def hits(
         out = out.localCheckpoint(eager=True)
     finally:
         e.unpersist()
+        steps.retain()
     return out
 
 
@@ -1925,9 +1886,10 @@ def betweenness_sampled(
     Σ_w (σ_v/σ_w)·(1+δ_w) over its layer-h neighbors w — each level
     is one equi-join + one groupBy, terms rounded to 10 dp and summed
     as DECIMAL (merge-order free, the harmonic-centrality convention),
-    δ re-entering the next level as a 10-dp double. Every
-    materialization localCheckpoints (the visited/cur frames are
-    referenced twice per round — the k_core lineage rule).
+    δ re-entering the next level as a 10-dp double. Every hop and
+    level is a superstep cut (the visited/cur frames are referenced
+    twice per round — the k_core lineage rule); the returned frame
+    reads the levels' leaves.
 
     Output: one row per node with positive dependency —
     (node, betweenness 6 dp) = Σ_seeds δ_seed(node), endpoints
@@ -1967,45 +1929,20 @@ def betweenness_sampled(
     small = adj.count() <= _MOVE_BCAST_MAX_NODES
     und.unpersist()
     spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(int(s), int(s), 0, 1) for s in seeds],
-        "s long, node long, dist int, sigma long",
-    )
-    frontier = visited
-    # under the node gate every per-hop frame is O(seeds·nodes) —
+    # under the node gate every per-level frame is O(seeds·nodes) —
     # broadcast it as the build side so the persisted adjacency streams
     # map-side (guide §3.1; identical rows, order-free sums)
     bc = F.broadcast if small else (lambda d: d)
+    steps = Supersteps(max_hops)
     try:
-        for hop in range(1, int(max_hops) + 1):
-            nxt = (
-                bc(
-                    frontier.select(
-                        "s", F.col("node").alias("a"), "sigma"
-                    )
-                )
-                .join(adj, "a")
-                .groupBy("s", F.col("b").alias("node"))
-                .agg(F.sum("sigma").alias("sigma"))
-                .join(bc(visited), ["s", "node"], "left_anti")
-                .withColumn("dist", F.lit(hop).cast("int"))
-                .select("s", "node", "dist", "sigma")
-            )
-            nxt, n_nxt = checkpoint_leaf(_shrink(nxt, small))
-            if n_nxt == 0:
-                break
-            visited, _ = checkpoint_leaf(
-                _shrink(visited.unionByName(nxt), small)
-            )
-            frontier = nxt
-        h_max = visited.agg(F.max("dist")).collect()[0][0] or 0
+        visited, h_max = _bfs_layers(adj, seeds, steps, small, sigma=True)
         # backward accumulation, deepest level first; cur carries the
         # CURRENT layer's (s, node, sigma, delta)
         cur = visited.where(F.col("dist") == h_max).withColumn(
             "delta", F.lit(0.0)
         )
         deps = []
-        for h in range(int(h_max), 0, -1):
+        for h in range(h_max, 0, -1):
             prev_layer = visited.where(F.col("dist") == h - 1).select(
                 "s", F.col("node").alias("__v"),
                 F.col("sigma").alias("__sv"),
@@ -2052,21 +1989,23 @@ def betweenness_sampled(
                     ),
                 )
             )
-            cur, _ = checkpoint_leaf(_shrink(nxt_cur, small))
+            cur, _ = steps.cut(_shrink(nxt_cur, small))
             deps.append(
                 cur.where(
                     (F.col("node") != F.col("s"))
                     & (F.col("delta") > 0)
                 ).select("node", "delta")
             )
+            steps.retain(visited, *deps)
         if not deps:
+            steps.retain()
             return spark.createDataFrame(
                 [], "node long, betweenness double"
             )
         all_deps = deps[0]
         for d in deps[1:]:
             all_deps = all_deps.unionByName(d)
-        return (
+        out = (
             all_deps.groupBy("node")
             .agg(
                 F.round(
@@ -2078,6 +2017,8 @@ def betweenness_sampled(
             )
             .orderBy("node")
         )
+        steps.retain(out)
+        return out
     finally:
         adj.unpersist()
 
@@ -2489,8 +2430,8 @@ def greedy_modularity_move(
     O(nodes) label frame, one groupBy((v, c)) count, one small
     community-degree aggregate joined back, one groupBy(v) argmin —
     row-scale equi-shuffles only; m enters once as a driver literal
-    from a 1-row count. Label frames follow the
-    ``checkpoint_leaf`` truncation discipline.
+    from a 1-row count. Each round's labels are a superstep cut
+    (:func:`_greedy_move_rounds`).
 
     ``labels``: optional starting assignment (node, community);
     default = singleton communities (each node its own id).
@@ -2606,10 +2547,11 @@ def greedy_modularity_move(
             )
         )
         lab, _ = checkpoint_leaf(lab)
-    lab = _greedy_move_rounds(adj, deg, m, lab, rounds)
+    out = _greedy_move_rounds(adj, deg, m, lab, rounds)
     adj.unpersist()
-    deg.unpersist()
-    return lab
+    release(lab)
+    release(deg)
+    return out
 
 
 # Node-count gate for broadcasting the O(nodes) frames inside the
@@ -2625,9 +2567,10 @@ def greedy_modularity_move(
 _MOVE_BCAST_MAX_NODES = BCAST_MAX_ROWS
 
 # Partition count for the iterative frames when the graph sits under the
-# broadcast gate. Cached/checkpointed plans compile WITHOUT AQE partition
-# coalescing (`canChangeCachedPlanOutputPartitioning` defaults false), so
-# every materialized move-round frame otherwise keeps all
+# broadcast gate. Cached plans (and leaves checkpointed from a cache)
+# compile WITHOUT AQE partition coalescing
+# (`canChangeCachedPlanOutputPartitioning` defaults false), so every
+# materialized move-round frame otherwise keeps all
 # spark.sql.shuffle.partitions partitions and unions stack them — the
 # driver-config Louvain profile showed 64–128-task stages over a
 # 6.7k-node graph, pure scheduling overhead (~0.6 s/job at local[32]).
@@ -2745,12 +2688,13 @@ def _greedy_move_rounds(
     the ΔQ argmax); ``deg``: (v, _d long) weighted strength WITH
     self-loop weight counted twice (the Newman convention); ``m``:
     total edge weight; ``lab``: materialized (node, community). The
-    caller owns adj/deg persistence; superseded label frames are
-    released here, the returned frame is materialized.
+    caller owns adj/deg persistence and its ``lab``; the rounds'
+    superseded label leaves are released here, and the returned frame
+    reads the last one.
 
-    Early fixpoint exit: each round counts its moves (one join +
-    count over two O(nodes) checkpointed label frames — cheap next to
-    a move round's edge joins). Rounds alternate direction, so one
+    Early fixpoint exit: each round counts its moves (a sum of the
+    argmax's change flags, the job that fills the round's cut). Rounds
+    alternate direction, so one
     quiet round proves nothing about the OTHER direction — but two
     consecutive quiet rounds (one of each parity) leave the state a
     fixpoint for both, and every remaining round replays as a no-op;
@@ -2792,7 +2736,8 @@ def _greedy_move_rounds(
     )
     adj_plus.count()
     quiet = 0
-    for rnd in range(int(rounds)):
+    steps = Supersteps(rounds)
+    for rnd in steps:
         # k_{v,c}: v's edge weight into each neighbor community,
         # stay candidates included via the self-rows
         cand = (
@@ -2857,23 +2802,15 @@ def _greedy_move_rounds(
                 .alias("_chg"),
             )
         )
-        prev = lab
-        # fused materialize: the move-count aggregate scans every
-        # partition, populating the persist (the job checkpoint_leaf
-        # would otherwise spend on count()), then the checkpoint reads
-        # the cached blocks — 2 jobs per round, not 3
-        cached = _shrink(new_lab, small).persist()
-        moved = int(
-            cached.agg(F.coalesce(F.sum("_chg"), F.lit(0))).collect()[0][0]
+        # the move count is the job that fills the cut; the returned
+        # frame is the (node, community) projection of the last leaf
+        cut, moved = steps.cut(
+            _shrink(new_lab, small),
+            lambda d: d.agg(F.coalesce(F.sum("_chg"), F.lit(0))),
         )
-        # checkpoint the (node, community) projection so the returned
-        # frame is itself the checkpoint leaf; superseded leaves are
-        # freed by the ContextCleaner as references drop
-        # (Dataset.unpersist() cannot reach localCheckpoint blocks)
-        lab = cached.select("node", "community").localCheckpoint()
-        cached.unpersist()
-        prev.unpersist()
-        if moved == 0:
+        lab = cut.select("node", "community")
+        steps.retain(lab)
+        if moved[0] == 0:
             quiet += 1
             if quiet >= 2:
                 break
@@ -3048,7 +2985,7 @@ def louvain_two_level(
     )
     n_nodes = deg.count()  # cheap: checkpointed leaf
     adj.unpersist()
-    deg.unpersist()
+    release(deg)
     # same measured gate as the move rounds: label frames are O(nodes)
     # two-long rows — broadcast them into the edge-scale joins when
     # provably small, keep the equi-shuffle form above the gate
@@ -3203,12 +3140,8 @@ def louvain_two_level(
     und.unpersist()
     e2.unpersist()
     adj2.unpersist()
-    deg2.unpersist()
-    lab2.unpersist()
-    if keep_two:
-        l1.unpersist()
-    else:
-        two_lvl.unpersist()
+    for leaf in (deg2, lab2, l1 if keep_two else two_lvl):
+        release(leaf)
     return out
 
 
@@ -3321,8 +3254,7 @@ def eigenvector_centrality(
     comparable).
 
     Output: (node, score 6 dp), L2-normalized after the final
-    iteration. The returned frame derives from the final cached
-    iteration — ``.unpersist()`` it when done.
+    iteration, read from the final iteration's checkpoint leaf.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -3365,14 +3297,13 @@ def eigenvector_centrality(
     bc = F.broadcast if small else (lambda d: d)
     # plan depth doubles per round even under persist (each round
     # references the score frame twice: contribution join + identity
-    # add) — truncate lineage at every materialization; the benched
-    # 3-iteration arm analyzed to 4,793 exchanges under plain persist
-    x, _ = checkpoint_leaf(
-        _shrink(nodes.select("node", F.lit(1.0).alias("x")), small)
-    )
-    prev_y = None
+    # add) — every round is a cut; the benched 3-iteration arm analyzed
+    # to 4,793 exchanges under plain persist. The start is a projection
+    # of the cached node set.
+    x = _shrink(nodes.select("node", F.lit(1.0).alias("x")), small)
+    steps = Supersteps(iterations)
     try:
-        for _ in range(int(iterations)):
+        for _ in steps:
             contrib = (
                 e.join(bc(x), e["_src"] == x["node"])
                 .groupBy(F.col("_dst").alias("node"))
@@ -3384,7 +3315,8 @@ def eigenvector_centrality(
                     ).cast("double").alias("y")
                 )
             )
-            y, _ = checkpoint_leaf(
+            # the squared norm is the job that fills the cut
+            y, s = steps.cut(
                 _shrink(
                     x.join(bc(contrib), "node", "left").select(
                         "node",
@@ -3394,35 +3326,27 @@ def eigenvector_centrality(
                         ).alias("y"),
                     ),
                     small,
-                )
+                ),
+                lambda d: d.agg(
+                    F.sum(
+                        F.round(
+                            F.col("y") * F.col("y") * F.lit(1e12)
+                        ).cast("decimal(38,0)")
+                    )
+                ),
             )
-            s = y.agg(
-                F.sum(
-                    F.round(
-                        F.col("y") * F.col("y") * F.lit(1e12)
-                    ).cast("decimal(38,0)")
-                ).alias("_s")
-            ).collect()[0]["_s"]
+            s = s[0]
             l2 = (
                 round(math.sqrt(float(int(s)) / 1e12), 12)
                 if s is not None and int(s) > 0
                 else 0.0
             )
+            # xn is a cheap projection over the leaf — no second cut
             if l2 > 0:
-                xn = y.select(
-                    "node", (F.col("y") / F.lit(l2)).alias("x")
-                )
+                x = y.select("node", (F.col("y") / F.lit(l2)).alias("x"))
             else:
-                xn = y.select("node", F.col("y").alias("x"))
-            # xn is a cheap projection over the cached y — skip the
-            # second per-round materialization; the PREVIOUS round's
-            # y can release once this round's y is materialized
-            if prev_y is None:
-                x.unpersist()  # release the init frame
-            else:
-                prev_y.unpersist()
-            prev_y = y
-            x = xn
+                x = y.select("node", F.col("y").alias("x"))
+            steps.retain(x)
         return x.select(
             "node", F.round(F.col("x"), 6).alias("score")
         )

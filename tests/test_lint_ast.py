@@ -137,3 +137,63 @@ def test_no_persist_without_paired_release():
         "convention) and not whitelisted as returned-lazy:\n  "
         + "\n  ".join(violations)
     )
+
+
+# Iterative operators under ops/ materialize through
+# ops/materialize.py::Supersteps, which owns the cadence of the cuts, the
+# probe that fills them and the release of superseded generations. A
+# localCheckpoint( or checkpoint_leaf( call inside a for/while body is a
+# hand-written superstep: its leaves are never released (a local
+# checkpoint's blocks are out of Dataset.unpersist()'s reach). ALS and
+# the BPE trainer keep persist-only loops and checkpoint once after them,
+# so the rule does not reach them.
+
+
+def _loop_checkpoints(source: str, filename: str) -> list[tuple[str, int]]:
+    found = []
+
+    def visit(node, fn, in_loop):
+        for child in ast.iter_child_nodes(node):
+            # a for loop's iterable runs once; everything else in a
+            # for/while (body, test, else) counts as per-round
+            loop = in_loop or isinstance(node, (ast.For, ast.While)) and (
+                child is not getattr(node, "iter", None)
+            )
+            if loop and isinstance(child, ast.Call):
+                f = child.func
+                called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if called in ("localCheckpoint", "checkpoint_leaf"):
+                    found.append((fn, child.lineno))
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name, loop)
+            else:
+                visit(child, fn, loop)
+
+    visit(ast.parse(source, filename=filename), None, False)
+    return found
+
+
+def test_no_hand_written_supersteps():
+    violations = []
+    for path in sorted((PKG / "ops").glob("*.py")):
+        if path.name == "materialize.py":
+            continue
+        rel = str(path.relative_to(PKG))
+        for fn, line in _loop_checkpoints(path.read_text(), str(path)):
+            violations.append(f"{rel}:{line} {fn}")
+    assert not violations, (
+        "localCheckpoint/checkpoint_leaf inside a loop body — run the loop "
+        "through ops/materialize.py::Supersteps:\n  " + "\n  ".join(violations)
+    )
+
+
+def test_superstep_lint_catches_a_per_round_checkpoint():
+    pasted = (
+        "def peel(cur):\n"
+        "    for _ in range(3):\n"
+        "        cur = cur.where('d > 1').localCheckpoint()\n"
+        "    while cur:\n"
+        "        cur, _ = checkpoint_leaf(cur)\n"
+        "    return cur.localCheckpoint()\n"
+    )
+    assert _loop_checkpoints(pasted, "<pasted>") == [("peel", 3), ("peel", 5)]
