@@ -864,6 +864,7 @@ def ntile_assign(
     n_buckets: int,
     out: str = "bucket",
     num_partitions: int | None = None,
+    persisted: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Equal-frequency bucket assignment with EXACT SQL ``NTILE``
     semantics — the quantile-discretizer a feature pipeline wants — that
@@ -882,13 +883,16 @@ def ntile_assign(
     NTILE splits ties by window order, so ``order_by`` MUST end with a
     unique tie-break column for the assignment to be deterministic
     (same contract as SQL). Output: input columns + ``{out}`` (int).
+    ``persisted`` takes the rank's persisted handle, as in
+    ``global_row_number``.
     """
     from metadata_etl_framework_spark.ops.packing import global_row_number
 
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
     ranked = global_row_number(
-        df, list(order_by), out="__r", num_partitions=num_partitions
+        df, list(order_by), out="__r", num_partitions=num_partitions,
+        persisted=persisted,
     )
     # total rows via a broadcast 1-row aggregate (not a window: that
     # would re-introduce the partitionless-window problem)

@@ -617,6 +617,9 @@ def connected_components(
     out_type = half.schema["u"].dataType
     tbl = driver_table(half, CC_DRIVER_MAX_EDGES)
     if tbl is not None:
+        # the twin holds every edge; the Arrow-built result never reads
+        # the entry checkpoint
+        release(half)
         parent: dict = {}
 
         def find(x):

@@ -202,6 +202,7 @@ def global_row_number(
     order_by: "list[str | tuple[str, str]]",
     out: str = "row_number",
     num_partitions: int | None = None,
+    persisted: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Exact global ROW_NUMBER over an arbitrary multi-column order —
     the scale-safe replacement for ``Window.orderBy(...)`` with no
@@ -216,6 +217,10 @@ def global_row_number(
     partition, so the numbering is a valid row_number under ties — but
     only DETERMINISTIC if the caller ends the order with a unique
     tie-break column (same contract as SQL ROW_NUMBER).
+
+    The returned frame reads a persisted range-partitioned frame; a
+    caller that materializes the result passes ``persisted`` to take
+    that handle and release it afterwards.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -236,6 +241,8 @@ def global_row_number(
     with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    if persisted is not None:
+        persisted.append(with_pid)
     counts = with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c")).collect()
     offsets, acc = [], 0
     for row in sorted(counts, key=lambda r: r["__pid"]):

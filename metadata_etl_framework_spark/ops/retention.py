@@ -22,7 +22,7 @@ from metadata_etl_framework_spark.ops.driver_exact import (
     column_np,
     driver_table,
 )
-from metadata_etl_framework_spark.ops.materialize import checkpoint_leaf
+from metadata_etl_framework_spark.ops.materialize import checkpoint_leaf, release
 
 _PERIOD_DAYS = {"day": 1, "week": 7}
 
@@ -848,19 +848,24 @@ def rfm_segments(
     # (the benched arm analyzed to 412 exchanges) — cut lineage between
     # passes with the cache-then-checkpoint hybrid; the frame is
     # CUSTOMER-level (tiny relative to facts), so the materializations
-    # are O(users) each and the audited plan stays one-pass-sized
-    # superseded checkpoint blocks are released by the ContextCleaner
-    # as the Python references drop at each rebind below —
-    # Dataset.unpersist() cannot reach localCheckpoint blocks (they are
-    # RDD-level, not cache-manager entries), so there is no eager-release
-    # lever here; the frames are O(users) each, bounded between calls
-    scored, _ = checkpoint_leaf(scored)
-    scored, _ = checkpoint_leaf(
-        ntile_assign(scored, ["recency_days", "user"], n_buckets, out="_rb")
-    )
-    scored, _ = checkpoint_leaf(
-        ntile_assign(scored, ["frequency", "user"], n_buckets, out="f_score")
-    )
+    # are O(users) each and the audited plan stays one-pass-sized.
+    # Once a pass's leaf is filled, nothing reads the leaf before it or
+    # the pass's persisted rank frame: release() frees the leaf
+    # (Dataset.unpersist() cannot reach its RDD-level blocks) and
+    # unpersist() the rank, so only the last leaf and the last pass's
+    # rank, which the result reads, outlive the call
+    base, _ = checkpoint_leaf(scored)
+    ranks: list[DataFrame] = []
+    rb, _ = checkpoint_leaf(ntile_assign(
+        base, ["recency_days", "user"], n_buckets, out="_rb", persisted=ranks
+    ))
+    release(base)
+    scored, _ = checkpoint_leaf(ntile_assign(
+        rb, ["frequency", "user"], n_buckets, out="f_score", persisted=ranks
+    ))
+    release(rb)
+    for rank in ranks:
+        rank.unpersist()
     scored = ntile_assign(
         scored, ["monetary", "user"], n_buckets, out="m_score"
     )

@@ -7,7 +7,10 @@ finalize, with retry and failure handling.
 
 Spark-first difference (SURVEY §3.1): extraction and transformation
 build ONE lazy DataFrame DAG, and the load's write is the only action
-that computes it. The pipeline's DQ rules ride that write as one
+that computes it. Extraction builds its plan without running a Spark
+job: a parquet source's schema comes from one footer read on the driver
+(``sources/file_connector.py::read_files``), not from Spark's
+schema-inference job. The pipeline's DQ rules ride that write as one
 ``observe()`` (SURVEY §7.3): validation reads the rule counts, and
 LOAD_LOG its ``rows_written``, from the write job instead of recomputing
 the DAG. Only the dataset rules that need a pass of their own

@@ -10,13 +10,17 @@ division to microseconds (floor semantics, matching DuckDB's
 TIMESTAMP_NS → TIMESTAMP cast).
 
 This is the single entry point tests / bench / the driver contract use
-to load ``/root/testdata/sf*/<name>.parquet``.
+to load ``<sf_dir>/<name>.parquet``. Like ``FileConnector.read`` it reads
+through ``file_connector.read_files``, so a load plans without Spark's
+schema-inference job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from metadata_etl_framework_spark.sources.file_connector import read_files
 
 
 def _ns_timestamp_columns(path: str) -> list[str]:
@@ -43,9 +47,10 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     ns_cols = _ns_timestamp_columns(path)
     if ns_cols:
         # runtime-settable SQL conf — covers sessions not built by
-        # session.get_spark (e.g. the driver's own harness session)
+        # session.get_spark (e.g. the driver's own harness session); set
+        # before read_files reads the footer, whose converter reads it
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_files(spark, path, "parquet")
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet surfaces as

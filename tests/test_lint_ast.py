@@ -197,3 +197,82 @@ def test_superstep_lint_catches_a_per_round_checkpoint():
         "    return cur.localCheckpoint()\n"
     )
     assert _loop_checkpoints(pasted, "<pasted>") == [("peel", 3), ("peel", 5)]
+
+
+# Parquet sources under sources/ and orchestrator/ plan through
+# sources/file_connector.py::read_files, which hands the reader the
+# schema from one footer so that the read runs no schema-inference job.
+# Elsewhere there, a parquet read goes around it: a bare `.read.parquet(`,
+# a `.format("parquet").load(`, a `.load(` whose format is a variable
+# (it may be parquet), or a `.read...load(` with no format (the default
+# source, spark.sql.sources.default, is parquet). A format named by a
+# class constant (nosql_connector's FORMAT) or another literal is no
+# parquet read.
+FOOTER_READER = ("sources/file_connector.py", "read_files")
+
+
+def _is_parquet_read(call: ast.Call) -> bool:
+    f = call.func
+    if f.attr == "parquet":
+        return isinstance(f.value, ast.Attribute) and f.value.attr == "read"
+    if f.attr != "load":
+        return False
+    node = f.value  # the reader chain, outermost call first
+    while isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        if node.func.attr == "format":
+            arg = node.args[0] if node.args else None
+            return isinstance(arg, ast.Name) or (
+                isinstance(arg, ast.Constant) and str(arg.value).lower() == "parquet"
+            )
+        node = node.func.value
+    return isinstance(node, ast.Attribute) and node.attr == "read"
+
+
+def _parquet_reads(source: str, filename: str) -> list[tuple[str, int]]:
+    found = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and _is_parquet_read(child)
+            ):
+                found.append((fn, child.lineno))
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else fn)
+
+    visit(ast.parse(source, filename=filename), None)
+    return found
+
+
+def test_parquet_sources_read_through_the_footer_helper():
+    violations = []
+    for sub in ("sources", "orchestrator"):
+        for path in sorted((PKG / sub).glob("*.py")):
+            rel = str(path.relative_to(PKG))
+            for fn, line in _parquet_reads(path.read_text(), str(path)):
+                if (rel, fn) != FOOTER_READER:
+                    violations.append(f"{rel}:{line} {fn}")
+    assert not violations, (
+        "parquet read outside sources/file_connector.py::read_files — it "
+        "runs Spark's schema-inference job:\n  " + "\n  ".join(violations)
+    )
+
+
+def test_parquet_read_lint_catches_a_bare_reader():
+    pasted = (
+        "def read(self, path, fmt, opts):\n"
+        "    reader = self.spark.read\n"
+        "    a = reader.options(**opts).format(fmt).load(path)\n"
+        "    b = self.spark.read.parquet(path)\n"
+        "    c = spark.read.format('parquet').option('x', 1).load(path)\n"
+        "    d = spark.read.option('x', 1).load(path)\n"
+        "    e = spark.read.format('jdbc').options(**opts).load()\n"
+        "    f = self.spark.read.format(self.FORMAT).load()\n"
+        "    g = json.load(fh)\n"
+        "    return a, b, c, d, e, f, g\n"
+    )
+    assert _parquet_reads(pasted, "<pasted>") == [
+        ("read", 3), ("read", 4), ("read", 5), ("read", 6)
+    ]

@@ -11,13 +11,17 @@ persisted.
 
 The job-count pins hold each loop to one job pair per round: the probe
 (a count, or the fixpoint sum) is the job that fills the round's cut.
+
+Two one-off cuts are held to the same rule: connected_components'
+entry checkpoint once its driver twin has the edges, and the leaves and
+persisted ranks of rfm_segments' superseded NTILE passes.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from metadata_etl_framework_spark.ops import clustering, dedup, graph
+from metadata_etl_framework_spark.ops import clustering, dedup, graph, retention
 
 
 def _edges(spark):
@@ -139,3 +143,53 @@ def test_loop_job_counts(spark, gate_off, name):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == want
     _assert_released(spark, name, before, out)
+
+
+def _reads(df) -> set[int]:
+    """The persisted RDDs ``df`` reads: its checkpoint leaves and the
+    buffers of the caches its plan uses."""
+    ids = _leaf_rdd_ids(df)
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    for i in range(leaves.length()):
+        if leaves.apply(i).nodeName() == "InMemoryRelation":
+            ids.add(int(leaves.apply(i).cacheBuilder().cachedColumnBuffers().id()))
+    return ids
+
+
+def test_connected_components_twin_leaves_nothing_persisted(spark, monkeypatch):
+    # gate on: the twin reads the whole pair frame through its entry
+    # checkpoint, and the Arrow-built result reads no Spark block
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "1")
+    spark.catalog.clearCache()
+    before = _persisted(spark)
+    out = dedup.connected_components(_edges(spark), src="src", dst="dst")
+    assert out.collect()
+    assert _persisted(spark) - before == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_rfm_segments_releases_superseded_passes(spark):
+    # three stacked NTILE passes, each cut by a checkpoint leaf: only the
+    # last leaf and the last pass's persisted rank are read by the result
+    import datetime as dt
+    import random
+
+    rnd = random.Random(3)
+    orders = spark.createDataFrame(
+        [
+            (rnd.randrange(40), dt.date(2024, 1, 1) + dt.timedelta(days=rnd.randrange(300)),
+             round(rnd.random() * 1000, 2))
+            for _ in range(400)
+        ],
+        "o_custkey long, o_orderdate date, o_totalprice double",
+    )
+    spark.catalog.clearCache()
+    before = _persisted(spark)
+    out = retention.rfm_segments(orders)
+    assert len(out.collect()) == 40
+    left = _persisted(spark) - before
+    assert left <= _reads(out), (
+        f"rfm_segments: {len(left - _reads(out))} persisted RDD(s) the "
+        "result does not read"
+    )
+    assert len(left) == 2  # the last leaf and the last pass's rank
