@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from metadata_etl_framework_spark.ops.driver_exact import driver_table
 from metadata_etl_framework_spark.ops.materialize import Supersteps, release
-from metadata_etl_framework_spark.ops.text import fingerprint
+from metadata_etl_framework_spark.ops.text import fingerprint, word_ngrams
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -45,26 +45,18 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingle set (distinct, sorted for determinism).
 
     Tokens are the ``\\s+`` split of the lowercased, space-trimmed text,
-    and a gram is ``n`` consecutive tokens joined by one space. Documents
-    with fewer than ``n`` tokens (NULL text included) yield an EMPTY
-    shingle array: every slice below then has length 0, never a negative
-    length, which would abort the whole job
-    (INVALID_PARAMETER_VALUE.LENGTH).
+    and a gram is ``n`` consecutive tokens joined by one space: the
+    :func:`~metadata_etl_framework_spark.ops.text.word_ngrams` of that
+    text. Documents with fewer than ``n`` tokens (NULL text included)
+    yield an EMPTY shingle array.
 
-    Linear in document length: the ``n`` shifted slices of the token
-    array are zipped OUTSIDE the lambda, so the split runs a fixed
-    ``2n`` times per row, whatever its length. A lambda that slices the
-    token array itself re-evaluates the split once per position, because
-    higher-order functions evaluate interpreted (CodegenFallback) —
-    quadratic in the number of tokens."""
+    Every step is a codegen'd expression (regex replace and extract,
+    ``array_distinct``, ``sort_array``), linear in document length, with
+    no lambda evaluated per gram: ``sort_array`` orders a null-free
+    string array as ``array_sort`` does."""
     c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.trim(F.lower(c)), r"\s+")
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)])
-    )
-    return F.array_sort(
+    grams = word_ngrams(F.trim(F.lower(c)), n)
+    return F.sort_array(
         F.array_distinct(F.coalesce(grams, F.array().cast("array<string>")))
     )
 

@@ -8,6 +8,7 @@ pipelines with the scan.
 
 from __future__ import annotations
 
+import string
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -46,6 +47,63 @@ def tokens(col: Column | str) -> Column:
     )
 
 
+def word_ngrams(col: Column | str, n: int) -> Column:
+    """The word ``n``-gram occurrences of a string, in order: gram ``i``
+    is tokens ``i..i+n-1`` of ``split(s, '\\s+')`` joined by one space,
+    for every ``i`` with ``n`` tokens left (fewer than ``n`` tokens give
+    ``[]``; NULL gives NULL).
+
+    Collapsing every ``\\s+`` run to one space leaves those tokens
+    unchanged, the leading and trailing empty tokens included. A
+    zero-width match then sits at each token start (a position not
+    preceded by a non-space) and its lookahead captures exactly ``n``
+    tokens. Both steps are codegen'd regex expressions, so the cost is
+    linear in the string and no lambda is evaluated per element."""
+    c = F.col(col) if isinstance(col, str) else col
+    u = F.regexp_replace(c, r"\s+", " ")
+    return F.regexp_extract_all(
+        u, F.lit(r"(?<![^ ])(?=([^ ]*(?: [^ ]*){%d}))" % (n - 1)), 1
+    )
+
+
+def _nonblank_lines(col: Column | str) -> Column:
+    """The ``\\n``-separated lines that hold a non-whitespace character,
+    in order (NULL gives ``[]``). ``(?d)`` makes ``\\n`` the only line
+    terminator, so a ``\\r`` stays inside its line, as with
+    ``split(t, '\\n')``."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.coalesce(
+        F.regexp_extract_all(c, F.lit(r"(?dm)^.*\S.*$"), 0),
+        F.array().cast("array<string>"),
+    )
+
+
+def _java_quote(s: str) -> str:
+    """``java.util.regex.Pattern.quote``: ``s`` as a literal."""
+    return r"\Q" + s.replace(r"\E", r"\E\\E\Q") + r"\E"
+
+
+# Java regex \s: the characters split(t, '\s+') cuts tokens on
+_JAVA_SPACE = " \t\n\x0b\f\r"
+
+
+def _stopword_pattern(stopwords: Sequence[str]) -> str | None:
+    """A Java regex whose matches over trimmed, lowercased text are the
+    ``split(t, '\\s+')`` tokens equal to a stopword: one match per such
+    token. A token never holds whitespace, so a stopword that does
+    matches nothing. The empty stopword matches the empty tokens, which
+    sit only at the ends: before a leading and after a trailing
+    whitespace character. None when nothing can match."""
+    words = sorted({w for w in stopwords if w and not set(w) & set(_JAVA_SPACE)})
+    parts = []
+    if words:
+        alts = "|".join(_java_quote(w) for w in words)
+        parts.append(r"(?<!\S)(?:%s)(?!\S)" % alts)
+    if "" in stopwords:
+        parts += [r"\A(?=\s)", r"(?<=\s)\z"]
+    return "|".join(parts) or None
+
+
 def token_count(df: DataFrame, text_col: str = "text", out: str = "n_tokens") -> DataFrame:
     return df.withColumn(out, F.size(tokens(text_col)))
 
@@ -63,13 +121,22 @@ def _quality_feature_columns(
 ) -> dict[str, Column]:
     """The per-document signals of :func:`quality_features`, by output
     name, as Columns over ``text_col`` (also the inputs of
-    :func:`quality_score_column`)."""
-    toks = tokens(text_col)
-    n_tok = F.size(toks)
-    sw_array = F.array(*[F.lit(s) for s in stopwords])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw_array, F.lower(t))))
-    n_chars = F.length(F.col(text_col))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^!-/:-@\[-`{-~]", ""))
+    :func:`quality_score_column`).
+
+    Each count is one codegen'd expression over the whole string: the
+    stopword count is a regex match count over the trimmed, lowercased
+    text (see :func:`_stopword_pattern`), and the punctuation count is
+    the code points ``translate`` deletes."""
+    text = F.col(text_col)
+    n_tok = F.size(tokens(text_col))
+    pattern = _stopword_pattern(stopwords)
+    n_stop = (
+        F.regexp_count(F.lower(F.trim(text)), F.lit(pattern))
+        if pattern else F.lit(0)
+    )
+    n_chars = F.length(text)
+    # string.punctuation: the 32 ASCII characters of _PUNCT_CLASS
+    n_punct = n_chars - F.length(F.translate(text, string.punctuation, ""))
     return {
         "n_chars_computed": n_chars,
         "n_tokens": n_tok,
@@ -349,6 +416,18 @@ def vocabulary(
     return counts
 
 
+def _token_ngrams(text_col: str, n: int, lowercase: bool) -> Column:
+    """The word ``n``-gram occurrences over :func:`tokens`, lowercased
+    when asked: :func:`word_ngrams` of the space-trimmed text, and none
+    for empty or NULL text (whose tokens are ``[]``, not ``[""]``)."""
+    trimmed = F.trim(F.coalesce(F.col(text_col), F.lit("")))
+    if lowercase:
+        trimmed = F.lower(trimmed)
+    return F.when(trimmed == "", F.array().cast("array<string>")).otherwise(
+        word_ngrams(trimmed, n)
+    )
+
+
 def top_ngrams(
     df: DataFrame,
     text_col: str = "text",
@@ -372,13 +451,7 @@ def top_ngrams(
     per-group top-k is a row_number window partitioned by the group.
     Ties break lexicographically (deterministic).
     """
-    toks = tokens(text_col)
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+    grams = _token_ngrams(text_col, n, lowercase)
 
     cols = []
     if group_col:
@@ -691,20 +764,15 @@ def repetition_metrics(
     degenerate generations that training pipelines drop.
 
     dup ratio = (occurrences − distinct) / occurrences, 0 for empty.
-    Pure JVM array expressions (split/transform/array_distinct) — a
-    per-row projection with no shuffle, linear at corpus scale.
+    The lines are :func:`_nonblank_lines` and the grams
+    :func:`word_ngrams`, both codegen'd regex expressions, and the
+    ratios take ``array_distinct``: a per-row projection with no shuffle
+    and no per-element lambda, linear at corpus scale.
     """
     t = F.col(text_col)
     # Spark's trim() strips only ' ' — use regex trimming so tab/newline-only
     # docs and leading-tab docs don't yield phantom empty tokens.
-    toks = F.regexp_replace(F.lower(t), r"^\s+|\s+$", "")
-    toks = F.when(toks == "", F.array().cast("array<string>")).otherwise(
-        F.split(toks, r"\s+")
-    )
-    # NULL text falls through when()'s otherwise branch as split(NULL) =
-    # NULL array; coalesce so null-text docs report 0 tokens / 0 lines
-    # instead of NULL (or -1 under legacy sizeOfNull).
-    toks = F.coalesce(toks, F.array().cast("array<string>"))
+    stripped = F.regexp_replace(F.lower(t), r"^\s+|\s+$", "")
 
     def dup_ratio(arr: Column) -> Column:
         n = F.size(arr)
@@ -716,26 +784,21 @@ def repetition_metrics(
             6,
         )
 
-    lines = F.coalesce(
-        F.filter(F.split(t, r"\n"), lambda ln: ln.rlike(r"\S")),
-        F.array().cast("array<string>"),
-    )
+    lines = _nonblank_lines(t)
     out = df.select(
         F.col(id_col),
         F.size(lines).alias("n_lines"),
         dup_ratio(lines).alias("dup_line_ratio"),
-        toks.alias("_toks"),
+        stripped.alias("_stripped"),
     )
+    # empty (or NULL) text has no tokens, so no grams and a 0 ratio
     for n in ngram_sizes:
         grams = F.when(
-            F.size("_toks") >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size("_toks") - n),
-                lambda i: F.concat_ws(" ", F.slice("_toks", i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+            F.coalesce(F.col("_stripped"), F.lit("")) == "",
+            F.array().cast("array<string>"),
+        ).otherwise(word_ngrams("_stripped", n))
         out = out.withColumn(f"dup_{n}gram_ratio", dup_ratio(grams))
-    return out.drop("_toks")
+    return out.drop("_stripped")
 
 
 def mixing_plan(
@@ -1273,19 +1336,19 @@ def quality_score_column(
     Column over ``text_col`` — the builder both ``quality_score`` and the
     step compiler's ``quality_filter`` use, so a filter scores each row in
     place (``withColumn`` + ``filter``) instead of joining a scored copy
-    of its input back on the id."""
+    of its input back on the id.
+
+    Its inputs are :func:`_quality_feature_columns` and the
+    :func:`_nonblank_lines` that ``repetition_metrics``' dup-line ratio
+    also reads: regex, ``translate`` and array expressions, all
+    codegen'd, with no lambda evaluated per token or per line."""
     w = [float(x) for x in weights]
     total = sum(w)
     if total <= 0:
         raise ValueError("weights must sum to a positive value")
     w = [x / total for x in w]
     f = _quality_feature_columns(text_col)
-    # same expression as repetition_metrics' dup_line_ratio (its unit
-    # tests + oracle pin the semantics; keep in lockstep)
-    lines = F.coalesce(
-        F.filter(F.split(F.col(text_col), r"\n"), lambda ln: ln.rlike(r"\S")),
-        F.array().cast("array<string>"),
-    )
+    lines = _nonblank_lines(text_col)
     n_lines = F.size(lines)
     dup_line_ratio = F.round(
         F.when(
@@ -1339,9 +1402,9 @@ def quality_score(
       (Gopher §A1.1) scores low.
 
     ONE pure-JVM projection per document — the line-repetition component
-    inlines the same expression ``repetition_metrics`` uses rather than
-    joining two derivations of the same input (a join here would shuffle
-    the whole corpus on id for values computable in place). No shuffle,
+    reads the same :func:`_nonblank_lines` ``repetition_metrics`` uses
+    rather than joining two derivations of the same input (a join here
+    would shuffle the whole corpus on id for values computable in place). No shuffle,
     no UDF, so the score pipelines with the scan at corpus scale.
     Weights are caller-tunable and normalized to sum 1. The score is
     :func:`quality_score_column`, the Column builder a caller that wants

@@ -276,3 +276,81 @@ def test_parquet_read_lint_catches_a_bare_reader():
     assert _parquet_reads(pasted, "<pasted>") == [
         ("read", 3), ("read", 4), ("read", 5), ("read", 6)
     ]
+
+
+# The text kernels are codegen'd expressions. A higher-order function
+# (F.transform, F.filter, array_sort, ...) evaluates its function
+# interpreted, one call per element, outside whole-stage codegen; a
+# lambda over a token array that is itself an expression re-evaluates
+# that expression per element. The kernels below call none, and pass a
+# Python lambda to no function; their reference lambda forms live in
+# tests/test_text_kernels.py.
+CODEGEN_KERNELS = {
+    "ops/text.py": {
+        "word_ngrams", "_nonblank_lines", "_token_ngrams",
+        "_quality_feature_columns", "quality_score_column", "top_ngrams",
+        "repetition_metrics",
+    },
+    "ops/dedup.py": {"shingles"},
+}
+HIGHER_ORDER = {
+    "aggregate", "array_sort", "exists", "filter", "forall", "map_filter",
+    "map_zip_with", "reduce", "transform", "transform_keys",
+    "transform_values", "zip_with",
+}
+
+
+def _higher_order_calls(source: str, filename: str, kernels) -> list[tuple[str, int]]:
+    found = []
+    for node in ast.parse(source, filename=filename).body:
+        if not isinstance(node, ast.FunctionDef) or node.name not in kernels:
+            continue
+        for n in ast.walk(node):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            hof = (
+                isinstance(f, ast.Attribute)
+                and f.attr in HIGHER_ORDER
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "F"
+            )
+            args = n.args + [kw.value for kw in n.keywords]
+            if hof or any(isinstance(a, ast.Lambda) for a in args):
+                found.append((node.name, n.lineno))
+    return found
+
+
+def test_text_kernels_pass_no_lambda():
+    violations = []
+    for rel, kernels in CODEGEN_KERNELS.items():
+        path = PKG / rel
+        source = path.read_text()
+        defined = {
+            n.name for n in ast.parse(source).body if isinstance(n, ast.FunctionDef)
+        }
+        assert kernels <= defined, f"{rel}: kernels gone {kernels - defined}"
+        for fn, line in _higher_order_calls(source, str(path), kernels):
+            violations.append(f"{rel}:{line} {fn}")
+    assert not violations, (
+        "higher-order function or lambda in a codegen'd text kernel:\n  "
+        + "\n  ".join(violations)
+    )
+
+
+def test_kernel_lint_catches_the_zipped_slice_shingles():
+    pasted = (
+        "def shingles(col, n=3):\n"
+        "    toks = F.split(F.trim(F.lower(col)), r'\\s+')\n"
+        "    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))\n"
+        "    zipped = F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)])\n"
+        "    grams = F.transform(\n"
+        "        zipped, lambda s: F.concat_ws(' ', *[s[str(k)] for k in range(n)])\n"
+        "    )\n"
+        "    return F.array_sort(F.array_distinct(grams))\n"
+        "def other(c):\n"
+        "    return F.transform(c, F.lower)\n"
+    )
+    assert _higher_order_calls(pasted, "<pasted>", {"shingles"}) == [
+        ("shingles", 5), ("shingles", 8)
+    ]
