@@ -1404,8 +1404,9 @@ def quality_score(
     ONE pure-JVM projection per document — the line-repetition component
     reads the same :func:`_nonblank_lines` ``repetition_metrics`` uses
     rather than joining two derivations of the same input (a join here
-    would shuffle the whole corpus on id for values computable in place). No shuffle,
-    no UDF, so the score pipelines with the scan at corpus scale.
+    would shuffle the whole corpus on id for values computable in
+    place). No shuffle, no UDF, so the score pipelines with the scan at
+    corpus scale.
     Weights are caller-tunable and normalized to sum 1. The score is
     :func:`quality_score_column`, the Column builder a caller that wants
     the score next to its own columns uses directly.
