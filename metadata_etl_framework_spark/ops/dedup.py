@@ -163,6 +163,12 @@ def jaccard_similarity(
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs (verification stage)."""
     sh = df.select(F.col(id_col), shingles(text_col, shingle_n).alias("sh"))
+    return _pair_jaccard(pairs, sh, id_col)
+
+
+def _pair_jaccard(pairs: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, jaccard 6 dp) for candidate ``pairs``, each side's
+    shingle array joined from the (``id_col``, sh) frame ``sh``."""
     j = (
         pairs.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
@@ -455,18 +461,8 @@ def _near_dup_pairs(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(sigs)
     pairs = lsh_candidate_pairs(sigs, id_col, num_bands, num_hashes // num_bands)
-    sh = base.withColumnRenamed("_sh", "sh")
-    j = (
-        pairs.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return j.select(
-        "id_a", "id_b",
-        F.round(
-            F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0)), 6
-        ).alias("jaccard"),
+    return _pair_jaccard(
+        pairs, base.withColumnRenamed("_sh", "sh"), id_col
     ).filter(F.col("jaccard") >= threshold)
 
 

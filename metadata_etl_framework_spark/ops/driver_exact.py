@@ -55,6 +55,7 @@ __all__ = [
     "hash32_i64",
     "exact_sum_i64",
     "pico_sum",
+    "pico_int",
 ]
 
 def driver_gates_enabled() -> bool:
@@ -296,6 +297,14 @@ def pico_sum(t: "np.ndarray") -> int:
             "would raise ArithmeticException here)"
         )
     return exact_sum_i64(round_half_up_int64(t * 1e12))
+
+
+def pico_int(x: float) -> int:
+    """A scalar parameter (a ridge or regularization weight) on the
+    pico-int grid of the exact sums it is added to: its shortest
+    decimal digits scaled by 10¹², rounded half-even to an integer —
+    exact, so the term adds to the integer sums without a float step."""
+    return int(Decimal(repr(float(x))).scaleb(12).to_integral_value())
 
 
 def hash32_i64(v: "np.ndarray") -> "np.ndarray":

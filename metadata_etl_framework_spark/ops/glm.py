@@ -30,14 +30,13 @@ Scale design:
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
     column_np,
     driver_table,
+    pico_int,
 )
 from metadata_etl_framework_spark.ops.exact_agg import exact_pico_sums
 
@@ -86,6 +85,41 @@ def _solve(h: "list[list[float]]", g: "list[float]") -> "list[float]":
                 for c in range(col, d + 1):
                     a[r][c] -= f * a[col][c]
     return [a[i][d] / a[i][i] for i in range(d)]
+
+
+def _hess_terms(xs, w=None, prefix: str = "_"):
+    """The upper-triangle Hessian streams of one pass, as (name, term)
+    pairs ``{prefix}h{j}{k}`` (j ≤ k): ``(w·xⱼ)·xₖ``, or ``xⱼ·xₖ`` with
+    no weight. Plan Columns and the driver twins' NumPy arrays both go
+    through here, so the two arms sum the same left-associative
+    products. Lazy, so a twin holds one row-sized term at a time."""
+    d = len(xs)
+    for j in range(d):
+        for k in range(j, d):
+            yield (
+                f"{prefix}h{j}{k}",
+                xs[j] * xs[k] if w is None else w * xs[j] * xs[k],
+            )
+
+
+def _normal_solve(sums, d: int, ridge_i: int, prefix: str = "_", base=None):
+    """One solve of the normal equations from exact integer sums: the
+    gradient ``sums[{prefix}g{j}]`` and the Hessian's upper triangle
+    ``sums[{prefix}h{j}{k}]``, with the pico-int ridge added to the
+    integer diagonal before the cast to double. Returns the 12-dp
+    coefficients: ``round(base + δ, 12)`` for a Newton step from
+    ``base``, ``round(δ, 12)`` for a closed-form solve."""
+    g = [float(int(sums[f"{prefix}g{j}"])) for j in range(d)]
+    h = [[0.0] * d for _ in range(d)]
+    for j in range(d):
+        for k in range(j, d):
+            h[j][k] = h[k][j] = float(
+                int(sums[f"{prefix}h{j}{k}"]) + (ridge_i if j == k else 0)
+            )
+    delta = _solve(h, g)
+    if base is None:
+        return [round(b, 12) for b in delta]
+    return [round(base[j] + delta[j], 12) for j in range(d)]
 
 
 # --------------------------------------------------------------------------
@@ -162,22 +196,13 @@ def linear_train(
     terms = {"_yy": F.col("_y") * F.col("_y")}
     for j in range(d):
         terms[f"_g{j}"] = xs[j] * F.col("_y")
-    for j in range(d):
-        for k in range(j, d):
-            terms[f"_h{j}{k}"] = xs[j] * xs[k]
+    terms.update(_hess_terms(xs))
     row = exact_pico_sums(base, terms, count_alias="_n").collect()[0]
     n_rows = int(row["_n"])
     if n_rows == 0:
         raise ValueError("linear_train: no usable rows")
-    ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
+    betas = _normal_solve(row, d, pico_int(ridge))
     g = [float(int(row[f"_g{j}"])) for j in range(d)]
-    h = [[0.0] * d for _ in range(d)]
-    for j in range(d):
-        for k in range(j, d):
-            v = float(int(row[f"_h{j}{k}"]) + (ridge_i if j == k else 0))
-            h[j][k] = v
-            h[k][j] = v
-    betas = [round(b, 12) for b in _solve(h, g)]
     # R² from the same sums: SSE = Σy² − 2βᵀg + βᵀHβ (H here WITHOUT
     # ridge — use the raw integer sums), SST = Σy² − (Σy)²/n; the Σy
     # and Σ1 terms live inside g0/h00 (x₀ = 1)
@@ -268,39 +293,27 @@ def logistic_train(
     d = len(feature_cols) + 1
     xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(1, d)]
     betas = [0.0] * d
-    ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
+    ridge_i = pico_int(ridge)
     # one projection feeds every Newton pass — persist so iterations
     # read cached rows; released before every exit (incl. the raise)
     base = base.persist()
-    for _ in range(int(iterations)):
-        z = F.lit(betas[0])
-        for j in range(1, d):
-            z = z + F.lit(betas[j]) * xs[j]
-        p = _sigmoid(z)
-        w = p * (F.lit(1.0) - p)
-        # two-level exact sums (ops/exact_agg.py): bit-identical to the
-        # single-level DECIMAL streams, ~3× cheaper per Newton pass
-        terms = {}
-        for j in range(d):
-            terms[f"_g{j}"] = (F.col("_y") - p) * xs[j]
-        for j in range(d):
-            for k in range(j, d):
-                terms[f"_h{j}{k}"] = w * xs[j] * xs[k]
-        row = exact_pico_sums(base, terms, count_alias="_n").collect()[0]
-        n_rows = int(row["_n"])
-        if n_rows == 0:
-            base.unpersist()
-            raise ValueError("logistic_train: no usable rows")
-        g = [float(int(row[f"_g{j}"])) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(int(row[f"_h{j}{k}"]) + (ridge_i if j == k else 0))
-                h[j][k] = v
-                h[k][j] = v
-        delta = _solve(h, g)
-        betas = [round(betas[j] + delta[j], 12) for j in range(d)]
-    base.unpersist()
+    try:
+        for _ in range(int(iterations)):
+            z = F.lit(betas[0])
+            for j in range(1, d):
+                z = z + F.lit(betas[j]) * xs[j]
+            p = _sigmoid(z)
+            # two-level exact sums (ops/exact_agg.py): bit-identical to
+            # the single-level DECIMAL streams, ~3× cheaper per pass
+            terms = {f"_g{j}": (F.col("_y") - p) * xs[j] for j in range(d)}
+            terms.update(_hess_terms(xs, p * (F.lit(1.0) - p)))
+            row = exact_pico_sums(base, terms, count_alias="_n").collect()[0]
+            n_rows = int(row["_n"])
+            if n_rows == 0:
+                raise ValueError("logistic_train: no usable rows")
+            betas = _normal_solve(row, d, ridge_i, base=betas)
+    finally:
+        base.unpersist()
     return _glm_coef_frame(
         df.sparkSession, feature_cols, betas, n_rows, iterations
     )
@@ -380,9 +393,6 @@ def linear_cv(
     )
     d = len(feature_cols) + 1
     xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(1, d)]
-    ridge_i = int(
-        Decimal(repr(float(ridge))).scaleb(12).to_integral_value()
-    )
     # both passes read one persisted projection; released at exit
     base = base.persist()
     try:
@@ -391,9 +401,7 @@ def linear_cv(
         terms = {"_yy": F.col("_y") * F.col("_y")}
         for j in range(d):
             terms[f"_g{j}"] = xs[j] * F.col("_y")
-        for j in range(d):
-            for k in range(j, d):
-                terms[f"_h{j}{k}"] = xs[j] * xs[k]
+        terms.update(_hess_terms(xs))
         per_fold = {
             int(r["_fold"]): {
                 k: int(r[k]) for k in r.asDict() if k != "_fold"
@@ -404,7 +412,7 @@ def linear_cv(
         }
         if not per_fold:
             raise ValueError("linear_cv: no usable rows")
-        betas_by_fold = _loo_beta_sets(per_fold, d, ridge_i)
+        betas_by_fold = _loo_beta_sets(per_fold, d, pico_int(ridge))
         # scoring pass: fold-specific betas as a CASE chain
         pred = None
         for f in sorted(per_fold):
@@ -474,24 +482,12 @@ def _loo_beta_sets(
     folds = sorted(per_fold)
     keys = [k for k in per_fold[folds[0]] if k != "_fold"]
     tot = {k: sum(per_fold[f][k] for f in folds) for k in keys}
-    betas_by_fold: "dict[int, list[float]]" = {}
-    for f in folds:
-        g = [
-            float(tot[f"_g{j}"] - per_fold[f][f"_g{j}"])
-            for j in range(d)
-        ]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(
-                    tot[f"_h{j}{k}"]
-                    - per_fold[f][f"_h{j}{k}"]
-                    + (ridge_i if j == k else 0)
-                )
-                h[j][k] = v
-                h[k][j] = v
-        betas_by_fold[f] = [round(b, 12) for b in _solve(h, g)]
-    return betas_by_fold
+    return {
+        f: _normal_solve(
+            {k: tot[k] - per_fold[f][k] for k in keys}, d, ridge_i
+        )
+        for f in folds
+    }
 
 
 def logistic_cv(
@@ -565,9 +561,7 @@ def logistic_cv(
         xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(1, d)]
         folds = list(range(int(n_folds)))
         betas = {f: [0.0] * d for f in folds}
-        ridge_i = int(
-            Decimal(repr(float(ridge))).scaleb(12).to_integral_value()
-        )
+        ridge_i = pico_int(ridge)
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("logistic_cv: no usable rows")
@@ -588,52 +582,20 @@ def logistic_cv(
                 for j in range(1, d):
                     z = z + F.lit(betas[f][j]) * xs[j]
                 p = _sigmoid(z)
-                w = p * (F.lit(1.0) - p)
                 for j in range(d):
-                    terms[f"_g{f}_{j}"] = (F.col("_y") - p) * xs[j]
-                for j in range(d):
-                    for k in range(j, d):
-                        terms[f"_h{f}_{j}{k}"] = w * xs[j] * xs[k]
+                    terms[f"_f{f}_g{j}"] = (F.col("_y") - p) * xs[j]
+                terms.update(
+                    _hess_terms(xs, p * (F.lit(1.0) - p), f"_f{f}_")
+                )
             cells = {
-                int(r["_fold"]): r
+                int(r["_fold"]): {k: int(r[k] or 0) for k in terms}
                 for r in exact_pico_sums(
                     base, terms, group_cols=["_fold"], count_alias="_n"
                 ).collect()
             }
             if not cells:
                 raise ValueError("logistic_cv: no usable rows")
-
-            def _cell(g: int, name: str) -> int:
-                r = cells.get(g)
-                v = r[name] if r is not None else None
-                return int(v) if v is not None else 0
-
-            for f in folds:
-                g_vec = [
-                    sum(
-                        _cell(g, f"_g{f}_{j}")
-                        for g in cells
-                        if g != f
-                    )
-                    for j in range(d)
-                ]
-                h = [[0.0] * d for _ in range(d)]
-                for j in range(d):
-                    for k in range(j, d):
-                        v = float(
-                            sum(
-                                _cell(g, f"_h{f}_{j}{k}")
-                                for g in cells
-                                if g != f
-                            )
-                            + (ridge_i if j == k else 0)
-                        )
-                        h[j][k] = v
-                        h[k][j] = v
-                delta = _solve(h, [float(x) for x in g_vec])
-                betas[f] = [
-                    round(betas[f][j] + delta[j], 12) for j in range(d)
-                ]
+            betas = _loo_newton_steps(cells, betas, d, ridge_i)
         # held-out scoring: each row under its OWN fold's model
         pred = None
         for f in folds:
@@ -671,6 +633,20 @@ def logistic_cv(
         return _logistic_cv_frame(df.sparkSession, met)
     finally:
         base.unpersist()
+
+
+def _loo_newton_steps(cells, betas, d: int, ridge_i: int) -> dict:
+    """One Newton step of every :func:`logistic_cv` model f from the
+    per-fold integer sums ``cells[g]``: model f trains on the exact
+    totals over the present folds g ≠ f (its ``_f{f}_`` streams)."""
+    out = {}
+    for f, b in betas.items():
+        loo = {
+            k: sum(c[k] for g, c in cells.items() if g != f)
+            for k in next(iter(cells.values()))
+        }
+        out[f] = _normal_solve(loo, d, ridge_i, f"_f{f}_", base=b)
+    return out
 
 
 def _logistic_cv_frame(spark, met: "dict[int, dict[str, int]]") -> DataFrame:
@@ -759,36 +735,12 @@ def _logistic_cv_driver(
             for j in range(1, d):
                 z = z + betas[f][j] * xs[j]
             p = _np_sigmoid(z)
-            w = p * (1.0 - p)
-            for j in range(d):
-                for g, v in _grouped((y - p) * xs[j]).items():
-                    cells[g][f"_g{f}_{j}"] = v
-            for j in range(d):
-                for k in range(j, d):
-                    for g, v in _grouped(w * xs[j] * xs[k]).items():
-                        cells[g][f"_h{f}_{j}{k}"] = v
-        for f in folds:
-            g_vec = [
-                sum(cells[g][f"_g{f}_{j}"] for g in present if g != f)
-                for j in range(d)
-            ]
-            h = [[0.0] * d for _ in range(d)]
-            for j in range(d):
-                for k in range(j, d):
-                    v = float(
-                        sum(
-                            cells[g][f"_h{f}_{j}{k}"]
-                            for g in present
-                            if g != f
-                        )
-                        + (ridge_i if j == k else 0)
-                    )
-                    h[j][k] = v
-                    h[k][j] = v
-            delta = _solve(h, [float(x) for x in g_vec])
-            betas[f] = [
-                round(betas[f][j] + delta[j], 12) for j in range(d)
-            ]
+            grads = ((f"_f{f}_g{j}", (y - p) * xs[j]) for j in range(d))
+            for terms in (grads, _hess_terms(xs, p * (1.0 - p), f"_f{f}_")):
+                for name, t in terms:
+                    for g, v in _grouped(t).items():
+                        cells[g][name] = v
+        betas = _loo_newton_steps(cells, betas, d, ridge_i)
     # held-out scoring: each row under its OWN fold's model
     pred = np.empty_like(y)
     for f in folds:
@@ -874,7 +826,7 @@ def poisson_train(
     if n_rows == 0:
         base.unpersist()
         raise ValueError("poisson_train: no usable rows")
-    ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
+    ridge_i = pico_int(ridge)
     init = exact_pico_sums(
         base, {"_sy": F.col("_y")}, row_hint=n_rows
     ).collect()[0]
@@ -893,22 +845,10 @@ def poisson_train(
         # exact pico sums with row_hint: small per-entity frames keep
         # the single-level DECIMAL sum, large ones get the two-level
         # split — bit-identical either way (ops/exact_agg.py)
-        terms = {}
-        for j in range(d):
-            terms[f"_g{j}"] = (F.col("_y") - mu) * xs[j]
-        for j in range(d):
-            for k in range(j, d):
-                terms[f"_h{j}{k}"] = mu * xs[j] * xs[k]
+        terms = {f"_g{j}": (F.col("_y") - mu) * xs[j] for j in range(d)}
+        terms.update(_hess_terms(xs, mu))
         row = exact_pico_sums(base, terms, row_hint=n_rows).collect()[0]
-        g = [float(int(row[f"_g{j}"])) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(int(row[f"_h{j}{k}"]) + (ridge_i if j == k else 0))
-                h[j][k] = v
-                h[k][j] = v
-        delta = _solve(h, g)
-        betas = [round(betas[j] + delta[j], 12) for j in range(d)]
+        betas = _normal_solve(row, d, ridge_i, base=betas)
     base.unpersist()
     return _glm_coef_frame(
         df.sparkSession, feature_cols, betas, n_rows, iterations
@@ -967,64 +907,45 @@ def huber_train(
     )
     d = len(feature_cols) + 1
     xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(1, d)]
-    ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
+    ridge_i = pico_int(ridge)
 
-    def _collect_pass(w):
+    def _collect_pass(w) -> "list[float]":
         # two-level exact sums (ops/exact_agg.py): bit-identical to the
         # single-level DECIMAL streams, ~3× cheaper per pass — the
         # reweighted normal equations are pure pico-int totals
-        terms = {}
-        for j in range(d):
-            terms[f"_g{j}"] = w * xs[j] * F.col("_y")
-        for j in range(d):
-            for k in range(j, d):
-                terms[f"_h{j}{k}"] = w * xs[j] * xs[k]
-        row = exact_pico_sums(base, terms, count_alias="_n").collect()[0]
-        n = int(row["_n"])
-        if n == 0:
-            base.unpersist()
-            raise ValueError("huber_train: no usable rows")
-        g = [float(int(row[f"_g{j}"])) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(
-                    int(row[f"_h{j}{k}"]) + (ridge_i if j == k else 0)
-                )
-                h[j][k] = v
-                h[k][j] = v
-        return n, g, h
+        terms = {f"_g{j}": w * xs[j] * F.col("_y") for j in range(d)}
+        terms.update(_hess_terms(xs, w))
+        return _normal_solve(
+            exact_pico_sums(base, terms).collect()[0], d, ridge_i
+        )
 
-    # OLS init (w = 1); one persisted projection feeds every pass —
-    # released before every exit (incl. the raise in _collect_pass)
+    # OLS init (w = 1); one persisted projection feeds every pass and
+    # is released before the driver twin runs
     base = base.persist()
-    n_rows = base.count()
-    if n_rows == 0:
+    try:
+        n_rows = base.count()
+        if n_rows == 0:
+            raise ValueError("huber_train: no usable rows")
+        tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_rows)
+        if tbl is None:
+            betas = _collect_pass(F.lit(1.0))
+            dl = float(delta)
+            for _ in range(int(iterations)):
+                z = F.lit(betas[0])
+                for j in range(1, d):
+                    z = z + F.lit(betas[j]) * xs[j]
+                r = F.col("_y") - z
+                betas = _collect_pass(
+                    F.when(F.abs(r) <= F.lit(dl), F.lit(1.0)).otherwise(
+                        F.lit(dl) / F.abs(r)
+                    )
+                )
+    finally:
         base.unpersist()
-        raise ValueError("huber_train: no usable rows")
-    tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_rows)
     if tbl is not None:
-        base.unpersist()
         betas = _huber_driver_betas(
             tbl, d, float(delta), int(iterations), ridge_i
         )
-        return _glm_coef_frame(
-            df.sparkSession, feature_cols, betas, n_rows, iterations
-        )
-    n_rows, g, h = _collect_pass(F.lit(1.0))
-    betas = [round(b, 12) for b in _solve(h, g)]
-    dl = float(delta)
-    for _ in range(int(iterations)):
-        z = F.lit(betas[0])
-        for j in range(1, d):
-            z = z + F.lit(betas[j]) * xs[j]
-        r = F.col("_y") - z
-        w = F.when(F.abs(r) <= F.lit(dl), F.lit(1.0)).otherwise(
-            F.lit(dl) / F.abs(r)
-        )
-        n_rows, g, h = _collect_pass(w)
-        betas = [round(b, 12) for b in _solve(h, g)]
-    base.unpersist()
     return _glm_coef_frame(
         df.sparkSession, feature_cols, betas, n_rows, iterations
     )
@@ -1050,17 +971,9 @@ def _huber_driver_betas(
     # cell) must still sum over every row
 
     def _pass(w) -> "list[float]":
-        g = [float(pico_sum(w * xs[j] * y)) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(
-                    pico_sum(w * xs[j] * xs[k])
-                    + (ridge_i if j == k else 0)
-                )
-                h[j][k] = v
-                h[k][j] = v
-        return [round(b, 12) for b in _solve(h, g)]
+        sums = {f"_g{j}": pico_sum(w * xs[j] * y) for j in range(d)}
+        sums.update((k, pico_sum(t)) for k, t in _hess_terms(xs, w))
+        return _normal_solve(sums, d, ridge_i)
 
     betas = _pass(np.float64(1.0))
     for _ in range(iterations):
@@ -1162,21 +1075,7 @@ def quantile_train(
     )
     d = len(feature_cols) + 1
     xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(1, d)]
-    ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
-
-    def _solve_cell(row, prefix: str) -> "list[float]":
-        g = [float(int(row[f"{prefix}g{j}"])) for j in range(d)]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(
-                    int(row[f"{prefix}h{j}{k}"])
-                    + (ridge_i if j == k else 0)
-                )
-                h[j][k] = v
-                h[k][j] = v
-        return [round(b, 12) for b in _solve(h, g)]
-
+    ridge_i = pico_int(ridge)
     base = base.persist()
     try:
         n_rows = base.count()
@@ -1189,8 +1088,7 @@ def quantile_train(
             )
         else:
             betas = _quantile_dist_betas(
-                base, xs, d, ts, int(iterations), float(eps),
-                _solve_cell,
+                base, xs, d, ts, int(iterations), ridge_i, float(eps)
             )
     finally:
         base.unpersist()
@@ -1208,19 +1106,15 @@ def quantile_train(
 
 
 def _quantile_dist_betas(
-    base, xs, d, ts, iterations, eps, _solve_cell
+    base, xs, d, ts, iterations, ridge_i, eps
 ) -> dict:
     """The distributed :func:`quantile_train` passes, unchanged —
     split out so the gate reads as one dispatch."""
     # shared OLS init (w = 1): one pass, τ-independent
-    terms = {}
-    for j in range(d):
-        terms[f"_g{j}"] = xs[j] * F.col("_y")
-    for j in range(d):
-        for k in range(j, d):
-            terms[f"_h{j}{k}"] = xs[j] * xs[k]
+    terms = {f"_g{j}": xs[j] * F.col("_y") for j in range(d)}
+    terms.update(_hess_terms(xs))
     row = exact_pico_sums(base, terms).collect()[0]
-    betas = {t: _solve_cell(row, "_") for t in ts}
+    betas = {t: _normal_solve(row, d, ridge_i) for t in ts}
     for _ in range(int(iterations)):
         terms = {}
         for ti, t in enumerate(ts):
@@ -1233,9 +1127,7 @@ def _quantile_dist_betas(
             ) / F.greatest(F.abs(r), F.lit(float(eps)))
             for j in range(d):
                 terms[f"_t{ti}_g{j}"] = w * xs[j] * F.col("_y")
-            for j in range(d):
-                for k in range(j, d):
-                    terms[f"_t{ti}_h{j}{k}"] = w * xs[j] * xs[k]
+            terms.update(_hess_terms(xs, w, f"_t{ti}_"))
         # Near-line rows carry IRLS weights up to w_cap =
         # max(τ,1−τ)/eps, multiplying the per-row pico bound the
         # level-1 long partials are sized for, so derive the
@@ -1256,7 +1148,8 @@ def _quantile_dist_betas(
             base, terms, sub_buckets=sub_buckets
         ).collect()[0]
         betas = {
-            t: _solve_cell(row, f"_t{ti}_") for ti, t in enumerate(ts)
+            t: _normal_solve(row, d, ridge_i, f"_t{ti}_")
+            for ti, t in enumerate(ts)
         }
     return betas
 
@@ -1282,23 +1175,15 @@ def _quantile_driver_betas(
     # per-row F.lit(1.0), so constant-only products (e.g. the h00
     # cell) must still sum over every row
 
-    def _solve_np(g_ints, h_ints) -> "list[float]":
-        g = [float(v) for v in g_ints]
-        h = [[0.0] * d for _ in range(d)]
-        for j in range(d):
-            for k in range(j, d):
-                v = float(h_ints[(j, k)] + (ridge_i if j == k else 0))
-                h[j][k] = v
-                h[k][j] = v
-        return [round(b, 12) for b in _solve(h, g)]
+    def _solve_np(w) -> "list[float]":
+        sums = {
+            f"_g{j}": pico_sum(xs[j] * y if w is None else w * xs[j] * y)
+            for j in range(d)
+        }
+        sums.update((k, pico_sum(t)) for k, t in _hess_terms(xs, w))
+        return _normal_solve(sums, d, ridge_i)
 
-    g0 = [pico_sum(xs[j] * y) for j in range(d)]
-    h0 = {
-        (j, k): pico_sum(xs[j] * xs[k])
-        for j in range(d)
-        for k in range(j, d)
-    }
-    init = _solve_np(g0, h0)
+    init = _solve_np(None)
     betas = {t: list(init) for t in ts}
     for _ in range(iterations):
         new = {}
@@ -1312,12 +1197,6 @@ def _quantile_driver_betas(
             den = np.maximum(ar, np.float64(eps))
             with np.errstate(invalid="ignore"):
                 w = np.abs(np.float64(t) - ind) / den
-            g = [pico_sum(w * xs[j] * y) for j in range(d)]
-            h = {
-                (j, k): pico_sum(w * xs[j] * xs[k])
-                for j in range(d)
-                for k in range(j, d)
-            }
-            new[t] = _solve_np(g, h)
+            new[t] = _solve_np(w)
         betas = new
     return betas

@@ -34,14 +34,13 @@ Scale design (the reason item-based CF survives 100 TB):
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
     column_np,
     driver_table,
+    pico_int,
 )
 from metadata_etl_framework_spark.ops.materialize import BCAST_MAX_ROWS
 
@@ -533,11 +532,7 @@ def _als_driver_core(
         return f1, f2
 
     qf1, qf2 = _init_side(itu)
-    from decimal import Decimal
-
-    reg_pico = int(
-        Decimal(repr(float(reg))).scaleb(12).to_integral_value()
-    )
+    reg_pico = pico_int(reg)
 
     def _half(gidx, n_groups, of1, of2, oidx):
         # factor gather for each rating row's other-side key
@@ -751,9 +746,7 @@ def als_factorize(
             ).alias("__f2"),
         )
     )
-    reg_pico = int(
-        Decimal(repr(float(reg))).scaleb(12).to_integral_value()
-    )
+    reg_pico = pico_int(reg)
 
     def _pico(e):
         return F.round(e * F.lit(1e12)).cast("decimal(38,0)")

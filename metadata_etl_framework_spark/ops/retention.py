@@ -468,6 +468,56 @@ def debounce_events(
     )
 
 
+def _lifetimes(per_user: DataFrame, horizon_days: int, *keep: str):
+    """(*keep, t, event) per user from a (_first, _last) frame: the
+    lifetime in days, and event = 1 when the last event lies more than
+    ``horizon_days`` before the corpus's last observed day (churned),
+    else 0 (censored at the current lifetime)."""
+    obs_end = per_user.agg(F.max("_last").alias("_end"))
+    return per_user.crossJoin(F.broadcast(obs_end)).select(
+        *keep,
+        F.datediff(F.col("_last"), F.col("_first")).alias("t"),
+        (
+            F.datediff(F.col("_end"), F.col("_last"))
+            > F.lit(int(horizon_days))
+        )
+        .cast("int")
+        .alias("event"),
+    )
+
+
+def _risk_table(
+    df: DataFrame, user_col: str, ts_col: str, horizon_days: int
+):
+    """The at-risk table :func:`kaplan_meier` and :func:`nelson_aalen`
+    step over: one row per distinct lifetime t — (t, a users with that
+    lifetime, d churn events at t, _N, _cum_a, n_at_risk = users with
+    lifetime ≥ t) — plus the ascending cumulative window over it. The
+    table is calendar-bounded (one row per distinct lifetime in days),
+    so its partitionless windows are small-frame operations."""
+    from pyspark.sql import Window
+
+    per_user = (
+        df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
+        .groupBy(user_col)
+        .agg(F.min(ts_col).alias("_first"), F.max(ts_col).alias("_last"))
+    )
+    counts = _lifetimes(per_user, horizon_days).groupBy("t").agg(
+        F.count(F.lit(1)).alias("a"),
+        F.sum("event").alias("d"),
+    )
+    total = counts.agg(F.sum("a").alias("_N"))
+    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
+    cum = (
+        counts.crossJoin(F.broadcast(total))
+        .withColumn("_cum_a", F.sum("a").over(w_cum))
+        .withColumn(
+            "n_at_risk", F.col("_N") - F.col("_cum_a") + F.col("a")
+        )
+    )
+    return cum, w_cum
+
+
 def kaplan_meier(
     df: DataFrame,
     user_col: str = "user_id",
@@ -496,35 +546,7 @@ def kaplan_meier(
     Output: one row per distinct event lifetime — (duration_days,
     n_at_risk, n_events, n_censored_here, survival 6dp).
     """
-    from pyspark.sql import Window
-
-    per_user = (
-        df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_first"), F.max(ts_col).alias("_last"))
-    )
-    obs_end = per_user.agg(F.max("_last").alias("_end"))
-    lifed = per_user.crossJoin(F.broadcast(obs_end)).select(
-        F.datediff(F.col("_last"), F.col("_first")).alias("t"),
-        (
-            F.datediff(F.col("_end"), F.col("_last"))
-            > F.lit(int(horizon_days))
-        )
-        .cast("int")
-        .alias("event"),
-    )
-    counts = lifed.groupBy("t").agg(
-        F.count(F.lit(1)).alias("a"),          # users with this lifetime
-        F.sum("event").alias("d"),             # churn events at t
-    )
-    total = counts.agg(F.sum("a").alias("_N"))
-    # calendar-bounded frame: windows below run over distinct lifetimes
-    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        counts.crossJoin(F.broadcast(total))
-        .withColumn("_cum_a", F.sum("a").over(w_cum))
-        .withColumn("n_at_risk", (F.col("_N") - F.col("_cum_a") + F.col("a")))
-    )
+    cum, w_cum = _risk_table(df, user_col, ts_col, horizon_days)
     factor = 1.0 - F.col("d") / F.col("n_at_risk")
     stepped = (
         cum.withColumn("_zero", (F.col("d") == F.col("n_at_risk")).cast("int"))
@@ -1021,45 +1043,16 @@ def nelson_aalen(
     than ``horizon_days`` before the corpus end = churned, else
     censored at the current lifetime.
 
-    Identical plan shape to kaplan_meier — one user-keyed aggregate,
-    then the distinct-lifetime calendar-bounded frame — but the
-    estimator is a pure prefix SUM of dᵢ/nᵢ (no log/exp needed), with
-    the per-lifetime terms rounded to 12dp and accumulated as DECIMAL
-    so the curve is merge-order-independent.
+    The same at-risk table as kaplan_meier (:func:`_risk_table`: one
+    user-keyed aggregate, then the distinct-lifetime calendar-bounded
+    frame), but the estimator is a pure prefix SUM of dᵢ/nᵢ (no
+    log/exp needed), with the per-lifetime terms rounded to 12dp and
+    accumulated as DECIMAL so the curve is merge-order-independent.
 
     Output: one row per distinct lifetime — (duration_days, n_at_risk,
     n_events, hazard_increment 6dp, cumulative_hazard 6dp).
     """
-    from pyspark.sql import Window
-
-    per_user = (
-        df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_first"), F.max(ts_col).alias("_last"))
-    )
-    obs_end = per_user.agg(F.max("_last").alias("_end"))
-    lifed = per_user.crossJoin(F.broadcast(obs_end)).select(
-        F.datediff(F.col("_last"), F.col("_first")).alias("t"),
-        (
-            F.datediff(F.col("_end"), F.col("_last"))
-            > F.lit(int(horizon_days))
-        )
-        .cast("int")
-        .alias("event"),
-    )
-    counts = lifed.groupBy("t").agg(
-        F.count(F.lit(1)).alias("a"),
-        F.sum("event").alias("d"),
-    )
-    total = counts.agg(F.sum("a").alias("_N"))
-    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        counts.crossJoin(F.broadcast(total))
-        .withColumn("_cum_a", F.sum("a").over(w_cum))
-        .withColumn(
-            "n_at_risk", F.col("_N") - F.col("_cum_a") + F.col("a")
-        )
-    )
+    cum, w_cum = _risk_table(df, user_col, ts_col, horizon_days)
     inc = F.col("d").cast("double") / F.col("n_at_risk").cast("double")
     stepped = cum.withColumn(
         "_inc_dec", F.round(inc, 12).cast("decimal(28,12)")
@@ -1132,17 +1125,7 @@ def logrank_test(
                 f"logrank_test needs exactly 2 groups, got {labels}"
             )
         ga, gb = labels
-        obs_end = per_user.agg(F.max("_last").alias("_end"))
-        lifed = per_user.crossJoin(F.broadcast(obs_end)).select(
-            "_g",
-            F.datediff(F.col("_last"), F.col("_first")).alias("t"),
-            (
-                F.datediff(F.col("_end"), F.col("_last"))
-                > F.lit(int(horizon_days))
-            )
-            .cast("int")
-            .alias("event"),
-        )
+        lifed = _lifetimes(per_user, horizon_days, "_g")
         is_a = F.col("_g") == F.lit(ga)
         counts = lifed.groupBy("t").agg(
             F.sum(F.when(is_a, 1).otherwise(0)).alias("a1"),
@@ -1236,17 +1219,18 @@ def logrank_test(
 
 
 def _cox_pass_np(gc, t, e, X, betas):
-    """Driver twin of the cox_ph / cox_ph_multi per-iteration pass
-    over Arrow-transferred subject arrays: identical left-associative
+    """Driver twin of :func:`_cox_fit`'s per-iteration pass (the one
+    pass of cox_ph_multi and cox_ph) over Arrow-transferred subject
+    arrays: identical left-associative
     linear predictor, ±30 clamp (Spark least/greatest NaN flow),
     per-row HALF_UP pico rounding, exact integer per-(stratum,
     duration) sums and DESC suffix sums, the same null-flow on
     S0-cast-double == 0 rows, the same two-step ROUND(·,10) →
     CAST(DECIMAL(28,10)) on every score/information term, and exact
     decimal totals converted to double exactly as Spark's
-    decimal-sum collect. Callers gate magnitudes so every int64
-    partial is provably safe (see the per_row bound at the call
-    sites). Returns (u vector, information matrix)."""
+    decimal-sum collect. The caller gates magnitudes so every int64
+    partial is provably safe (:func:`_cox_np_safe`). Returns
+    (u vector, information matrix)."""
     from decimal import Decimal
 
     import numpy as np
@@ -1363,305 +1347,43 @@ def _cox_np_safe(n_subj, maxax_all, bx_cap) -> bool:
     return term_cap < 4.0e18
 
 
-def cox_ph(
-    df: DataFrame,
-    duration_col: str,
-    event_col: str,
-    covariate_col: str,
-    iterations: int = 3,
-) -> DataFrame:
-    """Cox proportional-hazards regression, single covariate, Breslow
-    tie handling — the regression member of the survival family
-    (:func:`kaplan_meier` / :func:`nelson_aalen` describe, 
-    :func:`logrank_test` compares two groups; Cox QUANTIFIES a
-    continuous covariate's effect on the hazard: HR = e^β per unit).
-
-    Newton on the Breslow partial likelihood, β from 0: per iteration,
-    ONE subject scan groups by duration collecting pico-int DECIMAL
-    sums of e^{βx}, x·e^{βx}, x²·e^{βx} (βx clamped ±30 — the logit
-    guard) plus event counts/covariate sums; a DESC window over the
-    DISTINCT-duration grid (calendar-bounded, the kaplan_meier frame)
-    turns them into risk-set suffix sums S₀/S₁/S₂; score and
-    information accumulate over event durations as 10-dp DECIMAL
-    terms (U = Σ_d [Σx_events − d·S₁/S₀], I = Σ_d d·[S₂/S₀ −
-    (S₁/S₀)²]); β ← round(β + U/I, 12) on the driver. A final pass at
-    the converged β yields the reported information for SE/z, with
-    the A&S normal tail for the p-value — every step mirrors the
-    IRLS/logrank oracle conventions bit-for-bit.
-
-    Input is SUBJECT-level: one row per subject with its duration
-    (integer-days convention), event flag (1 = event, 0 = censored),
-    and covariate (pre-scale to O(1) magnitude — the pico grid).
-
-    Output: 1 row — (n_subjects, n_events, beta 12 dp,
-    hazard_ratio 6 dp, se 6 dp, z 6 dp, p_value 6 dp); null
-    beta/inference when the covariate carries no information (I ≤ 0).
-    """
-    from pyspark.sql import Window
-
-    from metadata_etl_framework_spark.ops.stats import normal_sf_col
-
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    base = df.where(
-        F.col(duration_col).isNotNull()
-        & F.col(event_col).isNotNull()
-        & F.col(covariate_col).isNotNull()
-    ).select(
-        F.col(duration_col).cast("long").alias("_t"),
-        F.col(event_col).cast("boolean").cast("int").alias("_e"),
-        F.col(covariate_col).cast("double").alias("_x"),
-    )
-    base = base.persist()
-    try:
-        counts = base.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("_e").alias("ev"),
-            F.max(F.abs(F.col("_x"))).alias("mx"),
-        ).collect()[0]
-        n_subj, n_ev = int(counts["n"]), int(counts["ev"] or 0)
-        maxax = float(counts["mx"] or 0.0)
-        spark = df.sparkSession
-        if n_subj == 0 or n_ev == 0:
-            return spark.createDataFrame(
-                [(n_subj, n_ev, None, None, None, None, None)],
-                "n_subjects long, n_events long, beta double, "
-                "hazard_ratio double, se double, z double, "
-                "p_value double",
-            )
-
-        def _pico(e):
-            return F.round(e * F.lit(1e12)).cast("decimal(38,0)")
-
-        from metadata_etl_framework_spark.ops.glm import (
-            GLM_DRIVER_MAX_ROWS,
-        )
-
-        arrs = None
-        tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_subj)
-        if tbl is not None:
-            # base stays persisted: a Newton pass whose magnitudes
-            # outgrow the int64 bound falls back to the distributed
-            # form below, bit-identically
-            import numpy as np
-
-            arrs = (
-                np.zeros(n_subj, dtype=np.int64),
-                column_np(tbl, "_t", np.int64),
-                column_np(tbl, "_e", np.float64),
-                column_np(tbl, "_x", np.float64),
-            )
-
-        def _pass(beta: float):
-            import math
-
-            from metadata_etl_framework_spark.ops.exact_agg import (
-                exact_pico_sums,
-            )
-
-            if arrs is not None and _cox_np_safe(
-                n_subj, maxax, abs(beta) * maxax
-            ):
-                try:
-                    uv, im = _cox_pass_np(
-                        arrs[0], arrs[1], arrs[2], [arrs[3]], [beta]
-                    )
-                    return uv[0], im[0][0]
-                except ValueError:
-                    # a partial outgrew the exact-int domain despite
-                    # the a-priori bound — the DECIMAL(28,10) pass
-                    # below has ~1e18 capacity and is the reference
-                    pass
-            bx = F.greatest(
-                F.least(F.lit(beta) * F.col("_x"), F.lit(30.0)),
-                F.lit(-30.0),
-            )
-            w = F.exp(bx)
-            # per-row pico bound across every stream of this pass:
-            # |x^k·w|·1e12 ≤ max(1,|x|max)²·e^clamp(|β|·|x|max)·1e12.
-            # Under it, the two-level exact sum (ops/exact_agg.py) is
-            # BIT-IDENTICAL to the DECIMAL groupBy and ~3× cheaper per
-            # pass (long partials, one per (duration, partition));
-            # above it the DECIMAL form stands — no long partial can
-            # hold e^30-scale picos.
-            per_row = (
-                math.exp(min(30.0, abs(beta) * maxax))
-                * max(1.0, maxax) ** 2
-                * 1e12
-            )
-            if per_row * max(n_subj, 1) < float(1 << 62):
-                grid = exact_pico_sums(
-                    base,
-                    {
-                        "_s0": w,
-                        "_s1": F.col("_x") * w,
-                        "_s2": F.col("_x") * F.col("_x") * w,
-                        "_dx": F.col("_x") * F.col("_e"),
-                    },
-                    group_cols=["_t"],
-                    long_terms={"_d": F.col("_e")},
-                    sub_buckets=1,
-                )
-            else:
-                grid = base.groupBy("_t").agg(
-                    F.sum(_pico(w)).alias("_s0"),
-                    F.sum(_pico(F.col("_x") * w)).alias("_s1"),
-                    F.sum(_pico(F.col("_x") * F.col("_x") * w)).alias(
-                        "_s2"
-                    ),
-                    F.sum("_e").alias("_d"),
-                    F.sum(_pico(F.col("_x") * F.col("_e"))).alias(
-                        "_dx"
-                    ),
-                )
-            # risk set = durations >= t: DESC suffix sums over the
-            # distinct-duration grid (calendar-bounded frame)
-            wd = Window.orderBy(F.col("_t").desc()).rowsBetween(
-                Window.unboundedPreceding, 0
-            )
-            cum = (
-                grid.withColumn("_S0", F.sum("_s0").over(wd))
-                .withColumn("_S1", F.sum("_s1").over(wd))
-                .withColumn("_S2", F.sum("_s2").over(wd))
-                .where(F.col("_d") > 0)
-            )
-            # _S0 can be 0 when every risk-set weight pico-rounds to 0
-            # (exp(-30) clamp ≈ 9e-14 < half-pico); under pinned ANSI a
-            # bare divide raises, so null-flow those grid rows instead
-            _s0d = F.col("_S0").cast("double")
-            r1 = F.when(_s0d != 0, F.col("_S1").cast("double") / _s0d)
-            r2 = F.when(_s0d != 0, F.col("_S2").cast("double") / _s0d)
-            u_c = (
-                F.col("_dx").cast("double") / F.lit(1e12)
-                - F.col("_d") * r1
-            )
-            i_c = F.col("_d") * (r2 - r1 * r1)
-            out = cum.agg(
-                F.sum(
-                    F.round(u_c, 10).cast("decimal(28,10)")
-                ).alias("_u"),
-                F.sum(
-                    F.round(i_c, 10).cast("decimal(28,10)")
-                ).alias("_i"),
-            ).collect()[0]
-            return (
-                float(out["_u"] or 0.0), float(out["_i"] or 0.0)
-            )
-
-        beta = 0.0
-        info = None
-        for _ in range(int(iterations)):
-            u, i = _pass(beta)
-            if not i > 0:
-                info = None
-                break
-            beta = round(beta + u / i, 12)
-            info = i
-        if info is not None:
-            # reported inference at the CONVERGED beta
-            _, info = _pass(beta)
-        if info is None or not info > 0:
-            return spark.createDataFrame(
-                [(n_subj, n_ev, None, None, None, None, None)],
-                "n_subjects long, n_events long, beta double, "
-                "hazard_ratio double, se double, z double, "
-                "p_value double",
-            )
-        one = spark.createDataFrame(
-            [(n_subj, n_ev, beta, float(info))],
-            "n_subjects long, n_events long, beta double, info double",
-        )
-        z = F.col("beta") * F.sqrt(F.col("info"))
-        p = F.round(
-            F.least(
-                F.lit(1.0),
-                F.greatest(
-                    F.lit(0.0), F.lit(2.0) * normal_sf_col(F.abs(z))
-                ),
-            ),
-            6,
-        )
-        return one.select(
-            "n_subjects",
-            "n_events",
-            "beta",
-            F.round(F.exp(F.col("beta")), 6).alias("hazard_ratio"),
-            F.round(F.lit(1.0) / F.sqrt(F.col("info")), 6).alias("se"),
-            F.round(z, 6).alias("z"),
-            p.alias("p_value"),
-        )
-    finally:
-        base.unpersist()
-
-
-def cox_ph_multi(
+def _cox_fit(
     df: DataFrame,
     duration_col: str,
     event_col: str,
     covariate_cols: "list[str]",
-    iterations: int = 3,
-    max_covariates: int = 4,
-    strata_col: "str | None" = None,
-) -> DataFrame:
-    """Multi-covariate Cox proportional hazards (Breslow ties) — the
-    d-dimensional generalization of :func:`cox_ph` on the
-    logistic-CV Hessian-grid machinery: per Newton iteration ONE
-    subject scan groups by duration collecting pico-int DECIMAL sums
-    of e^{βᵀx}, x_j·e^{βᵀx} (d streams) and x_j·x_k·e^{βᵀx}
-    (d(d+1)/2 streams) plus event counts/covariate-event sums; DESC
-    suffix sums over the distinct-duration grid form the risk-set
-    statistics S₀/S₁ⱼ/S₂ⱼₖ; the score vector Uⱼ = Σ_d [Σx_j,events −
-    d·S₁ⱼ/S₀] and information matrix Iⱼₖ = Σ_d d·[S₂ⱼₖ/S₀ −
-    (S₁ⱼ/S₀)(S₁ₖ/S₀)] accumulate as 10-dp DECIMAL terms, and the d×d
-    Newton step solves on the driver (d = 2 uses the exact
-    closed-form adjugate the SQL oracle mirrors — the
-    ops/glm.py::_solve convention; d > 2 uses deterministic Gaussian
-    elimination, registered rows-only). β updates round to 12 dp so
-    an unrolled-CTE oracle replays the training bit-exactly.
+    iterations: int,
+    strata_col: "str | None",
+    step,
+):
+    """The Newton core of :func:`cox_ph_multi` and of :func:`cox_ph`,
+    its d = 1 case: the subject projection, the count/max pass, the
+    driver twin's arrays, and one score/information pass per
+    iteration (see :func:`cox_ph_multi` for the math).
 
-    A final pass at the converged β yields the reported information
-    matrix; per-term inference inverts it (closed form at d = 2):
-    se_j = √(I⁻¹)ⱼⱼ, z_j = β_j/se_j, two-sided A&S normal tail.
+    ``step(betas, u, imat)`` turns one pass into the next 12-dp betas,
+    or returns None to stop with a null fit. A final pass at the
+    converged betas yields the reported information matrix.
 
-    ``strata_col`` switches to STRATIFIED Cox — the standard control
-    for a confounder that violates proportional hazards (site, cohort,
-    device class): the partial likelihood factorizes per stratum, so
-    each stratum keeps its own baseline hazard and risk sets while β
-    stays shared. Mechanically the change is exactly two keys: the
-    duration grid groups by (stratum, t) and the DESC suffix-sum
-    window partitions by stratum — score/information still sum over
-    ALL strata's event durations, so the Newton step, the solve, and
-    the oracle convention are unchanged. Scale shape is unchanged too
-    (the grid grows to strata × durations, still calendar-bounded per
-    stratum).
-
-    Output: one row per covariate, input order — (term, beta 12 dp,
-    hazard_ratio 6 dp, se 6 dp, z 6 dp, p_value 6 dp, n_subjects,
-    n_events); null beta/inference when the information matrix is
-    singular or not positive definite.
+    Returns (n_subjects, n_events, betas, imat); betas and imat are
+    None when there is no event or ``step`` stopped.
     """
     from pyspark.sql import Window
 
-    from metadata_etl_framework_spark.ops.glm import _solve
-    from metadata_etl_framework_spark.ops.stats import normal_sf_col
+    from metadata_etl_framework_spark.ops.exact_agg import exact_pico_sums
+    from metadata_etl_framework_spark.ops.glm import GLM_DRIVER_MAX_ROWS
 
-    d = len(covariate_cols)
-    if not 1 <= d <= max_covariates:
-        raise ValueError(
-            f"cox_ph_multi: {d} covariates outside [1, {max_covariates}]"
-        )
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
+    d = len(covariate_cols)
     cond = F.col(duration_col).isNotNull() & F.col(event_col).isNotNull()
     for c in covariate_cols:
         cond = cond & F.col(c).isNotNull()
+    # risk sets per (stratum, duration); unstratified, per duration
+    gkeys, strata_sel = [], []
     if strata_col is not None:
         cond = cond & F.col(strata_col).isNotNull()
-    strata_sel = (
-        [F.col(strata_col).alias("_g")]
-        if strata_col is not None
-        else [F.lit(0).alias("_g")]
-    )
+        gkeys, strata_sel = ["_g"], [F.col(strata_col).alias("_g")]
     base = df.where(cond).select(
         *strata_sel,
         F.col(duration_col).cast("long").alias("_t"),
@@ -1672,47 +1394,27 @@ def cox_ph_multi(
         ],
     )
     xs = [F.col(f"_x{j + 1}") for j in range(d)]
-    spark = df.sparkSession
-
-    def _null_out(n_subj: int, n_ev: int) -> DataFrame:
-        return spark.createDataFrame(
-            [
-                (j, covariate_cols[j], None, None, None, None, None,
-                 n_subj, n_ev)
-                for j in range(d)
-            ],
-            "ord int, term string, beta double, hazard_ratio double, "
-            "se double, z double, p_value double, n_subjects long, "
-            "n_events long",
-        ).orderBy("ord").drop("ord")
-
     base = base.persist()
     try:
         counts = base.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("_e").alias("ev"),
-            *[
-                F.max(F.abs(xs[j])).alias(f"mx{j}")
-                for j in range(d)
-            ],
+            *[F.max(F.abs(xs[j])).alias(f"mx{j}") for j in range(d)],
         ).collect()[0]
         n_subj, n_ev = int(counts["n"]), int(counts["ev"] or 0)
         maxax = [float(counts[f"mx{j}"] or 0.0) for j in range(d)]
         if n_subj == 0 or n_ev == 0:
-            return _null_out(n_subj, n_ev)
+            return n_subj, n_ev, None, None
 
         def _pico(e):
             return F.round(e * F.lit(1e12)).cast("decimal(38,0)")
 
-        from metadata_etl_framework_spark.ops.glm import (
-            GLM_DRIVER_MAX_ROWS,
-        )
-
         arrs = None
         tbl = driver_table(base, GLM_DRIVER_MAX_ROWS, size=n_subj)
         if tbl is not None:
-            # base stays persisted (see cox_ph): per-pass magnitude
-            # bound re-checked, the distributed form as the fallback
+            # base stays persisted: a Newton pass whose magnitudes
+            # outgrow the int64 bound falls back to the distributed
+            # form below, bit-identically
             import numpy as np
 
             if strata_col is not None:
@@ -1732,22 +1434,16 @@ def cox_ph_multi(
         def _pass(betas: "list[float]"):
             import math
 
-            from metadata_etl_framework_spark.ops.exact_agg import (
-                exact_pico_sums,
-            )
-
-            bx_cap0 = sum(
-                abs(betas[j]) * maxax[j] for j in range(d)
-            )
+            bx_cap = sum(abs(betas[j]) * maxax[j] for j in range(d))
             if arrs is not None and _cox_np_safe(
-                n_subj, max(maxax) if maxax else 0.0, bx_cap0
+                n_subj, max(maxax), bx_cap
             ):
                 try:
-                    return _cox_pass_np(
-                        arrs[0], arrs[1], arrs[2], arrs[3], betas
-                    )
+                    return _cox_pass_np(*arrs, betas)
                 except ValueError:
-                    # see cox_ph: fall through to the DECIMAL pass
+                    # a partial outgrew the exact-int domain despite
+                    # the a-priori bound — the DECIMAL(28,10) pass
+                    # below has ~1e18 capacity and is the reference
                     pass
             bx = F.lit(betas[0]) * xs[0]
             for j in range(1, d):
@@ -1755,59 +1451,43 @@ def cox_ph_multi(
             w = F.exp(
                 F.greatest(F.least(bx, F.lit(30.0)), F.lit(-30.0))
             )
-            # per-row pico bound across every stream (see cox_ph):
-            # under it the two-level exact sum is bit-identical to
-            # the DECIMAL groupBy and ~3× cheaper per pass
-            bx_cap = sum(
-                abs(betas[j]) * maxax[j] for j in range(d)
-            )
+            # per-row pico bound across every stream of this pass:
+            # |x_j·x_k·w|·1e12 ≤ max(1,|x|max)²·e^clamp(Σ|β_j|·|x_j|max)
+            # ·1e12. Under it, the two-level exact sum (ops/exact_agg.py)
+            # is BIT-IDENTICAL to the DECIMAL groupBy and ~3× cheaper per
+            # pass (long partials, one per (duration, partition)); above
+            # it the DECIMAL form stands — no long partial can hold
+            # e^30-scale picos.
             per_row = (
                 math.exp(min(30.0, bx_cap))
                 * max(1.0, max(maxax)) ** 2
                 * 1e12
             )
+            terms = {"_s0": w}
+            for j in range(d):
+                terms[f"_s1_{j}"] = xs[j] * w
+                terms[f"_dx{j}"] = xs[j] * F.col("_e")
+            for j in range(d):
+                for k in range(j, d):
+                    terms[f"_s2_{j}{k}"] = xs[j] * xs[k] * w
             if per_row * max(n_subj, 1) < float(1 << 62):
-                terms = {"_s0": w}
-                for j in range(d):
-                    terms[f"_s1_{j}"] = xs[j] * w
-                    terms[f"_dx{j}"] = xs[j] * F.col("_e")
-                for j in range(d):
-                    for k in range(j, d):
-                        terms[f"_s2_{j}{k}"] = xs[j] * xs[k] * w
                 grid = exact_pico_sums(
                     base,
                     terms,
-                    group_cols=["_g", "_t"],
+                    group_cols=[*gkeys, "_t"],
                     long_terms={"_d": F.col("_e")},
                     sub_buckets=1,
                 )
             else:
-                aggs = [
-                    F.sum(_pico(w)).alias("_s0"),
+                grid = base.groupBy(*gkeys, "_t").agg(
                     F.sum("_e").alias("_d"),
-                ]
-                for j in range(d):
-                    aggs.append(
-                        F.sum(_pico(xs[j] * w)).alias(f"_s1_{j}")
-                    )
-                    aggs.append(
-                        F.sum(_pico(xs[j] * F.col("_e"))).alias(
-                            f"_dx{j}"
-                        )
-                    )
-                for j in range(d):
-                    for k in range(j, d):
-                        aggs.append(
-                            F.sum(_pico(xs[j] * xs[k] * w)).alias(
-                                f"_s2_{j}{k}"
-                            )
-                        )
-                grid = base.groupBy("_g", "_t").agg(*aggs)
+                    *[F.sum(_pico(t)).alias(k) for k, t in terms.items()],
+                )
             # risk set = same-stratum durations >= t: DESC suffix sums
             # over the distinct-(stratum, duration) grid
             # (calendar-bounded per stratum)
             wd = (
-                Window.partitionBy("_g")
+                Window.partitionBy(*gkeys)
                 .orderBy(F.col("_t").desc())
                 .rowsBetween(Window.unboundedPreceding, 0)
             )
@@ -1824,9 +1504,10 @@ def cox_ph_multi(
             cum = cum.where(F.col("_d") > 0)
             s0 = F.col("_S0").cast("double")
 
-            # _S0 == 0 is reachable (all weights clamp/round to 0
-            # pico); pinned ANSI raises on bare division, so null-flow
-            # the affected grid rows (F.sum skips them) as pre-ANSI did
+            # _S0 == 0 is reachable (every risk-set weight clamps to
+            # exp(-30) ≈ 9e-14 < half a pico); pinned ANSI raises on a
+            # bare divide, so null-flow those grid rows (F.sum skips
+            # them)
             def _ratio(num):
                 return F.when(s0 != 0, num.cast("double") / s0)
 
@@ -1865,75 +1546,228 @@ def cox_ph_multi(
             return u, imat
 
         betas = [0.0] * d
-        ok = True
         for _ in range(int(iterations)):
-            u, imat = _pass(betas)
-            try:
-                delta = _solve(imat, u)
-            except ValueError:
-                ok = False
-                break
-            betas = [round(betas[j] + delta[j], 12) for j in range(d)]
-        if not ok:
-            return _null_out(n_subj, n_ev)
+            betas = step(betas, *_pass(betas))
+            if betas is None:
+                return n_subj, n_ev, None, None
         # reported inference at the CONVERGED betas
-        _, imat = _pass(betas)
-        inv_jj: "list[float] | None"
-        if d == 1:
-            inv_jj = [1.0 / imat[0][0]] if imat[0][0] > 0 else None
-        elif d == 2:
-            det = imat[0][0] * imat[1][1] - imat[0][1] * imat[0][1]
-            inv_jj = (
-                [imat[1][1] / det, imat[0][0] / det]
-                if det > 0
-                else None
-            )
-        else:
-            try:
-                inv_jj = [
-                    _solve(imat, [1.0 if r == j else 0.0 for r in range(d)])[j]
-                    for j in range(d)
-                ]
-            except ValueError:
-                inv_jj = None
-        if inv_jj is None or any(not v > 0 for v in inv_jj):
-            return _null_out(n_subj, n_ev)
-        one = spark.createDataFrame(
-            [
-                (j, covariate_cols[j], betas[j], inv_jj[j], n_subj, n_ev)
-                for j in range(d)
-            ],
-            "ord int, term string, beta double, inv double, "
-            "n_subjects long, n_events long",
-        )
-        se = F.sqrt(F.col("inv"))
-        z = F.col("beta") / se
-        p = F.round(
-            F.least(
-                F.lit(1.0),
-                F.greatest(
-                    F.lit(0.0), F.lit(2.0) * normal_sf_col(F.abs(z))
-                ),
-            ),
-            6,
-        )
-        return (
-            one.select(
-                "ord",
-                "term",
-                "beta",
-                F.round(F.exp(F.col("beta")), 6).alias("hazard_ratio"),
-                F.round(se, 6).alias("se"),
-                F.round(z, 6).alias("z"),
-                p.alias("p_value"),
-                "n_subjects",
-                "n_events",
-            )
-            .orderBy("ord")
-            .drop("ord")
-        )
+        return n_subj, n_ev, betas, _pass(betas)[1]
     finally:
         base.unpersist()
+
+
+def cox_ph(
+    df: DataFrame,
+    duration_col: str,
+    event_col: str,
+    covariate_col: str,
+    iterations: int = 3,
+) -> DataFrame:
+    """Cox proportional-hazards regression, single covariate, Breslow
+    tie handling — the regression member of the survival family
+    (:func:`kaplan_meier` / :func:`nelson_aalen` describe,
+    :func:`logrank_test` compares two groups; Cox QUANTIFIES a
+    continuous covariate's effect on the hazard: HR = e^β per unit).
+
+    The d = 1 case of :func:`cox_ph_multi`: the same Newton passes on
+    the Breslow partial likelihood from β = 0 (pico-int risk-set
+    sums, DESC suffix sums over the distinct-duration grid, 10-dp
+    DECIMAL score U and information I), with β ← round(β + U/I, 12)
+    on the driver. Iteration stops with a null fit once I ≤ 0. A
+    final pass at the converged β yields the reported information:
+    se = 1/√I, z = β·√I, and the A&S normal tail for the p-value.
+
+    Input is SUBJECT-level: one row per subject with its duration
+    (integer-days convention), event flag (1 = event, 0 = censored),
+    and covariate (pre-scale to O(1) magnitude — the pico grid).
+
+    Output: 1 row — (n_subjects, n_events, beta 12 dp,
+    hazard_ratio 6 dp, se 6 dp, z 6 dp, p_value 6 dp); null
+    beta/inference when the covariate carries no information (I ≤ 0).
+    """
+    from metadata_etl_framework_spark.ops.stats import normal_sf_col
+
+    def _step(betas, u, imat):
+        i = imat[0][0]
+        if not i > 0:
+            return None
+        return [round(betas[0] + u[0] / i, 12)]
+
+    n_subj, n_ev, betas, imat = _cox_fit(
+        df, duration_col, event_col, [covariate_col], iterations, None,
+        _step,
+    )
+    spark = df.sparkSession
+    if betas is None or not imat[0][0] > 0:
+        return spark.createDataFrame(
+            [(n_subj, n_ev, None, None, None, None, None)],
+            "n_subjects long, n_events long, beta double, "
+            "hazard_ratio double, se double, z double, "
+            "p_value double",
+        )
+    one = spark.createDataFrame(
+        [(n_subj, n_ev, betas[0], float(imat[0][0]))],
+        "n_subjects long, n_events long, beta double, info double",
+    )
+    z = F.col("beta") * F.sqrt(F.col("info"))
+    p = F.round(
+        F.least(
+            F.lit(1.0),
+            F.greatest(
+                F.lit(0.0), F.lit(2.0) * normal_sf_col(F.abs(z))
+            ),
+        ),
+        6,
+    )
+    return one.select(
+        "n_subjects",
+        "n_events",
+        "beta",
+        F.round(F.exp(F.col("beta")), 6).alias("hazard_ratio"),
+        F.round(F.lit(1.0) / F.sqrt(F.col("info")), 6).alias("se"),
+        F.round(z, 6).alias("z"),
+        p.alias("p_value"),
+    )
+
+
+def cox_ph_multi(
+    df: DataFrame,
+    duration_col: str,
+    event_col: str,
+    covariate_cols: "list[str]",
+    iterations: int = 3,
+    max_covariates: int = 4,
+    strata_col: "str | None" = None,
+) -> DataFrame:
+    """Multi-covariate Cox proportional hazards (Breslow ties) on the
+    logistic-CV Hessian-grid machinery; :func:`cox_ph` is its
+    single-covariate case and runs on the same passes. Per Newton
+    iteration ONE subject scan groups by duration collecting pico-int
+    sums of e^{βᵀx} (βᵀx clamped ±30 — the logit guard), x_j·e^{βᵀx}
+    (d streams) and x_j·x_k·e^{βᵀx} (d(d+1)/2 streams) plus event
+    counts/covariate-event sums; DESC suffix sums over the
+    distinct-duration grid form the risk-set statistics S₀/S₁ⱼ/S₂ⱼₖ;
+    the score vector Uⱼ = Σ_d [Σx_j,events − d·S₁ⱼ/S₀] and information
+    matrix Iⱼₖ = Σ_d d·[S₂ⱼₖ/S₀ − (S₁ⱼ/S₀)(S₁ₖ/S₀)] accumulate as
+    10-dp DECIMAL terms, and the d×d Newton step solves on the driver
+    (d = 2 uses the exact closed-form adjugate the SQL oracle mirrors —
+    the ops/glm.py::_solve convention; d > 2 uses deterministic
+    Gaussian elimination, registered rows-only). β updates round to
+    12 dp so an unrolled-CTE oracle replays the training bit-exactly.
+    Every step mirrors the IRLS/logrank oracle conventions
+    bit-for-bit.
+
+    A final pass at the converged β yields the reported information
+    matrix; per-term inference inverts it (closed form at d = 2):
+    se_j = √(I⁻¹)ⱼⱼ, z_j = β_j/se_j, two-sided A&S normal tail.
+
+    ``strata_col`` switches to STRATIFIED Cox — the standard control
+    for a confounder that violates proportional hazards (site, cohort,
+    device class): the partial likelihood factorizes per stratum, so
+    each stratum keeps its own baseline hazard and risk sets while β
+    stays shared. Mechanically the change is exactly two keys: the
+    duration grid groups by (stratum, t) and the DESC suffix-sum
+    window partitions by stratum — score/information still sum over
+    ALL strata's event durations, so the Newton step, the solve, and
+    the oracle convention are unchanged. Scale shape is unchanged too
+    (the grid grows to strata × durations, still calendar-bounded per
+    stratum).
+
+    Output: one row per covariate, input order — (term, beta 12 dp,
+    hazard_ratio 6 dp, se 6 dp, z 6 dp, p_value 6 dp, n_subjects,
+    n_events); null beta/inference when the information matrix is
+    singular or not positive definite.
+    """
+    from metadata_etl_framework_spark.ops.glm import _solve
+    from metadata_etl_framework_spark.ops.stats import normal_sf_col
+
+    d = len(covariate_cols)
+    if not 1 <= d <= max_covariates:
+        raise ValueError(
+            f"cox_ph_multi: {d} covariates outside [1, {max_covariates}]"
+        )
+
+    def _step(betas, u, imat):
+        try:
+            delta = _solve(imat, u)
+        except ValueError:
+            return None
+        return [round(betas[j] + delta[j], 12) for j in range(d)]
+
+    n_subj, n_ev, betas, imat = _cox_fit(
+        df, duration_col, event_col, covariate_cols, iterations,
+        strata_col, _step,
+    )
+    spark = df.sparkSession
+
+    def _null_out() -> DataFrame:
+        return spark.createDataFrame(
+            [
+                (j, covariate_cols[j], None, None, None, None, None,
+                 n_subj, n_ev)
+                for j in range(d)
+            ],
+            "ord int, term string, beta double, hazard_ratio double, "
+            "se double, z double, p_value double, n_subjects long, "
+            "n_events long",
+        ).orderBy("ord").drop("ord")
+
+    if betas is None:
+        return _null_out()
+    inv_jj: "list[float] | None"
+    if d == 1:
+        inv_jj = [1.0 / imat[0][0]] if imat[0][0] > 0 else None
+    elif d == 2:
+        det = imat[0][0] * imat[1][1] - imat[0][1] * imat[0][1]
+        inv_jj = (
+            [imat[1][1] / det, imat[0][0] / det]
+            if det > 0
+            else None
+        )
+    else:
+        try:
+            inv_jj = [
+                _solve(imat, [1.0 if r == j else 0.0 for r in range(d)])[j]
+                for j in range(d)
+            ]
+        except ValueError:
+            inv_jj = None
+    if inv_jj is None or any(not v > 0 for v in inv_jj):
+        return _null_out()
+    one = spark.createDataFrame(
+        [
+            (j, covariate_cols[j], betas[j], inv_jj[j], n_subj, n_ev)
+            for j in range(d)
+        ],
+        "ord int, term string, beta double, inv double, "
+        "n_subjects long, n_events long",
+    )
+    se = F.sqrt(F.col("inv"))
+    z = F.col("beta") / se
+    p = F.round(
+        F.least(
+            F.lit(1.0),
+            F.greatest(
+                F.lit(0.0), F.lit(2.0) * normal_sf_col(F.abs(z))
+            ),
+        ),
+        6,
+    )
+    return (
+        one.select(
+            "ord",
+            "term",
+            "beta",
+            F.round(F.exp(F.col("beta")), 6).alias("hazard_ratio"),
+            F.round(se, 6).alias("se"),
+            F.round(z, 6).alias("z"),
+            p.alias("p_value"),
+            "n_subjects",
+            "n_events",
+        )
+        .orderBy("ord")
+        .drop("ord")
+    )
 
 
 def rmst(

@@ -287,6 +287,7 @@ class OrchestratorManager:
         rules = config.get("dq_rules", [])
         carrier = _observing_target(config["targets"]) if rules else None
         metrics = None
+        col_edges = None  # one plan walk, recorded under every target
         for tc in config["targets"]:
             t0 = time.monotonic()
             params = dict(tc["parameters"])
@@ -328,9 +329,14 @@ class OrchestratorManager:
             # Catalyst plan (the reference hand-records these per step;
             # Spark's resolved plan already knows them exactly)
             try:
-                self.lineage.record_plan_column_lineage(
-                    run_id, result, tc["target_name"]
-                )
+                if col_edges is None:
+                    col_edges = self.lineage.record_plan_column_lineage(
+                        run_id, result, tc["target_name"]
+                    )
+                else:
+                    self.lineage.record_column_edges(
+                        run_id, tc["target_name"], col_edges
+                    )
             except Exception:  # noqa: BLE001 - lineage is best-effort
                 logger.warning(
                     "plan-derived column lineage failed for %s",

@@ -240,12 +240,23 @@ class LineageTracker:
         hand-recording (data_lineage_tracker.py:295-397). Returns the
         derived mapping."""
         edges = plan_column_edges(df)
+        self.record_column_edges(run_id, target_table, edges)
+        return edges
+
+    def record_column_edges(
+        self,
+        run_id: int | None,
+        target_table: str,
+        edges: dict[str, list[tuple[str, str]]],
+    ) -> None:
+        """Record one derivation per output column of ``target_table``
+        from an already-derived :func:`plan_column_edges` mapping (a
+        load writing one result to several targets derives it once)."""
         for col, sources in edges.items():
             if sources:
                 self.add_column_derivation(
                     run_id, target_table, col, sources, expression=None
                 )
-        return edges
 
     def column_lineage(self, table: str, column: str) -> dict[str, Any]:
         """Full upstream derivation chain of one column (transitive)."""

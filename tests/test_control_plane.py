@@ -96,6 +96,36 @@ def test_orchestrator_end_to_end(spark, store, tmp_path):
     assert "lineitem.l_quantity" in sum_lin["upstream_columns"]
 
 
+def test_load_derives_plan_lineage_once_for_all_targets(
+    spark, store, tmp_path, monkeypatch
+):
+    """Two targets share one plan walk, and both record the same
+    column edges."""
+    from metadata_etl_framework_spark.utils import lineage as lineage_mod
+
+    calls = []
+    real = lineage_mod.plan_column_edges
+
+    def spy(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(lineage_mod, "plan_column_edges", spy)
+    pid = _register_q1_pipeline(store, str(tmp_path / "out"))
+    store.register_target(pid, "copy", "parquet", {"path": str(tmp_path / "copy")})
+    result = OrchestratorManager(spark, store).execute_pipeline(pid)
+
+    assert result["status"] == "SUCCESS"
+    assert len(calls) == 1
+    lt = LineageTracker(store)
+    ups = {
+        t: lt.column_lineage(t, "l_quantity_sum")["upstream_columns"]
+        for t in ("out", "copy")
+    }
+    assert "lineitem.l_quantity" in ups["out"]
+    assert ups["copy"] == ups["out"]
+
+
 def test_orchestrator_failure_path(spark, store):
     pid = store.register_pipeline("broken")
     store.register_source(pid, "nope", "parquet", {"path": "/nonexistent.parquet"})

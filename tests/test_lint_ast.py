@@ -354,3 +354,70 @@ def test_kernel_lint_catches_the_zipped_slice_shingles():
     assert _higher_order_calls(pasted, "<pasted>", {"shingles"}) == [
         ("shingles", 5), ("shingles", 8)
     ]
+
+
+# A scalar parameter (ridge, reg) joins the exact pico-int sums through
+# ops/driver_exact.py::pico_int: its shortest decimal digits
+# (repr/str of the float) scaled by 10¹² and rounded to an integer. A
+# `.scaleb(12)` on a Decimal built from a float's digits anywhere else
+# under ops/ is a hand-written copy of it. Rescaling a DECIMAL value the
+# engine already returned (stats.py's moment sums: Decimal(row[...]))
+# converts no float, so the rule leaves it alone.
+PICO_INT = ("driver_exact.py", "pico_int")
+
+
+def _float_pico_scalings(source: str, filename: str) -> list[tuple[str, int]]:
+    found = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "scaleb"
+                and len(child.args) == 1
+                and isinstance(child.args[0], ast.Constant)
+                and child.args[0].value == 12
+            ):
+                recv = child.func.value
+                arg = (
+                    recv.args[0]
+                    if isinstance(recv, ast.Call)
+                    and getattr(recv.func, "id", None) == "Decimal"
+                    and recv.args
+                    else None
+                )
+                if (
+                    isinstance(arg, ast.Call)
+                    and getattr(arg.func, "id", None) in ("repr", "str", "float")
+                ):
+                    found.append((fn, child.lineno))
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else fn)
+
+    visit(ast.parse(source, filename=filename), None)
+    return found
+
+
+def test_float_scalars_reach_the_pico_grid_through_pico_int():
+    violations = []
+    for path in sorted((PKG / "ops").glob("*.py")):
+        for fn, line in _float_pico_scalings(path.read_text(), str(path)):
+            if (path.name, fn) != PICO_INT:
+                violations.append(f"ops/{path.name}:{line} {fn}")
+    assert not violations, (
+        "float scaled onto the pico grid outside "
+        "ops/driver_exact.py::pico_int:\n  " + "\n  ".join(violations)
+    )
+
+
+def test_pico_int_lint_catches_a_pasted_copy():
+    pasted = (
+        "def train(ridge, row):\n"
+        "    a = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())\n"
+        "    b = Decimal(str(ridge)).scaleb(12)\n"
+        "    c = int(Decimal(row['_sxx']).scaleb(12))\n"
+        "    d = Decimal(repr(ridge)).scaleb(-12)\n"
+        "    return a, b, c, d\n"
+    )
+    assert _float_pico_scalings(pasted, "<pasted>") == [("train", 2), ("train", 3)]

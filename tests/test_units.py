@@ -2627,10 +2627,11 @@ def test_pmi_embeddings_shape_and_determinism(spark):
     assert pmi_embeddings(only_neg).count() == 0
 
 
-def test_cox_ph_multi_matches_single_and_replica(spark):
+def test_cox_ph_multi_matches_single_and_replica(spark, monkeypatch):
     """d=1 cox_ph_multi reproduces cox_ph's beta exactly (same grids,
-    same 12-dp Newton updates), and d=2 betas match an independent
-    pure-Python replica of the Breslow partial-likelihood Newton."""
+    same 12-dp Newton updates) on both arms of the driver gate, and
+    d=2 betas match an independent pure-Python replica of the Breslow
+    partial-likelihood Newton."""
     from metadata_etl_framework_spark.ops.retention import (
         cox_ph,
         cox_ph_multi,
@@ -2646,13 +2647,16 @@ def test_cox_ph_multi_matches_single_and_replica(spark):
     df = spark.createDataFrame(
         rows, "t long, e int, x1 double, x2 double"
     )
-    single = cox_ph(df, "t", "e", "x1", iterations=3).collect()[0]
-    multi1 = cox_ph_multi(
-        df, "t", "e", ["x1"], iterations=3
-    ).collect()[0]
-    assert multi1["beta"] == single["beta"]
-    assert multi1["n_subjects"] == single["n_subjects"] == 10
-    assert multi1["n_events"] == single["n_events"] == 7
+    for gate in ("1", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", gate)
+        single = cox_ph(df, "t", "e", "x1", iterations=3).collect()[0]
+        multi1 = cox_ph_multi(
+            df, "t", "e", ["x1"], iterations=3
+        ).collect()[0]
+        assert multi1["beta"] == single["beta"], gate
+        assert multi1["n_subjects"] == single["n_subjects"] == 10
+        assert multi1["n_events"] == single["n_events"] == 7
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE")
 
     got = {
         r["term"]: r
