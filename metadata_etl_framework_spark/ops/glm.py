@@ -822,34 +822,38 @@ def poisson_train(
     # rollup (small × few streams), where the two-level split measured
     # SLOWER than the single-level decimal sum (r14 driver bench:
     # 1.89 → 2.62 s); row_hint lets exact_pico_sums pick per call
-    n_rows = base.count()
-    if n_rows == 0:
-        base.unpersist()
-        raise ValueError("poisson_train: no usable rows")
-    ridge_i = pico_int(ridge)
-    init = exact_pico_sums(
-        base, {"_sy": F.col("_y")}, row_hint=n_rows
-    ).collect()[0]
-    sy = int(init["_sy"])
-    import math
+    try:
+        n_rows = base.count()
+        if n_rows == 0:
+            raise ValueError("poisson_train: no usable rows")
+        ridge_i = pico_int(ridge)
+        init = exact_pico_sums(
+            base, {"_sy": F.col("_y")}, row_hint=n_rows
+        ).collect()[0]
+        sy = int(init["_sy"])
+        import math
 
-    b0 = round(math.log(float(sy) / 1e12 / n_rows), 12) if sy > 0 else 0.0
-    betas = [b0] + [0.0] * (d - 1)
-    for _ in range(int(iterations)):
-        z = F.lit(betas[0])
-        for j in range(1, d):
-            z = z + F.lit(betas[j]) * xs[j]
-        mu = F.exp(
-            F.greatest(F.least(z, F.lit(_ZCLAMP)), F.lit(-_ZCLAMP))
+        b0 = (
+            round(math.log(float(sy) / 1e12 / n_rows), 12) if sy > 0 else 0.0
         )
-        # exact pico sums with row_hint: small per-entity frames keep
-        # the single-level DECIMAL sum, large ones get the two-level
-        # split — bit-identical either way (ops/exact_agg.py)
-        terms = {f"_g{j}": (F.col("_y") - mu) * xs[j] for j in range(d)}
-        terms.update(_hess_terms(xs, mu))
-        row = exact_pico_sums(base, terms, row_hint=n_rows).collect()[0]
-        betas = _normal_solve(row, d, ridge_i, base=betas)
-    base.unpersist()
+        betas = [b0] + [0.0] * (d - 1)
+        for _ in range(int(iterations)):
+            z = F.lit(betas[0])
+            for j in range(1, d):
+                z = z + F.lit(betas[j]) * xs[j]
+            mu = F.exp(
+                F.greatest(F.least(z, F.lit(_ZCLAMP)), F.lit(-_ZCLAMP))
+            )
+            # exact pico sums with row_hint: small per-entity frames keep
+            # the single-level DECIMAL sum, large ones get the two-level
+            # split — bit-identical either way (ops/exact_agg.py)
+            terms = {f"_g{j}": (F.col("_y") - mu) * xs[j] for j in range(d)}
+            terms.update(_hess_terms(xs, mu))
+            row = exact_pico_sums(base, terms, row_hint=n_rows).collect()[0]
+            betas = _normal_solve(row, d, ridge_i, base=betas)
+    finally:
+        # released on every exit, a singular Hessian's raise included
+        base.unpersist()
     return _glm_coef_frame(
         df.sparkSession, feature_cols, betas, n_rows, iterations
     )
