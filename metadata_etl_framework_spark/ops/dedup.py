@@ -17,13 +17,15 @@ from __future__ import annotations
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
 from metadata_etl_framework_spark.ops.driver_exact import driver_table
-from metadata_etl_framework_spark.ops.materialize import Supersteps, release
+from metadata_etl_framework_spark.ops.materialize import (
+    Supersteps, checkpoint_leaf, release,
+)
 from metadata_etl_framework_spark.ops.text import fingerprint, word_ngrams
 
 
@@ -185,29 +187,25 @@ def _pair_jaccard(pairs: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
 
 def _shingle_base(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int,
-    persisted: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """(id, shingle-array) projection, repartitioned to cluster
     parallelism BEFORE the CPU-bound n-gram transform (a small-file
     corpus arrives as 1-2 scan partitions).
 
-    With ``persisted`` the projection is persisted and appended there, so
-    every consumer — size gate, fan-out probe, inverted-index join sides,
-    signature computation — pays it once; the caller owns the release
-    and unpersists it once the last consumer has run. Without it nothing
-    is cached: a single consumer needs no cache (both sides of a
-    self-join reuse one exchange)."""
-    from pyspark.storagelevel import StorageLevel
-
+    Lazy: a caller with several consumers materializes it once (the
+    near-dup gate cuts it with :func:`_shingle_totals` as the fill), and
+    a single consumer needs no cache (both sides of a self-join reuse
+    one exchange)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
-    base = df.select(F.col(id_col), shingles(text_col, shingle_n).alias("_sh"))
-    if persisted is None:
-        return base
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.append(base)
-    return base
+    return df.select(F.col(id_col), shingles(text_col, shingle_n).alias("_sh"))
+
+
+def _shingle_totals(base: DataFrame) -> DataFrame:
+    """The near-dup gate's probe: one row (n rows, T shingles) of a
+    shingle base, whose job fills the base's checkpoint leaf."""
+    return base.agg(F.count(F.lit(1)), F.sum(F.size("_sh")))
 
 
 def exact_jaccard_pairs(
@@ -233,7 +231,7 @@ def exact_jaccard_pairs(
     # expensive projection): both self-join sides re-explode them through
     # one reused exchange, and sizes come from F.size — no groupBy
     # shuffle. Callers that already paid the projection
-    # (minhash_near_duplicates' cached base) pass it in via _shingled.
+    # (the near-dup gate's checkpointed base) pass it in via _shingled.
     base = _shingle_base(df, id_col, text_col, shingle_n) \
         if _shingled is None else _shingled
     # each exploded row carries its doc's shingle count, and the counts
@@ -311,8 +309,11 @@ def containment_pairs(
         )
     # the shingle arrays feed the document-frequency count AND both
     # join sides
-    handles: list[DataFrame] = []
-    base = _shingle_base(df, id_col, text_col, shingle_n, handles)
+    from pyspark.storagelevel import StorageLevel
+
+    base = _shingle_base(df, id_col, text_col, shingle_n).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     try:
         sh = base.select(
             F.col(id_col),
@@ -376,8 +377,7 @@ def containment_pairs(
         )
         out = out.localCheckpoint(eager=True)
     finally:
-        for h in handles:
-            h.unpersist()
+        base.unpersist()
     return out
 
 
@@ -397,26 +397,31 @@ def minhash_near_duplicates(
       qualifying pair (no recall parameter), so the result is
       deterministic and oracle-checkable exactly. ``num_hashes`` /
       ``num_bands`` are IGNORED in this regime (no signatures exist).
-      The fan-out probe is one cheap aggregation over the exploded
-      shingles; it routes a small-but-boilerplate corpus (one shingle in
-      nearly every doc → Σdf² ~ n²) to LSH instead of letting the
-      self-join blow up — row count alone does not bound the join.
+      A shingle's df is at most n and the dfs sum to T (the corpus's
+      shingle count), so Σdf² ≤ n·T: when that bound fits the cap the
+      route is settled without a probe. Otherwise the fan-out probe, one
+      aggregation over the exploded shingles, routes a
+      small-but-boilerplate corpus (one shingle in nearly every doc →
+      Σdf² ~ n²) to LSH instead of letting the self-join blow up — row
+      count alone does not bound the join.
     * Otherwise: MinHash signatures → LSH banded candidates → exact
       Jaccard verify. Recall follows the banding S-curve
       ``1 - (1 - J^r)^b``; at web scale the inverted index's Σdf² blowup
       on high-frequency shingles makes this the only tractable path.
 
-    The shingle projection is built once and persisted; its own count()
-    is the size gate (so the corpus is scanned once), and the probe, the
-    exact join or the LSH arm all read it. The LSH arm also persists the
-    signatures, which both self-join sides read.
+    The shingle projection is built once, as a checkpoint leaf filled by
+    the one aggregate that gives n and T (so the corpus is scanned
+    once), and the probe, the exact join or the LSH arm all read it. The
+    LSH arm also cuts the signatures, which both self-join sides read.
 
-    Cache lifetime: the returned pairs are LAZY over those caches. With
+    Leaf lifetime: the returned pairs are LAZY over those leaves. With
     ``persisted`` the caller owns them — they are appended there, and the
-    caller unpersists them once it has consumed the pairs (the dedup step
-    releases them as soon as ``connected_components`` has returned).
-    Without it the pairs are materialized here (``localCheckpoint``) and
-    every cache is released before returning.
+    caller frees them with ``ops/materialize.release`` once it has
+    consumed the pairs (the dedup step frees them as soon as
+    ``connected_components`` has returned; ``Dataset.unpersist()``
+    cannot reach a checkpoint leaf's blocks). Without it the pairs are
+    materialized here (``localCheckpoint``) and every other leaf is
+    released before returning.
 
     Returns (id_a, id_b, jaccard). Mirrors the exact-below-gate /
     probabilistic-above design of similarity.embedding_near_dup_pairs."""
@@ -429,36 +434,46 @@ def minhash_near_duplicates(
         return _near_dup_pairs(*args, handles).localCheckpoint(eager=True)
     finally:
         for h in handles:
-            h.unpersist()
+            release(h)
 
 
 def _near_dup_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float,
     num_hashes: int, num_bands: int, shingle_n: int, exact_max_rows: int,
     exact_max_fanout: int, persisted: "list[DataFrame]",
+    _cut: "tuple[DataFrame, Row] | None" = None,
 ) -> DataFrame:
-    """The lazy pairs of :func:`minhash_near_duplicates`; every frame it
-    persists is appended to ``persisted``."""
-    from pyspark.storagelevel import StorageLevel
-
-    base = _shingle_base(df, id_col, text_col, shingle_n, persisted)
-    if threshold > 0 and 0 < base.count() <= exact_max_rows:
-        fanout = (
-            base.select(F.explode("_sh").alias("_s"))
-            .groupBy("_s")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .agg(F.sum(F.col("_c") * F.col("_c")).alias("_f"))
-            .first()["_f"]
+    """The lazy pairs of :func:`minhash_near_duplicates`; every leaf it
+    cuts is appended to ``persisted``. Callers that already cut the
+    shingle base pass ``checkpoint_leaf(_shingle_base(...),
+    _shingle_totals)`` via ``_cut``, and keep and free its leaf."""
+    if _cut is None:
+        _cut = checkpoint_leaf(
+            _shingle_base(df, id_col, text_col, shingle_n), _shingle_totals
         )
-        if fanout is None or fanout <= exact_max_fanout:
+        persisted.append(_cut[0])
+    base, (n, total) = _cut
+    if threshold > 0 and 0 < n <= exact_max_rows:
+        # Σdf² ≤ n·T settles the route unless the bound exceeds the cap
+        fits = n * total <= exact_max_fanout
+        if not fits:
+            fanout = (
+                base.select(F.explode("_sh").alias("_s"))
+                .groupBy("_s")
+                .agg(F.count(F.lit(1)).alias("_c"))
+                .agg(F.sum(F.col("_c") * F.col("_c")).alias("_f"))
+                .first()["_f"]
+            )
+            fits = fanout is None or fanout <= exact_max_fanout
+        if fits:
             return exact_jaccard_pairs(
                 df, id_col, text_col, threshold, shingle_n, _shingled=base
             )
     # signatures are id + K longs — tiny relative to the text they derive
     # from — and both sides of the banding self-join read them
-    sigs = minhash_signatures(
+    sigs, _ = checkpoint_leaf(minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_n, _shingled=base,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     persisted.append(sigs)
     pairs = lsh_candidate_pairs(sigs, id_col, num_bands, num_hashes // num_bands)
     return _pair_jaccard(
@@ -733,10 +748,11 @@ def near_duplicate_clusters(
     over :func:`minhash_near_duplicates`' pairs, as (node, cluster_id,
     is_canonical).
 
-    The caches the lazy pairs read are released as soon as the components
+    The leaves the lazy pairs read are released as soon as the components
     exist: both arms of ``connected_components`` return a frame that no
     longer reads the pairs (the twin's Arrow table, or the distributed
-    arm's materialized labels), so nothing stays cached between calls."""
+    arm's materialized labels), so nothing stays persisted between
+    calls."""
     handles: list[DataFrame] = []
     pairs = minhash_near_duplicates(
         df, id_col, text_col, threshold=threshold, num_hashes=num_hashes,
@@ -746,7 +762,7 @@ def near_duplicate_clusters(
         return connected_components(pairs)
     finally:
         for h in handles:
-            h.unpersist()
+            release(h)
 
 
 def simhash_near_duplicates(
@@ -858,7 +874,7 @@ def incremental_dedup(
         F.col("_seen_fp").isNotNull().alias("is_exact_dup"),
     )
 
-    # repartitioned+persisted shingle projections: the CPU-bound n-gram
+    # repartitioned shingle projections: the CPU-bound n-gram
     # transform must not serialize onto a small file's single scan split
     base_new = _shingle_base(new_docs, id_col, text_col, shingle_n)
     base_seen = _shingle_base(seen_docs, id_col, text_col, shingle_n)
@@ -1157,23 +1173,26 @@ def lsh_quality_report(
             f"lsh_quality_report is an evaluation harness; corpus has "
             f"{n} rows > max_rows={max_rows}"
         )
-    handles: list[DataFrame] = []
+    # both arms read one cut of the shingle base
+    cut = checkpoint_leaf(
+        _shingle_base(df, id_col, text_col, shingle_n), _shingle_totals
+    )
+    handles = [cut[0]]
     try:
-        base = _shingle_base(df, id_col, text_col, shingle_n, handles)
         truth = exact_jaccard_pairs(
-            df, id_col, text_col, threshold, shingle_n, _shingled=base
+            df, id_col, text_col, threshold, shingle_n, _shingled=cut[0]
         ).select(F.col("id_a"), F.col("id_b"))
-        lsh = minhash_near_duplicates(
+        # exact_max_rows=0 routes to the LSH arm
+        lsh = _near_dup_pairs(
             df, id_col, text_col, threshold, num_hashes, num_bands,
-            shingle_n, exact_max_rows=0, exact_max_fanout=0,
-            persisted=handles,
+            shingle_n, 0, 0, handles, cut,
         ).select(F.col("id_a"), F.col("id_b"))
         t = truth.count()
         v = lsh.count()
         hit = truth.join(lsh, ["id_a", "id_b"], "inner").count()
     finally:
         for h in handles:
-            h.unpersist()
+            release(h)
     spark = df.sparkSession
     return spark.createDataFrame(
         [(

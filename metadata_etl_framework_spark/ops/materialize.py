@@ -15,7 +15,9 @@ shuffle partitions → 1 on a 1k-row groupBy). The eager form fills the
 leaf in one more job; the lazy form is filled by the first job that
 reads it, so a round that needs a probe (a count, a move count, an L1
 delta) runs the probe AS the fill — one job pair per round, not a fill
-plus a probe.
+plus a probe. :func:`checkpoint_leaf` is the same cut for a one-off leaf
+outside a loop: its probe (a row count by default, or any one-row
+aggregate the caller needs) is the job that fills it.
 
 A checkpoint leaf's blocks are RDD-level (not cache-manager entries):
 ``Dataset.unpersist()`` cannot reach them, and the ContextCleaner frees
@@ -104,10 +106,10 @@ class Supersteps:
         i = self._i
         if i is not None and (i + 1) % self.every and i != self.rounds - 1:
             return df, None
-        leaf = df.localCheckpoint(eager=probe is None)
+        leaf, row = checkpoint_leaf(df, probe)
         for rdd in _leaf_rdds(leaf):
             self._cut[rdd.id()] = rdd
-        return leaf, None if probe is None else probe(leaf).first()
+        return leaf, row
 
     def retain(self, *frames: DataFrame) -> None:
         """Release every leaf this loop cut that none of ``frames``
@@ -117,14 +119,14 @@ class Supersteps:
             self._cut.pop(rid).unpersist(False)
 
 
-def checkpoint_leaf(df: DataFrame) -> "tuple[DataFrame, int]":
-    """Eagerly materialize ``df`` and cut its lineage: persist, count
-    (the SQL path, AQE on), then checkpoint the cached blocks. Returns
-    ``(leaf, rows)``, the row count coming from the persist job. The
-    leaf's blocks outlive ``Dataset.unpersist()``; free them with
-    :func:`release` once nothing reads the leaf."""
-    cached = df.persist()
-    rows = cached.count()
-    out = cached.localCheckpoint()
-    cached.unpersist()
-    return out, rows
+def checkpoint_leaf(
+    df: DataFrame,
+    probe: "Callable[[DataFrame], DataFrame] | None" = count_rows,
+) -> "tuple[DataFrame, Row | None]":
+    """``(leaf, row)``: ``df`` cut as a checkpoint leaf and the first row
+    of ``probe(leaf)``, a one-row aggregate whose job fills the lazy leaf
+    (the row count by default). Without a probe the cut is eager and
+    ``row`` is None. The leaf's blocks outlive ``Dataset.unpersist()``;
+    free them with :func:`release` once nothing reads the leaf."""
+    leaf = df.localCheckpoint(eager=probe is None)
+    return leaf, None if probe is None else probe(leaf).first()

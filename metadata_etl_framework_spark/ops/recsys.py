@@ -649,8 +649,8 @@ def als_factorize(
     cut is ONE eager localCheckpoint over the tagged union of the two
     final factor frames — an interleaved min-of-3 A/B at sf0.1
     measured 3.96 s for this shape vs 5.4–6.4 s for the former
-    per-half ``checkpoint_leaf`` (five persist+count+checkpoint cycles:
-    the checkpoint copies dominated on O(keys) frames). The returned
+    per-half cuts (five persist+count+checkpoint cycles: the checkpoint
+    copies dominated on O(keys) frames). The returned
     frames are narrow reads of that one leaf, so no cache entries
     outlive the call. λ > 0 keeps every 2×2 system non-singular (cold
     keys included).
@@ -712,7 +712,7 @@ def als_factorize(
     # checkpoint): the next half's broadcast build populates the cache
     # on demand, so each half still executes exactly once, without the
     # per-half count job and checkpoint copy of the former
-    # checkpoint_leaf form (measured: see docstring). Handles are
+    # persist+count+checkpoint form (measured: see docstring). Handles are
     # released after the single end-of-op leaf below.
     _handles: list[DataFrame] = []
 

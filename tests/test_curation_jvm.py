@@ -1,9 +1,10 @@
 """Near-dup curation runs in the JVM, once per document: linear shingles,
 in-place quality scoring, an Arrow-built connected-components twin
-output, and near-dup caches that are released. These tests pin the
+output, and near-dup leaves that are released. These tests pin the
 shapes (shingle strings against a pure-Python reference, quality_filter
-rows, the plan and job count of the curation chain) and that nothing
-stays cached after a near-dup run."""
+rows, the plan and job count of the curation chain), the near-dup gate's
+route on both sides of its n·T bound, and that nothing stays cached or
+persisted after a near-dup run."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 from metadata_etl_framework_spark.catalog.store import MetadataStore
 from metadata_etl_framework_spark.operators import TransformEngine
 from metadata_etl_framework_spark.ops import dedup
+from metadata_etl_framework_spark.ops.materialize import checkpoint_leaf, release
 from metadata_etl_framework_spark.ops.text import quality_score
 from metadata_etl_framework_spark.orchestrator.manager import OrchestratorManager
 
@@ -31,6 +33,22 @@ CURATION = [
 
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _persisted(spark) -> set[int]:
+    """Ids of the persisted RDDs: checkpoint leaves included, which the
+    cache manager does not see."""
+    ids = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    return {int(i) for i in ids}
+
+
+def _leaf_rdd_ids(df) -> set[int]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        int(leaves.apply(i).rdd().id())
+        for i in range(leaves.length())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
 
 
 def _ref_shingles(text, n):
@@ -178,10 +196,12 @@ def test_near_dedup_chain_plan_and_job_count(spark, docs_src):
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
     assert "LocalRelation" in plan
-    # eager jobs: shingle base count 4 (scan + repartition, cache build,
-    # count's two stages), fan-out probe 3, pair self-join 2 (its two
-    # shuffle stages, run by the local checkpoint), twin probe 1
-    assert n_steps == 10
+    # eager jobs: the shingle base's cut 3 (scan + repartition, the
+    # leaf's fill with the (rows, shingles) aggregate's partial stage,
+    # its final stage), pair self-join 2 (its two shuffle stages, run by
+    # the local checkpoint), twin probe 1; n·T is under the fan-out cap,
+    # so the fan-out probe does not run
+    assert n_steps == 6
     # the lazy chain scans the source once: one job collects the
     # LocalRelation for the broadcast, and the anti-join plus the
     # in-place quality filter ride the scan's one job
@@ -208,6 +228,7 @@ def test_curation_pipeline_leaves_nothing_cached(spark, docs_src, tmp_path):
 def test_lsh_regime_releases_its_caches(spark):
     spark.catalog.clearCache()
     df = _docs(spark)
+    before = _persisted(spark)
     handles = []
     pairs = dedup.minhash_near_duplicates(
         df, threshold=0.8, num_hashes=32, num_bands=8, exact_max_rows=0,
@@ -216,13 +237,124 @@ def test_lsh_regime_releases_its_caches(spark):
     assert len(handles) == 2  # shingle base + signatures
     found = {(r.id_a, r.id_b) for r in pairs.collect()}
     for h in handles:
-        h.unpersist()
+        release(h)
     assert _cache_empty(spark)
+    assert _persisted(spark) == before
     # without a handles list the pairs come back materialized and
-    # nothing stays cached
+    # nothing but the returned leaf stays persisted
     owned = dedup.minhash_near_duplicates(
         df, threshold=0.8, num_hashes=32, num_bands=8, exact_max_rows=0,
     )
     assert _cache_empty(spark)
+    assert _persisted(spark) - before == _leaf_rdd_ids(owned)
+    assert len(_leaf_rdd_ids(owned)) == 1
     assert {(r.id_a, r.id_b) for r in owned.collect()} == found
     assert len(found) >= 4
+    release(owned)
+
+
+def test_exact_regime_leaves_only_the_returned_leaf(spark):
+    df = _docs(spark)
+    before = _persisted(spark)
+    pairs = dedup.minhash_near_duplicates(df, threshold=0.8)
+    assert _persisted(spark) - before == _leaf_rdd_ids(pairs)
+    assert len(_leaf_rdd_ids(pairs)) == 1
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {
+        (o + 1, 41 + o) for o in range(4)
+    }
+    release(pairs)
+
+
+@pytest.mark.parametrize("gate", ["1", "0"])
+def test_near_duplicate_clusters_releases_its_leaves(spark, monkeypatch, gate):
+    # gate on: the twin's Arrow-built result reads no Spark block, so the
+    # call leaves nothing persisted; gate off: only the distributed
+    # components' own result leaf stays
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", gate)
+    spark.catalog.clearCache()
+    df = _docs(spark)
+    before = _persisted(spark)
+    out = dedup.near_duplicate_clusters(df, threshold=0.8)
+    rows = out.collect()
+    left = _persisted(spark) - before
+    if gate == "1":
+        assert left == set()
+    else:
+        assert left == _leaf_rdd_ids(out)
+    assert _cache_empty(spark)
+    assert {r.node: r.cluster_id for r in rows if not r.is_canonical} == {
+        41 + o: o + 1 for o in range(4)
+    }
+    release(out)
+
+
+def _boilerplate_docs(spark):
+    """30 documents sharing a 12-word header (10 shingles in every doc)
+    plus a random 20-word body; docs 1-3 have verbatim copies 31-33."""
+    rng = random.Random(11)
+    header = "please read the terms of use before you copy any part of this"
+    bodies = [
+        " ".join(rng.choice([f"v{i}" for i in range(300)]) for _ in range(20))
+        for _ in range(30)
+    ]
+    bodies += bodies[:3]
+    rows = [(i + 1, f"{header} {b}") for i, b in enumerate(bodies)]
+    return spark.createDataFrame(rows, "doc_id long, text string"), rows
+
+
+def test_near_dup_route_is_settled_by_the_bound_or_the_probe(spark, monkeypatch):
+    """Σdf² ≤ n·T: a cap of at least n·T routes exact with no probe job;
+    under it the fan-out probe runs and Σdf² alone decides."""
+    df, rows = _boilerplate_docs(spark)
+    sh = [_ref_shingles(t, 3) for _, t in rows]
+    n, total = len(sh), sum(len(s) for s in sh)
+    dfs: dict = {}
+    for s in sh:
+        for g in s:
+            dfs[g] = dfs.get(g, 0) + 1
+    fanout = sum(c * c for c in dfs.values())
+    assert fanout < n * total
+
+    sigs: list = []
+    real = dedup.minhash_signatures
+
+    def spy(*a, **k):
+        sigs.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(dedup, "minhash_signatures", spy)
+
+    def gate(cap):
+        """(jobs of the gate, whether it took the LSH arm, pairs)."""
+        sigs.clear()
+        handles: list = []
+        pairs, jobs = _jobs_in_group(
+            spark, f"near_dup_gate_{cap}",
+            lambda: dedup.minhash_near_duplicates(
+                df, threshold=0.8, exact_max_fanout=cap, persisted=handles,
+            ),
+        )
+        found = {(r.id_a, r.id_b) for r in pairs.collect()}
+        for h in handles:
+            release(h)
+        return jobs, bool(sigs), found
+
+    def cut():
+        leaf, row = checkpoint_leaf(
+            dedup._shingle_base(df, "doc_id", "text", 3), dedup._shingle_totals
+        )
+        release(leaf)
+        return tuple(row)
+
+    totals, cut_jobs = _jobs_in_group(spark, "near_dup_cut", cut)
+    assert totals == (n, total)
+    want = {(o + 1, 31 + o) for o in range(3)}
+
+    jobs, lsh, found = gate(n * total)  # the bound settles it
+    assert (jobs, lsh, found) == (cut_jobs, False, want)
+    jobs, lsh, found = gate(n * total - 1)  # Σdf² ≤ cap < n·T: probe, exact
+    assert jobs > cut_jobs and not lsh and found == want
+    jobs, lsh, _ = gate(fanout)  # the probe's own boundary
+    assert jobs > cut_jobs and not lsh
+    jobs, lsh, found = gate(fanout - 1)  # boilerplate over the cap: LSH
+    assert jobs > cut_jobs and lsh and found <= want

@@ -2879,14 +2879,20 @@ def test_cox_driver_pass_gate_parity(spark, monkeypatch):
 
 
 def test_checkpoint_leaf_returns_leaf_and_rows(spark):
-    """The one materializer hands back the count its persist job
-    computed, and a frame whose logical plan is a single LogicalRDD
-    (lineage cut)."""
-    from metadata_etl_framework_spark.ops.materialize import checkpoint_leaf
+    """The one-off cut hands back the row its probe computed (the row
+    count by default) as the job that filled the leaf, and a frame whose
+    logical plan is a single LogicalRDD (lineage cut)."""
+    from metadata_etl_framework_spark.ops.materialize import (
+        checkpoint_leaf,
+        release,
+    )
 
     df = spark.range(37).where(F.col("id") % 3 != 0)
-    leaf, rows = checkpoint_leaf(df)
-    assert rows == df.count() == 24
+    leaf, row = checkpoint_leaf(df)
+    assert row[0] == df.count() == 24
+    summed, row = checkpoint_leaf(df, lambda d: d.agg(F.sum("id")))
+    assert row[0] == sum(i for i in range(37) if i % 3)
+    release(summed)
     plan = leaf._jdf.queryExecution().logical()
     assert plan.nodeName() == "LogicalRDD"
     assert plan.children().isEmpty()
